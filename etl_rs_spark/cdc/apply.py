@@ -49,11 +49,7 @@ from etl_rs_spark.cdc.normalize import (
 )
 from etl_rs_spark.config import CdcConfig
 from etl_rs_spark.errors import ConfigError
-from etl_rs_spark.operators.dedup import (
-    STATS_COLS,
-    lww_dedup,
-    lww_dedup_narrow,
-)
+from etl_rs_spark.operators.dedup import STATS_COLS, lww_dedup
 from etl_rs_spark.sinks.lake import LakeTable, bucket_expr
 
 
@@ -188,8 +184,7 @@ def apply_batch(
             F.max(F.col("lsn")).alias("raw_hi"),
         )
 
-    dedup = lww_dedup_narrow if cfg.dedup_strategy == "narrow" else lww_dedup
-    raw_winners = dedup(
+    raw_winners = lww_dedup(
         clean,
         keys=list(cfg.merge_keys),
         order_cols=list(cfg.order_cols),

@@ -59,8 +59,8 @@ def write_lineage(
     """Append one parquet file of per-bucket audit rows (driver-side).
 
     per_bucket: bucket -> {"n": events, "min_lsn": .., "max_lsn": ..}
-    (prescan_batch stats); rows_per_bucket: bucket -> state rows after
-    the commit (merge footer counts)."""
+    (the apply path's stats action); rows_per_bucket: bucket -> state
+    rows after the commit (merge footer counts)."""
     os.makedirs(lineage_dir, exist_ok=True)
     now = int(time.time() * 1_000_000)
     buckets = sorted(per_bucket)

@@ -3,17 +3,13 @@
 The wire envelope carries evolving payload fields inside one JSON string
 (generator.ENVELOPE_SCHEMA). Normalization:
 
-1. **Batch prescan** (one job per microbatch): a single groupBy(bucket)
-   aggregation over the raw envelope computes, at once, (a) the union of
-   JSON object keys via the built-in ``json_object_keys`` +
-   ``collect_set`` of the (sorted) per-row key shapes — the reference's
-   union-of-keys schema inference (/root/reference/src/load/parquet.rs:125-138)
-   done on a microbatch, which is what lets a brand-new column (e.g.
-   ``lang``) surface mid-stream — and (b) per-bucket event counts and
-   the LSN range, which feed the merge's partition pruning, the
-   skew-aware write plan, and the lineage record. One cheap scan (no
-   from_json, no dedup shuffle; result is at most num_buckets rows)
-   replaces what round 1 did in two separate full-recompute passes.
+1. **Key discovery**: the union of JSON object keys via the built-in
+   ``json_object_keys`` — the reference's union-of-keys schema
+   inference (/root/reference/src/load/parquet.rs:125-138) done on a
+   microbatch, which is what lets a brand-new column (e.g. ``lang``)
+   surface mid-stream. The CDC apply path folds it into its one stats
+   action over the deduped winners (cdc/apply.py);
+   ``discover_payload_keys`` is the standalone job.
 2. **JSON parse** with ``from_json`` against the discovered struct —
    JVM-side, codegen'd; the payload never reaches Python as a row.
 3. **Dirty-value coercion** of spec'd metadata columns via vectorized
@@ -25,8 +21,6 @@ The wire envelope carries evolving payload fields inside one JSON string
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,77 +31,12 @@ from etl_rs_spark.functions.coercion import PANDAS_COERCERS
 DEFAULT_COERCE_SPEC = {"meta_active": "boolean", "meta_edited": "date"}
 
 
-@dataclass
-class BatchStats:
-    """Everything the apply path needs to know about a microbatch that
-    is knowable without parsing payload values — produced by ONE job."""
-
-    keys: list[str] = field(default_factory=list)  # payload key union
-    n_events: int = 0
-    hi_lsn: int | None = None
-    lo_lsn: int | None = None
-    #: bucket -> {"n": events, "min_lsn": .., "max_lsn": ..}
-    per_bucket: dict[int, dict[str, int]] = field(default_factory=dict)
-
-    @property
-    def bucket_counts(self) -> dict[int, int]:
-        return {b: s["n"] for b, s in self.per_bucket.items()}
-
-
-def prescan_batch(
-    envelope: DataFrame,
-    bucket: F.Column,
-    payload_col: str = "payload",
-    lsn_col: str = "lsn",
-    with_keys: bool = True,
-) -> BatchStats:
-    """One aggregation job over the raw envelope: per-bucket counts +
-    LSN range, plus (with_keys) the payload-key union. collect_set
-    gathers distinct *sorted key-array shapes* (a handful per schema
-    epoch), not per-row data, so the result stays O(buckets x shapes)
-    regardless of batch size.
-
-    with_keys=False keeps the prescan to the typed envelope columns
-    (conv_id for the bucket, lsn) — the scan never touches the payload
-    bytes' JSON structure, which makes it ~5x cheaper; the CDC apply
-    path uses this and discovers keys post-dedup on the winners."""
-    aggs = [
-        F.count("*").alias("n"),
-        F.min(lsn_col).alias("lo"),
-        F.max(lsn_col).alias("hi"),
-    ]
-    if with_keys:
-        shapes = F.array_sort(
-            F.json_object_keys(F.coalesce(F.col(payload_col), F.lit("{}")))
-        )
-        aggs.append(
-            F.array_distinct(F.flatten(F.collect_set(shapes))).alias("keys")
-        )
-    rows = envelope.groupBy(bucket.alias("__b")).agg(*aggs).collect()
-    stats = BatchStats()
-    keyset: set[str] = set()
-    for r in rows:
-        stats.per_bucket[r["__b"]] = {
-            "n": r["n"],
-            "min_lsn": r["lo"],
-            "max_lsn": r["hi"],
-        }
-        stats.n_events += r["n"]
-        if with_keys:
-            keyset.update(r["keys"])
-        if r["hi"] is not None:
-            stats.hi_lsn = r["hi"] if stats.hi_lsn is None else max(stats.hi_lsn, r["hi"])
-        if r["lo"] is not None:
-            stats.lo_lsn = r["lo"] if stats.lo_lsn is None else min(stats.lo_lsn, r["lo"])
-    stats.keys = sorted(keyset)
-    return stats
-
-
 def discover_payload_keys(envelope: DataFrame, payload_col: str = "payload") -> list[str]:
     """Distinct JSON keys across the batch (sorted for determinism).
 
     Standalone variant kept for direct callers; the apply hot path gets
-    the keys from prescan_batch's combined aggregation instead."""
+    the keys from its stats action over the deduped winners instead
+    (cdc/apply.py)."""
     rows = (
         envelope.select(
             F.explode(
@@ -132,8 +61,8 @@ def normalize_events(
 
     Payload columns are whatever keys this batch actually carries —
     additive schema evolution flows through here to the MERGE, which
-    widens the table. Pass ``keys`` (e.g. from prescan_batch) to skip
-    the discovery job.
+    widens the table. Pass ``keys`` (e.g. the apply path's key union
+    from its stats action) to skip the discovery job.
     """
     spec = DEFAULT_COERCE_SPEC if coerce_spec is None else coerce_spec
     if keys is None:

@@ -82,11 +82,6 @@ class CdcConfig:
     num_buckets: int = 16
     salt_buckets: int = 0  # 0 = single-stage LWW; >0 = two-stage salted
     schema_evolution: bool = True
-    #: "wide" (default) = single max(struct(all cols)) aggregation — one
-    #: shuffle, fastest measured on transcript-sized payloads; "narrow" =
-    #: slim winner-id agg + join-back, for very wide payloads (blobs)
-    #: where shuffling the payload dominates
-    dedup_strategy: str = "wide"
     #: compact the table every N applied microbatches (None = never);
     #: consumed by StreamDriver when built from an EngineConfig. On a
     #: merge-on-read table this also folds outstanding delta files.

@@ -31,7 +31,6 @@ from pyspark.sql.functions import pandas_udf
 
 _SALT = "__salt"
 _ROW = "__row"
-_ORD = "__ord"
 
 
 #: per-key event-stats columns emitted by ``with_stats=True`` dedup:
@@ -121,111 +120,6 @@ def lww_dedup(
             *[F.col(c) for c in STATS_COLS],
         )
     return _pick_winner(df, keys, order_cols, with_stats)
-
-
-#: radix for the packed order scalar: the fine order column (lsn) gets
-#: the low 2^64 band, the coarse one (ts, as epoch micros) the rest.
-_ORD_RADIX = 1 << 64
-
-
-def order_scalar(df: DataFrame, order_cols: Sequence[str]) -> F.Column | None:
-    """Pack a two-column (coarse, fine) order tuple into ONE fixed-width
-    ``decimal(38,0)`` whose numeric order equals the tuple's
-    lexicographic order — or None when the column types don't allow it.
-
-    Why: ``max(struct(...))`` has a struct-typed aggregation buffer,
-    which Spark's HashAggregateExec cannot hold in its fixed-width
-    UnsafeRow hash map, so EVERY struct-max LWW plan silently degrades
-    to SortAggregate — a full per-task sort (and spill) of the input.
-    ``max(decimal(38,0))`` keeps the whole reduction in whole-stage
-    codegen'd hash aggregation with a true map-side combine: per input
-    task, one 16-byte buffer per key, O(keys) rows into the shuffle.
-    That difference is the engine's N->4N scaling story on the dedup
-    path, measured ~3x wall on a 16M-event microbatch.
-
-    Encoding: coarse*2^64 + fine, computed in decimal(38,0) so nothing
-    overflows (|epoch_micros| < 9.3e15 for years 1700-2255, x 1.8e19 =
-    1.7e35 << 1e38). Requires fine to be a NON-NEGATIVE integer < 2^64
-    (true for LSNs/sequence numbers by construction); coarse may be any
-    timestamp/integer, including negative (pre-epoch)."""
-    if len(order_cols) != 2:
-        return None
-    types = {f.name: f.dataType for f in df.schema.fields}
-
-    def as_long(name: str) -> F.Column | None:
-        dt = types.get(name)
-        if isinstance(dt, T.TimestampType):
-            return F.unix_micros(F.col(name))
-        if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-            return F.col(name).cast("long")
-        return None
-
-    coarse, fine = as_long(order_cols[0]), as_long(order_cols[1])
-    if coarse is None or fine is None:
-        return None
-    return (
-        # 2^64 exceeds a java long, so the radix literal goes in as a
-        # string and is cast to decimal (constant-folded by Catalyst)
-        coarse.cast(T.DecimalType(38, 0))
-        * F.lit(str(_ORD_RADIX)).cast(T.DecimalType(20, 0))
-        + fine.cast(T.DecimalType(38, 0))
-    )
-
-
-def lww_dedup_narrow(
-    df: DataFrame,
-    keys: Sequence[str] = ("conv_id", "turn_idx"),
-    order_cols: Sequence[str] = ("ts", "lsn"),
-    salt_buckets: int = 0,
-    with_stats: bool = False,
-) -> DataFrame:
-    """LWW dedup that never shuffles the wide payload — and, when the
-    order tuple packs into a scalar (see ``order_scalar``), never sorts
-    anything but the final (tiny) winner set.
-
-    Identical result to ``lww_dedup``, different physical plan:
-    (1) aggregate only the slim (keys, __ord) projection to find each
-    key's winning order scalar — a hash aggregation with map-side
-    combine, so each input task forwards O(keys-it-saw) 16-byte rows
-    into the shuffle and the parquet scan is column-pruned to the
-    key/order columns; (2) join the winner identities back against a
-    second scan of the input — AQE broadcast-joins the (small) winner
-    side at runtime, so the payload bytes stream map-side only and are
-    never serialized into an exchange; (3) a final deterministic
-    ``_pick_winner`` over the joined rows (tiny: one row per key plus
-    exact-replay duplicates) collapses events that share the full
-    (key, order) tuple, keeping at-least-once replay idempotent.
-
-    Why it matters at scale: the classic max(struct(everything)) agg is
-    a SortAggregate (struct buffers can't hash-aggregate) that sorts and
-    spills ~50x more bytes than the decision needs. Sort + spill I/O is
-    the shared resource that caps N->4N scaling; this variant trades one
-    extra (cheap, pruned, page-cached) scan for removing almost all of
-    it. If the winner set is too large to broadcast, AQE falls back to a
-    shuffle join of winner-identity tuples — still narrow."""
-    keys = list(keys)
-    order_cols = list(order_cols)
-    ord_expr = order_scalar(df, order_cols)
-    if ord_expr is None:
-        # un-packable order types: slim struct-max (SortAggregate, but
-        # over ~30-byte rows) + join back — still avoids the wide sort.
-        slim = df.select(*keys, *order_cols)
-        winner_ids = lww_dedup(slim, keys, order_cols, salt_buckets, with_stats)
-        joined = df.join(winner_ids, on=keys + order_cols, how="inner")
-        # stats columns (if any) ride the join as payload; every joined
-        # row of a key carries identical stats, so the final collapse
-        # must NOT re-count (with_stats stays False here).
-        return _pick_winner(joined, keys, order_cols)
-    fine = order_cols[-1]
-    slim = df.select(*keys, ord_expr.alias(_ORD), F.col(fine))
-    aggs = [F.max(_ORD).alias(_ORD)]
-    if with_stats:
-        aggs += _stats_aggs(fine)
-    winner_ids = slim.groupBy(*keys).agg(*aggs)
-    joined = df.withColumn(_ORD, ord_expr).join(
-        winner_ids, on=keys + [_ORD], how="inner"
-    ).drop(_ORD)
-    return _pick_winner(joined, keys, order_cols)
 
 
 def shingles(col, k: int = 5) -> F.Column:

@@ -55,6 +55,7 @@ same as one Structured Streaming query owning an Iceberg table.
 from __future__ import annotations
 
 import fcntl
+import functools
 import glob
 import json
 import os
@@ -571,11 +572,11 @@ def _lww_resolve(
     df: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
-    types: dict[str, T.DataType],
 ) -> DataFrame:
     """One row per key: the LWW winner over rows carrying the hidden
-    (_lsn, _deleted) columns — shared by the copy-on-write merge fold
-    and by read-side resolution of merge-on-read delta files.
+    (_lsn, _deleted) columns — shared by the copy-on-write merge fold,
+    compaction, and read-side resolution of merge-on-read delta files
+    (read, lookup, changes). Output columns keep the input's order.
 
     ``max(struct((ts, _lsn) first, payload after))`` is a single
     ASSOCIATIVE aggregation, so Spark runs a partial map-side combine
@@ -583,8 +584,27 @@ def _lww_resolve(
     row per upstream partition before any data moves. Winning
     tombstones keep their (ts, _lsn) — a late, older event for a
     deleted key must still lose — but their user payload is nulled,
-    the same representation the copy-on-write path persists."""
-    payload = [c for c in df.columns if c not in key_cols]
+    the same representation the copy-on-write path persists.
+
+    The aggregate and the final projection come from ``_resolve_plan``
+    (built once per input schema), so a call costs one ``groupBy`` and
+    one ``select`` on the PySpark side."""
+    agg, out = _resolve_plan(df.schema, tuple(key_cols), ts_col)
+    return df.groupBy(*key_cols).agg(agg).select(*out)
+
+
+@functools.lru_cache(maxsize=64)
+def _resolve_plan(
+    schema: T.StructType, key_cols: tuple[str, ...], ts_col: str
+) -> tuple[F.Column, tuple[F.Column, ...]]:
+    """``_lww_resolve``'s aggregate column and final projection for one
+    (input schema, key columns, order column). Tombstone nulling lives
+    in the projection — one ``when`` per payload column — rather than
+    in a re-analysed ``withColumn`` per column. The columns are
+    unresolved expressions, so they are safe to reuse across calls and
+    threads; the cache key carries the whole schema, so a widened or
+    promoted schema builds a fresh plan."""
+    dtypes = {f.name: f.dataType for f in schema.fields}
     # order tiers: (ts, _lsn, _sub) — see SUB_COL. Legacy NULL _sub
     # coalesces to 0 so ties resolve deterministically (stream rows,
     # _sub=1, beat stored row-DML rows, _sub=0, at equal (ts, lsn)).
@@ -596,12 +616,14 @@ def _lww_resolve(
         F.col(ts_col),
         F.coalesce(F.col(LSN_COL), F.lit(-1).cast("long")).alias(LSN_COL),
     ]
-    if SUB_COL in df.columns:
+    if SUB_COL in dtypes:
         order_exprs.append(
             F.coalesce(F.col(SUB_COL), F.lit(0)).alias(SUB_COL)
         )
     rest = [
-        c for c in payload if c not in (ts_col, LSN_COL, SUB_COL)
+        c
+        for c in schema.names
+        if c not in key_cols and c not in (ts_col, LSN_COL, SUB_COL)
     ]
     # max(struct) needs every ridden column ORDERABLE; MapType is not.
     # A map payload column (e.g. a [cdc.coerce_spec] map<...> target)
@@ -611,7 +633,6 @@ def _lww_resolve(
     # (a map inside a struct) have no such lossless detour — raise
     # precisely rather than let Spark's INVALID_ORDERING_TYPE kill the
     # microbatch with an opaque plan error.
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
     map_cols = {c for c in rest if isinstance(dtypes[c], T.MapType)}
     for c in map_cols:
         # the sorted-entries detour itself needs an ORDERABLE entry
@@ -643,35 +664,19 @@ def _lww_resolve(
             return F.array_sort(F.map_entries(F.col(c))).alias(c)
         return F.col(c)
 
-    merged = df.groupBy(*key_cols).agg(
-        F.max(
-            F.struct(*order_exprs, *[_ride(c) for c in rest])
-        ).alias("__w")
-    )
-
     def _unride(c: str) -> F.Column:
+        won = F.col(f"__w.{c}")
         if c in map_cols:
-            return F.map_from_entries(F.col(f"__w.{c}")).alias(c)
-        return F.col(f"__w.{c}").alias(c)
+            won = F.map_from_entries(won)
+        if c in rest and c != DELETED_COL:
+            won = F.when(
+                F.col(f"__w.{DELETED_COL}"), F.lit(None).cast(dtypes[c])
+            ).otherwise(won)
+        return won.alias(c)
 
-    final = merged.select(
-        *key_cols,
-        *[
-            _unride(c)
-            for c in payload
-            if c != SUB_COL or SUB_COL in df.columns
-        ],
-    )
-    for c in payload:
-        if c in (ts_col, LSN_COL, DELETED_COL, SUB_COL):
-            continue
-        final = final.withColumn(
-            c,
-            F.when(F.col(DELETED_COL), F.lit(None).cast(types[c])).otherwise(
-                F.col(c)
-            ),
-        )
-    return final
+    agg = F.max(F.struct(*order_exprs, *[_ride(c) for c in rest])).alias("__w")
+    out = tuple(F.col(c) if c in key_cols else _unride(c) for c in schema.names)
+    return agg, out
 
 
 @dataclass
@@ -1709,7 +1714,11 @@ class LakeTable:
             T.StructType([T.StructField(f.name, f.dataType, True) for f in logical])
         )
         if not fs:
-            return self.spark.createDataFrame([], out_schema)
+            # LIMIT 0 plans as an empty local relation: no Python RDD,
+            # no task, and a union drops it (PropagateEmptyRelation)
+            return self.spark.range(0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in out_schema]
+            ).limit(0)
         by_epoch: dict[int, list[dict[str, Any]]] = {}
         for f in fs:
             by_epoch.setdefault(int(f.get("epoch", 0)), []).append(f)
@@ -1857,6 +1866,35 @@ class LakeTable:
                 df = df.where(tcol <= F.lit(hi).cast(ttype))
         return df
 
+    def _scan_resolved(
+        self,
+        snap: Snapshot,
+        clean: list[dict[str, Any]],
+        dirty: list[dict[str, Any]],
+    ) -> DataFrame:
+        """``clean`` files (resolved one-row-per-key state) scanned as
+        they are, unioned with the per-key LWW resolve of the ``dirty``
+        files (base + delta of merge-on-read buckets).
+
+        Read cost model: the dirty side costs one shuffle (the
+        resolve's aggregation, map-side combined), the clean side a
+        plain scan, and an EMPTY side costs nothing — it is left out of
+        the plan. An all-dirty read is one scan + one aggregation; an
+        empty file list plans as an empty local relation, which runs no
+        task at all."""
+        parts = []
+        if clean or not dirty:
+            parts.append(self._scan_files(snap, clean))
+        if dirty:
+            parts.append(
+                _lww_resolve(
+                    self._scan_files(snap, dirty),
+                    snap.key_cols,
+                    snap.order_cols[0],
+                )
+            )
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+
     def _resolved_scan(
         self,
         snap: Snapshot,
@@ -1870,28 +1908,21 @@ class LakeTable:
         so read amplification is O(max-files), not O(commits). Bucket
         identity is compared under the CURRENT spec (_expand_to_current)
         so a delta file always resolves against base files holding its
-        keys even across a bucket-spec evolution."""
+        keys even across a bucket-spec evolution.
 
-        def _scan(fs: list[dict[str, Any]]) -> DataFrame:
-            return self._scan_files(snap, fs)
-
+        Read cost: dirty buckets cost one shuffle (the resolve's
+        map-side-combined aggregation), clean buckets a plain scan, and
+        an empty side nothing — ``_scan_resolved`` leaves it out of the
+        plan."""
         dirty: set[int] = set()
         for f in files:
             if f.get("kind") == "delta":
                 dirty |= _expand_to_current(f, snap)
-        clean_df = _scan(
-            [f for f in files if not _file_overlaps(f, dirty, snap)]
+        df = self._scan_resolved(
+            snap,
+            [f for f in files if not _file_overlaps(f, dirty, snap)],
+            [f for f in files if _file_overlaps(f, dirty, snap)],
         )
-        df = clean_df
-        if dirty:
-            types = {f.name: f.dataType for f in snap.schema().fields}
-            resolved = _lww_resolve(
-                _scan([f for f in files if _file_overlaps(f, dirty, snap)]),
-                snap.key_cols,
-                snap.order_cols[0],
-                types,
-            )
-            df = clean_df.unionByName(resolved.select(*clean_df.columns))
         if include_meta:
             return df
         # tombstones (soft deletes) are an implementation detail: a delete
@@ -1989,7 +2020,10 @@ class LakeTable:
         Iceberg gets the identical prune from
         ``PARTITIONED BY (bucket(N, conv_id))`` + a conv_id equality
         predicate. Merge-on-read buckets resolve per-key LWW exactly as
-        in ``read()`` (shared scan path).
+        in ``read()`` (shared scan path). Cost: one pruned scan, plus one
+        shuffle only when a surviving bucket carries delta files; an
+        empty side (no clean file, say) is not planned at all, so an
+        all-dirty lookup is one scan + one aggregation.
 
         Inside the surviving buckets, per-file key bounds
         (``min_key``/``max_key``, via ``read(key_values=...)``) skip
@@ -2897,6 +2931,11 @@ class LakeTable:
         _lsn=-1 and never appear). Files from pre-stats manifests (no
         max_lsn key) are conservatively read.
 
+        Cost on merge-on-read: buckets whose delta files advanced past
+        the watermark (dirty) cost one shuffle — the LWW resolve over
+        all their files; clean buckets cost the pruned scan; an empty
+        side is left out of the plan (``_scan_resolved``).
+
         ``with_version``: adds ``_commit_version`` (Delta-CDF parity) —
         the snapshot that applied each row's winning event. Attribution
         reads the TO-snapshot's embedded ``wm_history`` (the full list
@@ -2923,9 +2962,6 @@ class LakeTable:
                 (w for v, w in full_hist if v <= from_version),
                 default=-1,
             )
-        def _scan(fs: list[dict[str, Any]]) -> DataFrame:
-            return self._scan_files(snap, fs)
-
         # merge-on-read: a bucket carrying UNRESOLVED delta files that
         # advanced past the watermark needs a full per-key LWW pass over
         # ALL its files before the watermark filter — a newer delta row
@@ -2981,25 +3017,18 @@ class LakeTable:
                 if not _file_overlaps(f, dirty, snap)
                 and (f.get("max_lsn") is None or f["max_lsn"] > wm)
             ]
-        df = _scan(files)
+        df = self._scan_resolved(
+            snap,
+            files,
+            [
+                f
+                for f in self._candidate_files(snap, buckets=dirty)
+                if _file_overlaps(f, dirty, snap)
+            ]
+            if dirty
+            else [],
+        )
         changed = df.where(F.col(LSN_COL) > wm)
-        if dirty:
-            types = {f.name: f.dataType for f in snap.schema().fields}
-            resolved = _lww_resolve(
-                _scan(
-                    [
-                        f
-                        for f in self._candidate_files(snap, buckets=dirty)
-                        if _file_overlaps(f, dirty, snap)
-                    ]
-                ),
-                snap.key_cols,
-                snap.order_cols[0],
-                types,
-            )
-            changed = changed.unionByName(
-                resolved.where(F.col(LSN_COL) > wm).select(*df.columns)
-            )
         cols = [
             *[
                 c
@@ -3095,7 +3124,9 @@ class LakeTable:
         while cold buckets stay one-file-per-bucket. Without stats, one
         partition per touched bucket. File->bucket purity is preserved
         either way (partitionBy on the bucket), which is what keeps
-        merge-time partition pruning exact.
+        merge-time partition pruning exact. An explicit
+        ``write_partitions`` is a floor: the small-batch shrink rules
+        never plan fewer write tasks than the caller asked for.
 
         Table write properties (``props``, normally the snapshot's):
         ``write.target-file-rows`` caps expected rows per file — a
@@ -3172,7 +3203,8 @@ class LakeTable:
                 wp = min(needed, 4096) if needed < wp else max(
                     wp, min(needed, 4096)
                 )
-                wp = max(wp, 1)
+                # an explicit write_partitions is the caller's floor
+                wp = max(wp, write_partitions or 1)
             range_cols = [F.col(_BUCKET)] + [
                 F.col(c) for c in (sort_cols or []) if c in df.columns
             ]
@@ -3210,7 +3242,7 @@ class LakeTable:
             wp = min(slots, 4096) if slots < wp else max(
                 wp, min(slots, 4096)
             )
-            wp = max(wp, 1)
+            wp = max(wp, write_partitions or 1)
             if any(n > 1 for n in salt_n.values()):
                 salt_map = F.create_map(
                     *[
@@ -4170,8 +4202,8 @@ class LakeTable:
 
         ``batch_stats`` (optional): precomputed per-bucket source stats,
         ``{"bucket_counts": {bucket: n_rows}, "hi_lsn": int}`` — e.g.
-        from cdc.normalize.prescan_batch, whose single job over the raw
-        envelope already knows them. When given, the merge skips its own
+        from the CDC apply path's one stats action over its cached
+        winners (cdc/apply.py). When given, the merge skips its own
         stats aggregation, so the whole apply makes exactly one full
         pass over the batch (the write job). Counts may be upstream
         *event* counts rather than winner counts — they only steer the
@@ -4391,9 +4423,6 @@ class LakeTable:
                 for f in self._candidate_files(snap, buckets=fold_set)
                 if _file_overlaps(f, fold_set, snap)
             ]
-            # scanned under the WIDENED/PROMOTED logical schema, with
-            # per-epoch physical-name translation for pre-rename files
-            cur = self._scan_files(snap, cur_files, schema=schema)
 
             def norm(
                 df: DataFrame, lsn: F.Column, deleted: F.Column, sub: F.Column
@@ -4415,12 +4444,6 @@ class LakeTable:
                     sub.cast("int").alias(SUB_COL),
                 )
 
-            existing = norm(
-                cur,
-                F.col(LSN_COL),
-                F.coalesce(F.col(DELETED_COL), F.lit(False)),
-                F.coalesce(F.col(SUB_COL), F.lit(0)),
-            )
             incoming = norm(
                 src, F.col(lsn_col), F.col(op_col) == "D", F.lit(int(sub_lsn))
             )
@@ -4434,12 +4457,23 @@ class LakeTable:
                 # map-side combine before the shuffle); AQE handles residual
                 # skew. Rewrites the fold buckets' base files; any delta
                 # files those buckets carried are resolved away here.
-                inc_fold = (
+                pool = (
                     incoming if not cold else incoming.where(_bexpr.isin(fold))
                 )
-                final = _lww_resolve(
-                    existing.unionByName(inc_fold), snap.key_cols, ts_col, types
-                )
+                if cur_files:
+                    # stored rows, scanned under the WIDENED/PROMOTED
+                    # logical schema with per-epoch physical-name
+                    # translation for pre-rename files; a fold of
+                    # buckets holding no files (the seed merge) has no
+                    # stored side to plan
+                    existing = norm(
+                        self._scan_files(snap, cur_files, schema=schema),
+                        F.col(LSN_COL),
+                        F.coalesce(F.col(DELETED_COL), F.lit(False)),
+                        F.coalesce(F.col(SUB_COL), F.lit(0)),
+                    )
+                    pool = existing.unionByName(pool)
+                final = _lww_resolve(pool, snap.key_cols, ts_col)
                 # expected write volume per bucket = existing rows (manifest
                 # footer counts) + incoming winners — drives the skew-aware
                 # salt plan
@@ -4470,16 +4504,21 @@ class LakeTable:
                 # representation); resolution happens at read/compaction.
                 delta_rows = (
                     incoming if not fold else incoming.where(_bexpr.isin(cold))
-                )
-                for c in table_cols:
-                    if c in snap.key_cols or c == ts_col:
-                        continue
-                    delta_rows = delta_rows.withColumn(
-                        c,
-                        F.when(
+                ).select(
+                    *[
+                        F.col(c)
+                        if c in snap.key_cols or c == ts_col
+                        else F.when(
                             F.col(DELETED_COL), F.lit(None).cast(types[c])
-                        ).otherwise(F.col(c)),
-                    )
+                        )
+                        .otherwise(F.col(c))
+                        .alias(c)
+                        for c in table_cols
+                    ],
+                    LSN_COL,
+                    DELETED_COL,
+                    SUB_COL,
+                )
                 # one delta file per touched bucket per batch (the chain the
                 # max-files cap counts); volume-driven splitting only when
                 # the table caps file sizes explicitly
@@ -4506,10 +4545,10 @@ class LakeTable:
             stage_ms["write"] = int((time.monotonic() - t_write) * 1000)
             if defer_stats:
                 # reconcile from the written files' footers: affected =
-                # buckets that produced rows, hi_lsn = max footer lsn
-                # (identical to the skipped stats job — SQL max and
-                # parquet stats both ignore nulls; winners are
-                # one-row-per-key so fold output carries the same rows)
+                # buckets that produced rows, hi_lsn = max stored _lsn —
+                # the max over the stored winners, not over the raw
+                # batch the skipped stats job would have aggregated
+                # (SQL max and parquet stats both ignore nulls)
                 if not new_files:
                     return {
                         "version": snap.version,
@@ -4521,11 +4560,24 @@ class LakeTable:
                 fold_set = set(fold)
                 cold = affected if mode == "merge-on-read" else []
                 his = [
-                    f.get("max_lsn")
+                    f["max_lsn"]
                     for f in new_files
                     if f.get("max_lsn") is not None
                 ]
-                hi_lsn = max(his) if his else None
+                # a footer without _lsn stats (a stats-less row group)
+                # must not let the watermark fall below its rows: one
+                # column-pruned max over just those files
+                no_stats = [
+                    f["path"] for f in new_files if f.get("max_lsn") is None
+                ]
+                if no_stats:
+                    his.append(
+                        self.spark.read.schema(f"{LSN_COL} long")
+                        .parquet(*no_stats)
+                        .agg(F.max(LSN_COL))
+                        .first()[0]
+                    )
+                hi_lsn = max((h for h in his if h is not None), default=None)
         finally:
             if src_cached:
                 src.unpersist()

@@ -126,3 +126,31 @@ def test_second_merge_uses_stats_path(spark, tmp_path):
         [i for i in range(50) if i % 7 == 0]
     )
     assert got[got.k == "k1"].v.iloc[0] == 1001
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_deferred_watermark_covers_stats_less_footer(
+    spark, tmp_path, monkeypatch, mode
+):
+    """A written file whose footer carries no _lsn stats (a stats-less
+    row group) must not let the deferred watermark fall below the
+    _lsn values stored in it; otherwise changes() re-emits seed rows."""
+    from etl_rs_spark.sinks import lake
+
+    real = lake._footer_stats
+
+    def stats_less_top(path, *a, **kw):
+        out = real(path, *a, **kw)
+        if out["max_lsn"] == 499:  # the file holding the batch's top lsn
+            out["min_lsn"] = out["max_lsn"] = None
+        return out
+
+    monkeypatch.setattr(lake, "_footer_stats", stats_less_top)
+    t = _mk(spark, tmp_path, f"nostats-{mode[0]}")
+    r = t.merge(_batch(spark), run_id="r", batch_id=0, mode=mode)
+    assert "stats" not in r["stage_ms"]  # the deferred path ran
+    assert any(f.get("max_lsn") is None for f in t.current().files)
+    stored = t.read(include_meta=True).agg(F.max("_lsn")).first()[0]
+    assert stored == 499
+    assert r["watermark_lsn"] == t.current().watermark_lsn == 499
+    assert t.changes(t.current().version).count() == 0

@@ -31,3 +31,39 @@ def assert_state_equal(engine: pd.DataFrame, oracle: pd.DataFrame, cols=None):
     o = normalize_frame(oracle[list(cols)])
     assert len(e) == len(o), f"row count {len(e)} != oracle {len(o)}"
     pdt.assert_frame_equal(e, o, check_dtype=False, check_like=True)
+
+
+def executed_leaf_scans(spark, action) -> list[str]:
+    """Run ``action()`` and return the leaf node names of every SQL
+    execution it ran, read from the final (post-AQE) physical plan
+    graphs in Spark's SQL status store: ``"Scan parquet "``,
+    ``"LocalTableScan"``, ``"Range"``, or ``"Scan ExistingRDD"`` for a
+    DataFrame built from a Python RDD, whose tasks run on Python
+    workers. Works with the UI disabled."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def recent(limit: int = 64) -> list:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        seq = store.executionsList(max(n - limit, 0), limit)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((e.executionId() for e in recent(1)), default=-1)
+    action()
+    leaves = []
+    for e in recent():
+        if e.executionId() <= seen:
+            continue
+        graph = store.planGraph(e.executionId())
+        edges = graph.edges()
+        parents = {edges.apply(i).toId() for i in range(edges.size())}
+        nodes = graph.allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            # WholeStageCodegen clusters group nodes; they are no plan node
+            if node.id() not in parents and (
+                node.getClass().getSimpleName() != "SparkPlanGraphCluster"
+            ):
+                leaves.append(node.name())
+    return leaves
