@@ -128,10 +128,6 @@ def apply_batch(
             "apply_wall_ms": int((time.monotonic() - t0) * 1000),
         }
 
-    import os as _os
-
-    debug = _os.environ.get("ETL_DEBUG_MERGE")
-
     # LWW-dedup the OPAQUE envelope first: winner selection needs only
     # the typed key/order columns, so the JSON payload rides the dedup
     # shuffle as an unparsed string and every payload-parsing step below
@@ -224,8 +220,6 @@ def apply_batch(
         )
         keys = sorted({k for r in stat_rows for k in r["ks"]})
         dedup_keys_ms = int((time.monotonic() - t_k) * 1000)
-        if debug:
-            print(f"[apply] dedup+prescan: {time.monotonic()-t_k:.1f}s")
 
         n_dlq = 0
         if dlq_obs is not None:

@@ -8,9 +8,10 @@ interface an Iceberg-backed implementation can replace verbatim
 (see ``sinks/iceberg.py`` for the jar-gated SQL implementation):
 
 - **snapshot isolation + atomic commits**: every commit writes an
-  immutable ``meta/version-N.json`` manifest (schema + data-file list)
-  and atomically swings ``meta/HEAD`` via os.replace. A crash mid-commit
-  leaves HEAD on the old snapshot; orphaned data files are inert.
+  immutable ``meta/version-N.json`` snapshot (schema + manifest list,
+  one manifest per (spec, bucket) group) and atomically swings
+  ``meta/HEAD`` via os.replace. A crash mid-commit leaves HEAD on the
+  old snapshot; orphaned data files are inert.
 - **two merge modes** (table property ``write.merge.mode``):
   ``copy-on-write`` (default) rewrites touched buckets' state each
   merge; ``merge-on-read`` appends batch winners as per-bucket delta
@@ -61,7 +62,7 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 import dataclasses
 from dataclasses import dataclass, field
 from typing import Any
@@ -475,36 +476,27 @@ def _group_key(f: dict[str, Any], snap: "Snapshot") -> str:
 
 
 def _load_manifest(meta_dir: str, relpath: str) -> list[dict[str, Any]]:
-    """Load one manifest file's entries, stamping each with its source
-    manifest (``_mf``) and that manifest's entry count (``_mfn``) — the
-    provenance _commit's reuse check keys on. Transient keys, never
-    serialized.
+    """Load one manifest file's entries.
 
-    Entries also get an explicit ``spec_n`` from the manifest's own
-    group (every file in a group was written under that spec — the
-    group key encodes it), so hydrated entries never fall back to the
-    snapshot's CURRENT spec. This is what lets set_num_buckets be a
-    pure metadata commit on sharded tables: old manifests need no
-    rewrite because their spec travels with them, Iceberg's
-    spec-id-per-manifest semantics."""
+    Entries get an explicit ``spec_n`` from the manifest's own group
+    (every file in a group was written under that spec — the group key
+    encodes it), so loaded entries never fall back to the snapshot's
+    CURRENT spec. This is what lets set_num_buckets be a pure metadata
+    commit: old manifests need no rewrite because their spec travels
+    with them, Iceberg's spec-id-per-manifest semantics."""
     with open(os.path.join(meta_dir, relpath)) as fh:
         doc = json.load(fh)
-    ents = doc["files"]
-    grp = doc.get("group", "")
-    spec = int(grp.split("-b")[0][1:]) if grp.startswith("s") else None
-    for e in ents:
-        if spec is not None:
-            e.setdefault("spec_n", spec)
-        e["_mf"] = relpath
-        e["_mfn"] = len(ents)
-    return ents
+    spec = int(doc["group"].split("-b")[0][1:])
+    for e in doc["files"]:
+        e.setdefault("spec_n", spec)
+    return doc["files"]
 
 
 def _file_spec(f: dict[str, Any], snap: "Snapshot") -> int:
-    """Bucket-spec (num_buckets) a data file was written under. Files
-    predating spec evolution are stamped at evolution time
-    (set_num_buckets); unstamped files are by construction at the
-    snapshot's current spec."""
+    """Bucket-spec (num_buckets) a data file was written under. Entries
+    loaded from a manifest carry their group's spec (_load_manifest);
+    unstamped entries (freshly written files) are by construction at
+    the snapshot's current spec."""
     return int(f.get("spec_n", snap.num_buckets))
 
 
@@ -545,13 +537,12 @@ def bucket_expr(col: str, num_buckets: int) -> F.Column:
 
 
 def _tips(hs: "Snapshot") -> dict[str, int]:
-    """Branch ref table from the HEAD snapshot. Legacy manifests (no
-    branches dict) read as one main branch at HEAD. The HEAD snapshot
-    is by construction its own branch's tip (_commit always writes
+    """Branch ref table from the HEAD snapshot. The HEAD snapshot is by
+    construction its own branch's tip (_commit always writes
     ``branches[branch] = slot``), so that entry is normalized here —
     which also makes reads robust to a manually-forged manifest whose
     carried dict is stale."""
-    tips = dict(hs.branches) if hs.branches else {"main": hs.version}
+    tips = dict(hs.branches)
     tips[hs.branch] = hs.version
     return tips
 
@@ -687,27 +678,18 @@ class Snapshot:
     order_cols: list[str]
     bucket_col: str
     num_buckets: int
-    #: {path, bucket, rows, min_lsn, max_lsn[, kind]} — the LSN range is
-    #: the per-file stat that lets changes() prune below-watermark
-    #: files; kind is "delta" for merge-on-read delta files (absent =
-    #: base file holding resolved one-row-per-key state).
-    #:
-    #: PERSISTENCE IS SHARDED (Iceberg's manifest-list layout): the
-    #: snapshot JSON does NOT carry this list — it carries
-    #: ``manifest_list`` below, and the entries live in per-
-    #: (spec, bucket) manifest files under meta/manifests/. A commit
-    #: rewrites only the manifests of TOUCHED groups and reuses the
-    #: parent's pointers for the rest, so commit metadata bytes are
-    #: O(touched buckets), not O(table files) — per-file key blooms
-    #: ride in the bucket manifest they describe. In memory the full
-    #: list hydrates lazily on first ``.files`` access (see
-    #: ``__getattr__``); legacy manifests with an inline ``files``
-    #: array keep reading unchanged.
-    files: list[dict[str, Any]] = field(default_factory=list)
-    #: [{path, group, n_files, rows, min_lsn, max_lsn, spec_n, bucket}]
-    #: — one entry per live manifest file (relative to meta/). The
+    #: THE snapshot's file set (Iceberg's manifest list): [{path, group,
+    #: n_files, rows, deltas, min_lsn, max_lsn, spec_n, bucket}] — one
+    #: entry per live manifest file (relative to meta/), one manifest
+    #: per (write spec, bucket) group. Each manifest holds that group's
+    #: data-file entries {path, bucket, rows, min_lsn, max_lsn[, kind]}
+    #: (kind "delta" = merge-on-read delta file; absent = base file
+    #: holding resolved one-row-per-key state). Every data commit is a
+    #: group edit (``LakeTable._commit(edits=...)``): edited groups get
+    #: a fresh manifest, every other group keeps its pointer, so commit
+    #: metadata bytes are O(touched buckets), not O(table files). The
     #: summary stats let readers prune whole manifests (bucket/LSN)
-    #: before loading any per-file entry.
+    #: before loading any per-file entry; ``files`` is the loaded union.
     manifest_list: list = field(default_factory=list)
     applied: dict[str, int] = field(default_factory=dict)  # run_id -> max batch
     watermark_lsn: int = -1
@@ -718,11 +700,11 @@ class Snapshot:
     #: /root/reference/src/extract/delta.rs:104-109; here it resolves).
     committed_at_ms: int = -1
     #: [[version, watermark_lsn]] at every commit that ADVANCED the
-    #: watermark (seeded [[0, -1]] at create). changes(with_version=
-    #: True) attributes rows from the to-snapshot's history alone:
-    #: O(1) driver metadata reads for any window, robust to
-    #: expire_snapshots removing intermediate version files. Empty =
-    #: legacy manifest (fall back to walking surviving version files).
+    #: watermark (seeded [[0, -1]] at create; _commit appends the slot
+    #: it takes). changes(with_version=True) attributes rows from the
+    #: to-snapshot's history alone: O(1) driver metadata reads for any
+    #: window, robust to expire_snapshots removing intermediate
+    #: version files.
     #:
     #: SEGMENTED: only the recent TAIL rides in the snapshot; once the
     #: tail exceeds _WM_SEGMENT_ROWS entries, _commit rolls it into an
@@ -756,7 +738,7 @@ class Snapshot:
     #: including "main". Maintained by _commit (the committing branch's
     #: tip becomes the new version; other tips are carried verbatim),
     #: so the HEAD snapshot's ``branches`` is the authoritative ref
-    #: table. Empty = legacy manifest ({"main": HEAD} implied).
+    #: table.
     branches: dict = field(default_factory=dict)
     #: branch name -> INCARNATION id (the version slot of the commit
     #: that created the ref — globally unique, so a dropped-then-
@@ -775,11 +757,10 @@ class Snapshot:
     #: expire_snapshots drops aged refs before computing what to keep,
     #: so a forgotten audit branch stops pinning history forever.
     ref_retention: dict = field(default_factory=dict)
-    #: which branch this snapshot was committed to ("main" default —
-    #: also the correct reading for legacy manifests).
+    #: which branch this snapshot was committed to.
     branch: str = "main"
     #: version this snapshot was derived from (its ancestor pointer).
-    #: -1 = legacy/create; _commit's optimistic-concurrency check is
+    #: -1 = create; _commit's optimistic-concurrency check is
     #: ``parent_version == tips[branch]`` — a writer whose branch tip
     #: moved underneath it conflicts, while commits landing on OTHER
     #: branches merely shift the global slot number and are rebased
@@ -811,8 +792,13 @@ class Snapshot:
     operation: str = ""
 
     def __post_init__(self) -> None:
-        # legacy manifests (pre field-id) synthesize stable ids from
-        # schema order — deterministic, so every reader agrees
+        # meta/ dir the manifest paths resolve against (bound by
+        # LakeTable.snapshot(), carried by child()) and the ``files``
+        # cache, keyed by the manifest paths it was loaded from
+        self._meta_dir: str | None = None
+        self._files: tuple[tuple[str, ...], list[dict[str, Any]]] = ((), [])
+        # a snapshot built without field ids (create) synthesizes stable
+        # ids from schema order — deterministic, so every reader agrees
         if not self.field_ids:
             names = [f.name for f in self.schema().fields]
             self.field_ids = {n: i + 1 for i, n in enumerate(names)}
@@ -827,57 +813,56 @@ class Snapshot:
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.schema_json))
 
-    def to_json(self) -> str:
-        d = {
-            k: v for k, v in self.__dict__.items() if not k.startswith("_")
-        }
-        if d.get("manifest_list"):
-            # sharded persistence: file entries live in the manifests
-            d.pop("files", None)
-        return json.dumps(d, indent=1)
+    @property
+    def files(self) -> list[dict[str, Any]]:
+        """Every live data-file entry: the union of the manifests in
+        ``manifest_list``, loaded on first access and cached until the
+        list changes. A read-only view — commits edit manifest groups
+        (``LakeTable._commit(edits=...)``), never this list."""
+        paths = tuple(m["path"] for m in self.manifest_list)
+        if self._files[0] != paths:
+            if self._meta_dir is None:
+                raise LoadError(
+                    "sharded snapshot: file entries live in manifest "
+                    "files; load via LakeTable.snapshot()"
+                )
+            self._files = (
+                paths,
+                [e for p in paths for e in _load_manifest(self._meta_dir, p)],
+            )
+        return self._files[1]
 
-    def __getattr__(self, name: str) -> Any:
-        # lazy manifest hydration: LakeTable.snapshot() removes the
-        # eagerly-initialized empty ``files`` and installs _files_loader;
-        # the first .files access materializes (and caches) the list.
-        if name == "files":
-            loader = self.__dict__.get("_files_loader")
-            if loader is not None:
-                object.__setattr__(self, "files", loader())
-                return self.__dict__["files"]
-        raise AttributeError(name)
+    def to_json(self) -> str:
+        return json.dumps(
+            {k: v for k, v in self.__dict__.items() if not k.startswith("_")},
+            indent=1,
+        )
 
     @classmethod
     def from_json(cls, s: str) -> "Snapshot":
         # ignore unknown keys: a manifest written by a NEWER engine
         # (new metadata fields) stays readable by this one — Iceberg
         # readers skip unrecognized metadata fields the same way, and
-        # it is what lets a mixed-version executor fleet roll forward
+        # it is what lets a mixed-version executor fleet roll forward.
+        # An inline file list is the retired pre-manifest format, not a
+        # newer one: skipping it would read the table as empty.
         d = json.loads(s)
+        if d.get("files"):
+            raise LoadError(
+                "snapshot carries an inline 'files' list (retired "
+                "pre-manifest format); this engine reads file entries "
+                "only from manifest files"
+            )
         known = {f.name for f in dataclasses.fields(cls)}
-        snap = cls(**{k: v for k, v in d.items() if k in known})
-        if snap.manifest_list and not snap.__dict__.get("files"):
-            # sharded snapshot: entries live in manifest files. Install
-            # a fail-loud placeholder; LakeTable.snapshot() (which knows
-            # meta_dir) swaps in the real loader. A bare from_json
-            # consumer touching .files errors instead of silently
-            # reading an empty table.
-            snap.__dict__.pop("files", None)
-
-            def _no_ctx() -> list:
-                raise LoadError(
-                    "sharded snapshot: file entries live in manifest "
-                    "files; load via LakeTable.snapshot()"
-                )
-
-            snap.__dict__["_files_loader"] = _no_ctx
-        return snap
+        return cls(**{k: v for k, v in d.items() if k in known})
 
     def child(self, **overrides: Any) -> "Snapshot":
         """Successor snapshot: version+1 with deep-copied mutable
         metadata, every field carried forward unless overridden — the
         single place child commits are built, so new snapshot fields
-        can never be silently dropped by a write path."""
+        can never be silently dropped by a write path. The manifest
+        list is carried by pointer: a commit without group edits (tag,
+        props, branch, DDL) reads and writes zero manifest bytes."""
         base: dict[str, Any] = dict(
             version=self.version + 1,
             schema_json=self.schema_json,
@@ -885,7 +870,7 @@ class Snapshot:
             order_cols=list(self.order_cols),
             bucket_col=self.bucket_col,
             num_buckets=self.num_buckets,
-            manifest_list=[],  # output field: _commit re-shards
+            manifest_list=[dict(m) for m in self.manifest_list],
             applied=dict(self.applied),
             watermark_lsn=self.watermark_lsn,
             props=dict(self.props),
@@ -908,23 +893,10 @@ class Snapshot:
             operation="",  # per-commit stamp, never inherited
         )
         base.update(overrides)
-        # metadata-only children (no files override, parent still lazy)
-        # carry the parent's manifest pointers WITHOUT hydrating — a
-        # tag/props/branch commit on a million-file table reads and
-        # writes zero manifest bytes.
-        if (
-            "files" not in base
-            and "files" not in self.__dict__
-            and self.__dict__.get("_files_loader") is not None
-        ):
-            base["manifest_list"] = [dict(m) for m in self.manifest_list]
-            child = Snapshot(**base)
-            child.__dict__.pop("files", None)
-            child.__dict__["_files_loader"] = self.__dict__["_files_loader"]
-            return child
-        if "files" not in base:
-            base["files"] = list(self.files)
-        return Snapshot(**base)
+        child = Snapshot(**base)
+        child._meta_dir = self._meta_dir
+        child._files = self._files
+        return child
 
 
 class LakeTable:
@@ -1014,11 +986,10 @@ class LakeTable:
 
     def current(self, branch: str | None = None) -> Snapshot:
         """Tip snapshot of ``branch`` (default: this handle's branch).
-        Legacy manifests (no branches dict) read as a single "main"
-        branch at HEAD. A branch whose ref still points at its fork
-        point (no commits yet) is returned stamped with the branch name
-        and fork version, so the first child() commit lands on the
-        branch with correct ancestry."""
+        A branch whose ref still points at its fork point (no commits
+        yet) is returned stamped with the branch name and fork version,
+        so the first child() commit lands on the branch with correct
+        ancestry."""
         b = branch or self._branch
         hs = self._head_snapshot()
         tips = _tips(hs)
@@ -1042,22 +1013,9 @@ class LakeTable:
         return snap
 
     def _attach_files_loader(self, snap: Snapshot) -> None:
-        """Install lazy hydration for a sharded snapshot: .files loads
-        every manifest on first access; entries are stamped with their
-        source manifest (``_mf``/``_mfn``) so the next _commit can
-        reuse untouched groups' manifests verbatim."""
-        if not snap.manifest_list or snap.__dict__.get("files"):
-            return
-        meta_dir, mlist = self.meta_dir, snap.manifest_list
-
-        def _load() -> list[dict[str, Any]]:
-            out: list[dict[str, Any]] = []
-            for m in mlist:
-                out.extend(_load_manifest(meta_dir, m["path"]))
-            return out
-
-        snap.__dict__.pop("files", None)
-        snap.__dict__["_files_loader"] = _load
+        """Bind a snapshot to this table's meta/ dir, so ``snap.files``
+        can load its manifests."""
+        snap._meta_dir = self.meta_dir
 
     def version_as_of(self, ts_ms: int) -> int:
         """Latest committed version ON THIS HANDLE'S BRANCH with
@@ -1136,106 +1094,60 @@ class LakeTable:
     #: into an immutable segment file
     _WM_SEGMENT_ROWS: int = 256
 
-    def _shard_manifests(self, snap: Snapshot) -> None:
-        """Iceberg-style manifest sharding: group ``snap.files`` by
-        (write-spec, bucket), write ONE manifest file per group that
-        changed since the parent snapshot, and reuse the parent's
-        manifest path for every untouched group. The snapshot JSON then
-        carries only the manifest list (O(groups) summaries), so commit
-        metadata bytes are O(touched buckets) — per-file key-bloom
-        bitmaps live in the bucket manifest they describe, not in every
-        snapshot.
+    def _shard_manifests(
+        self, snap: Snapshot, edits: dict[str, list[dict[str, Any]]]
+    ) -> None:
+        """Apply a commit's group edits to its manifest list (Iceberg's
+        manifest-list layout): each edited group gets ONE fresh manifest
+        holding its complete new entry list, or leaves the list when
+        emptied; every other group keeps the parent's manifest pointer.
+        The snapshot JSON then carries only O(groups) summaries, so
+        commit metadata bytes are O(touched buckets) — per-file
+        key-bloom bitmaps live in the bucket manifest they describe."""
+        mlist = [m for m in snap.manifest_list if m["group"] not in edits]
+        for gk in sorted(edits):
+            if edits[gk]:
+                mlist.append(self._write_manifest(gk, edits[gk]))
+        snap.manifest_list = sorted(mlist, key=lambda m: m["group"])
 
-        Reuse detection is provenance-based: hydration stamps each
-        entry with its source manifest (``_mf``) and that manifest's
-        entry count (``_mfn``). A group is byte-identical to a parent
-        manifest iff every entry came from that one manifest and none
-        of its entries were dropped (count match) — code that MUTATES a
-        committed entry must copy it without the ``_``-keys (see
-        set_num_buckets), which forces the rewrite."""
-        edits = snap.__dict__.pop("_group_edits", None)
-        lazy = (
-            "files" not in snap.__dict__
-            and snap.__dict__.get("_files_loader") is not None
-        )
-        if lazy and edits is None:
-            # metadata-only child: parent pointers carried verbatim —
-            # zero manifest bytes read or written
-            snap.__dict__["_manifests_written"] = 0
-            return
-        written = 0
-        if lazy:
-            # group-edit commit (merge's path): parent manifests are
-            # reused for every group not named in ``edits``; edited
-            # groups get one fresh manifest each (or disappear when
-            # emptied). The parent's entries are never hydrated.
-            mlist = [
-                dict(m)
-                for m in snap.manifest_list
-                if m["group"] not in edits
-            ]
-            for gk in sorted(edits):
-                ents = edits[gk]
-                if not ents:
-                    continue  # group emptied: no manifest
-                mlist.append(self._write_manifest(gk, ents))
-                written += 1
-            mlist.sort(key=lambda m: m["group"])
-            snap.manifest_list = mlist
-            meta_dir = self.meta_dir
-
-            def _load() -> list[dict[str, Any]]:
-                out: list[dict[str, Any]] = []
-                for m in mlist:
-                    out.extend(_load_manifest(meta_dir, m["path"]))
-                return out
-
-            snap.__dict__["_files_loader"] = _load
-            snap.__dict__["_manifests_written"] = written
-            return
-        groups: dict[str, list[dict[str, Any]]] = {}
-        for f in snap.files:
-            groups.setdefault(_group_key(f, snap), []).append(f)
-        mlist = []
-        for gk in sorted(groups):
-            ents = groups[gk]
-            srcs = {e.get("_mf") for e in ents}
-            src = next(iter(srcs)) if len(srcs) == 1 else None
-            if src is not None and all(
-                e.get("_mfn") == len(ents) for e in ents
-            ):
-                # untouched group: reuse parent manifest
-                mlist.append(self._manifest_summary(gk, src, ents))
-            else:
-                mlist.append(self._write_manifest(gk, ents))
-                written += 1
-        snap.manifest_list = mlist
-        snap.__dict__["_manifests_written"] = written
+    def _edit_groups(
+        self,
+        snap: Snapshot,
+        new_files: list[dict[str, Any]],
+        emptied: Iterable[str] = (),
+    ) -> dict[str, list[dict[str, Any]]]:
+        """Group edits for a data commit that drops every entry of the
+        ``emptied`` groups and adds ``new_files``: a group receiving new
+        files keeps its prior entries (its manifest is loaded, once)
+        unless it was emptied."""
+        edits: dict[str, list[dict[str, Any]]] = {g: [] for g in emptied}
+        by_path = {m["group"]: m["path"] for m in snap.manifest_list}
+        for f in new_files:
+            gk = _group_key(f, snap)
+            if gk not in edits:
+                edits[gk] = (
+                    _load_manifest(self.meta_dir, by_path[gk])
+                    if gk in by_path
+                    else []
+                )
+            edits[gk].append(f)
+        return edits
 
     def _write_manifest(
         self, gk: str, ents: list[dict[str, Any]]
     ) -> dict[str, Any]:
         """Write one group's manifest file (atomic) and return its
-        manifest-list summary; restamps the in-memory entries'
-        provenance so a later same-process commit can reuse it."""
+        manifest-list summary."""
         mdir = os.path.join(self.meta_dir, "manifests")
         os.makedirs(mdir, exist_ok=True)
         name = f"mf-{uuid.uuid4().hex[:16]}-{gk}.json"
-        relpath = os.path.join("manifests", name)
-        payload = [
-            {k: v for k, v in e.items() if not k.startswith("_")}
-            for e in ents
-        ]
         tmp = os.path.join(mdir, f".{name}.tmp")
         with open(tmp, "w") as fh:
-            json.dump({"group": gk, "files": payload}, fh)
+            json.dump({"group": gk, "files": ents}, fh)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, os.path.join(mdir, name))
-        for e in ents:
-            e["_mf"] = relpath
-            e["_mfn"] = len(ents)
-        return self._manifest_summary(gk, relpath, ents)
+        return self._manifest_summary(gk, os.path.join("manifests", name), ents)
 
     @staticmethod
     def _manifest_summary(
@@ -1267,34 +1179,17 @@ class LakeTable:
     def _candidate_files(
         self,
         snap: Snapshot,
-        buckets: set[int] | None = None,
-        lsn_gt: int | None = None,
+        buckets: set[int],
     ) -> list[dict[str, Any]]:
-        """File entries admitted by MANIFEST-level pruning: for a
-        sharded, still-lazy snapshot this loads only the manifests
-        whose group can overlap ``buckets`` (exact — every file in a
-        group shares its (spec, bucket) coverage) and whose known
-        max_lsn exceeds ``lsn_gt``. Returns a SUPERSET of the exact
-        answer; callers apply their per-file filters on top, as they
-        did over snap.files. Hydrated / legacy snapshots fall back to
-        the full in-memory list (same result, no extra I/O)."""
-        if "files" in snap.__dict__ or not snap.manifest_list:
-            return snap.files
+        """File entries admitted by MANIFEST-level pruning: loads only
+        the manifests whose group can overlap ``buckets`` (exact — every
+        file in a group shares its (spec, bucket) coverage). Returns a
+        SUPERSET of the exact answer; callers apply their per-file
+        filters on top."""
         out: list[dict[str, Any]] = []
         for m in snap.manifest_list:
-            if (
-                buckets is not None
-                and m["bucket"] >= 0
-                and not _file_overlaps(m, buckets, snap)
-            ):
-                continue
-            if (
-                lsn_gt is not None
-                and m.get("max_lsn") is not None
-                and m["max_lsn"] <= lsn_gt
-            ):
-                continue
-            out.extend(_load_manifest(self.meta_dir, m["path"]))
+            if m["bucket"] < 0 or _file_overlaps(m, buckets, snap):
+                out.extend(_load_manifest(self.meta_dir, m["path"]))
         return out
 
     def _roll_wm_segments(self, snap: Snapshot) -> None:
@@ -1351,8 +1246,14 @@ class LakeTable:
             del snap.applied[k]
 
     def _commit(
-        self, snap: Snapshot, branch_edits: dict[str, int | None] | None = None
-    ) -> None:
+        self,
+        snap: Snapshot,
+        *,
+        edits: dict[str, list[dict[str, Any]]] | None = None,
+        data_commit: bool = False,
+        ref_retention_edits: dict[str, int | None] | None = None,
+        branch_edits: dict[str, int | None] | None = None,
+    ) -> bool:
         """Commit with an ATOMIC slot claim (optimistic concurrency):
         the snapshot takes the next GLOBAL version slot (HEAD+1 — all
         branches share one metadata sequence, exactly as every Iceberg
@@ -1364,6 +1265,25 @@ class LakeTable:
         HEAD (its data files stay orphaned; vacuum_orphans reclaims
         them).
 
+        Commit intent travels in the keyword arguments:
+
+        - ``edits``: the data change as group edits — group key -> the
+          group's complete new entry list (``[]`` empties it), applied
+          to ``snap.manifest_list`` by _shard_manifests. None is a
+          metadata-only commit: the manifest list is carried verbatim.
+        - ``data_commit``: pure DATA intent (merge, append, add_files,
+          compact, overwrite), which makes a same-branch race eligible
+          for the metadata-level rebase (_try_rebase). Refs/DDL/spec/
+          rollback commits never rebase — their intent is not
+          group-shaped.
+        - ``ref_retention_edits``: per-ref max-age edits
+          ("branch:<n>"/"tag:<n>" -> ms, None deletes), applied to the
+          HEAD's global ref-retention table.
+        - ``branch_edits``: branch refs added/removed atomically with
+          the commit (value None deletes; ``_SLOT`` = this commit's own
+          slot) — used by create_branch/drop_branch. The committing
+          branch's own tip always becomes this snapshot.
+
         The CORRECTNESS check is per-branch: ``snap.parent_version``
         must still equal the committing branch's tip. A tip that moved
         is first given to _try_rebase (Iceberg's commit
@@ -1373,15 +1293,13 @@ class LakeTable:
         the new tip without redoing any data work. Only when that
         validation fails is it a real conflict (the writer's data files
         were derived from state that moved) and raises to the caller,
-        whose retry re-reads and rebuilds — same contract as before. A
-        commit that merely landed on a DIFFERENT branch only shifts the
-        global slot number; this writer rebases onto the next slot
-        transparently (bounded retry loop), because nothing it wrote
-        depends on other branches' state.
-
-        ``branch_edits`` adds/removes branch refs atomically with the
-        commit (value None deletes) — used by create_branch/drop_branch.
-        The committing branch's own tip always becomes this snapshot.
+        whose retry re-reads and rebuilds. A commit that merely landed
+        on a DIFFERENT branch only shifts the global slot number; this
+        writer rebases onto the next slot transparently (bounded retry
+        loop), because nothing it wrote depends on other branches'
+        state. A snapshot whose watermark passed its history's last
+        advance gets ``[slot, watermark_lsn]`` appended for the slot it
+        actually takes.
 
         Crashed-writer recovery: a version file without a HEAD swing is
         residue, but it is indistinguishable in content from a live
@@ -1390,12 +1308,16 @@ class LakeTable:
         Recovery unlinks the stale claim and retries the link, so two
         concurrent recoverers still resolve to exactly one winner. The
         StreamDriver's (run_id, batch_id) idempotence log makes
-        retry-after-conflict safe on the CDC path."""
-        self._shard_manifests(snap)
-        self._roll_wm_segments(snap)
+        retry-after-conflict safe on the CDC path.
+
+        Returns True when a same-branch race was resolved by the
+        rebase."""
+        if edits:
+            self._shard_manifests(snap, edits)
         self._cap_applied(snap)
         head = os.path.join(self.meta_dir, "HEAD")
         last_err: LoadError | None = None
+        rebased = own_wm = False
         for attempt in range(8):
             hv, tips = -1, {}
             if os.path.exists(head):
@@ -1407,13 +1329,14 @@ class LakeTable:
                 if tips[snap.branch] != snap.parent_version:
                     # same-branch race: before declaring a real
                     # conflict, try the metadata-level rebase (Iceberg's
-                    # commit retry-with-validation) — valid iff the
-                    # intervening commits touched disjoint manifest
-                    # groups and changed no structural metadata. On
-                    # success nothing is recomputed or rewritten: the
-                    # already-written data files and group manifests are
-                    # spliced onto the new tip.
-                    if not self._try_rebase(snap, tips[snap.branch]):
+                    # commit retry-with-validation). On success nothing
+                    # is recomputed or rewritten: the already-written
+                    # data files and group manifests are spliced onto
+                    # the new tip.
+                    if not (
+                        data_commit
+                        and self._try_rebase(snap, tips[snap.branch])
+                    ):
                         raise LoadError(
                             f"concurrent commit conflict: branch "
                             f"{snap.branch!r} is at version "
@@ -1421,20 +1344,21 @@ class LakeTable:
                             f"from version {snap.parent_version}; "
                             f"re-read and retry"
                         )
+                    rebased = True
+                    own_wm = False  # the history is now the tip's
             slot = hv + 1
-            # a watermark-advance entry this writer appended for its
-            # INTENDED version (parent+1, flagged by merge) follows the
-            # commit to the slot it actually lands in — other branches'
-            # commits shift the global sequence
-            if snap.__dict__.get("_wm_pending") and snap.wm_history:
+            if own_wm:
+                # lost a slot race: the advance follows to the new slot
                 snap.wm_history[-1][0] = slot
+            elif snap.watermark_lsn > snap.wm_history[-1][1]:
+                snap.wm_history.append([slot, snap.watermark_lsn])
+                own_wm = True
+            self._roll_wm_segments(snap)
             snap.version = slot
             new_tips = dict(tips)
             new_epochs = dict(hs.branch_epochs) if hv >= 0 else {}
             new_rr = dict(hs.ref_retention) if hv >= 0 else {}
-            for k, ms in (
-                snap.__dict__.get("_ref_retention_edits") or {}
-            ).items():
+            for k, ms in (ref_retention_edits or {}).items():
                 if ms is None:
                     new_rr.pop(k, None)
                 else:
@@ -1487,35 +1411,30 @@ class LakeTable:
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, os.path.join(self.meta_dir, "HEAD"))  # atomic
-            return
+            return rebased
         raise last_err  # all rebase attempts lost their slot race
 
     def _try_rebase(self, snap: Snapshot, tip_version: int) -> bool:
-        """Metadata-level commit rebase after a same-branch slot race
-        (Iceberg's commit retry-with-validation): when the commits that
-        won the race touched DISJOINT manifest groups and changed no
-        structural metadata, this writer's already-written data files
-        and group manifests are spliced onto the new tip — the merge /
-        append / targeted-compact is NOT redone. That is what lets
-        streaming ingest and background maintenance (compact of other
-        buckets, tag/branch commits, distributed retention) commit
-        concurrently on one branch without either redoing O(batch) or
-        O(bucket-state) data work.
+        """Metadata-level rebase of a DATA commit after a same-branch
+        slot race (Iceberg's commit retry-with-validation): when the
+        commits that won the race touched DISJOINT manifest groups and
+        changed no structural metadata, this writer's already-written
+        data files and group manifests are spliced onto the new tip —
+        the merge / append / targeted-compact is NOT redone. That is
+        what lets streaming ingest and background maintenance (compact
+        of other buckets, tag/branch commits, distributed retention)
+        commit concurrently on one branch without either redoing
+        O(batch) or O(bucket-state) data work.
 
         Validation (all checked against the snapshot this commit was
         derived from; any failure returns False and the caller raises
         the real conflict, whose retry re-reads and rebuilds):
-        - this commit declared pure DATA intent (``_data_commit``, set
-          by merge/append/compact/overwrite): its whole effect beyond
-          group manifests is watermark/applied advance and additive
-          schema widening, which this splice knows how to recompose.
-          Refs/DDL/spec/rollback commits do not rebase — their intent
-          is not group-shaped;
-        - footprints are exact and disjoint: a group's manifest pointer
-          changes iff a commit touched it (provenance-based pointer
-          reuse), so OUR footprint is the pointer diff snap-vs-parent,
-          the winners' is parent-vs-tip, and neither the state this
-          commit read nor the groups it rewrote may appear in both;
+        - footprints are exact and disjoint: every data commit is a
+          group edit, so a group's manifest pointer changes iff a
+          commit edited it. OUR footprint is the pointer diff
+          snap-vs-parent, the winners' is parent-vs-tip, and neither the
+          state this commit read nor the groups it rewrote may appear
+          in both;
         - no structural metadata changed under us: schema, bucket spec,
           key/order columns, rename epoch, field ids and table props
           are byte-equal between parent and tip (a concurrent widening
@@ -1528,22 +1447,13 @@ class LakeTable:
         The rebased snapshot adopts the tip's manifests for every
         untouched group (keeping the winners' effects), the tip's
         refs/stats/watermark history, max-merged watermark and applied
-        log, and re-appends its own watermark advance when it still
-        advances past the tip."""
-        if not snap.__dict__.get("_data_commit"):
-            return False  # refs/DDL/spec/rollback intent: never rebase
+        log; _commit then records its own watermark advance when it
+        still advances past the tip."""
         try:
             parent = self.snapshot(snap.parent_version)
             tip = self.snapshot(tip_version)
         except FileNotFoundError:
             return False  # expired under us: real conflict
-        for s in (parent, tip):
-            # legacy inline-files snapshot (pre-sharding): its file set
-            # is not group-addressable, so pointer-diff validation
-            # cannot run. An EMPTY manifest list with no files is just
-            # a young sharded table — fine.
-            if not s.manifest_list and s.__dict__.get("files"):
-                return False
         if (
             tip.schema_json != parent.schema_json
             or tip.num_buckets != parent.num_buckets
@@ -1571,15 +1481,11 @@ class LakeTable:
         }
         if others & touched:
             return False  # overlapping data footprint: real conflict
-        ours = {
-            m["group"]: m
-            for m in snap.manifest_list
-            if m["group"] in touched
-        }
-        mlist = [m for m in tip.manifest_list if m["group"] not in touched]
-        mlist += ours.values()
-        mlist.sort(key=lambda m: m["group"])
-        snap.manifest_list = mlist
+        snap.manifest_list = sorted(
+            [m for m in tip.manifest_list if m["group"] not in touched]
+            + [m for m in snap.manifest_list if m["group"] in touched],
+            key=lambda m: m["group"],
+        )
         snap.parent_version = tip.version
         snap.watermark_lsn = max(tip.watermark_lsn, snap.watermark_lsn)
         merged = dict(tip.applied)
@@ -1591,18 +1497,6 @@ class LakeTable:
         snap.stats = dict(tip.stats)
         snap.wm_segments = list(tip.wm_segments)
         snap.wm_history = [list(x) for x in tip.wm_history]
-        advanced = (
-            snap.__dict__.pop("_wm_pending", False)
-            and snap.watermark_lsn > tip.watermark_lsn
-        )
-        if advanced:
-            # slot index is retargeted by _commit when it lands
-            snap.wm_history.append([tip.version + 1, snap.watermark_lsn])
-            snap.__dict__["_wm_pending"] = True
-        self._roll_wm_segments(snap)
-        snap.__dict__.pop("files", None)
-        self._attach_files_loader(snap)
-        snap.__dict__["_rebased"] = True  # observability (merge stats)
         return True
 
     def _claim_slot(self, vtmp: str, vpath: str, version: int) -> None:
@@ -2053,16 +1947,14 @@ class LakeTable:
     # ------------------------------------------------- metadata tables --
     def row_count(self, version: int | None = None) -> int:
         """Upper-bound row count from manifest metadata alone — ZERO
-        Spark jobs and (on a sharded snapshot) zero manifest loads: the
-        manifest-list summaries carry per-group footer row counts. The
+        Spark jobs and zero manifest loads: the manifest-list summaries
+        carry per-group footer row counts. The
         count includes tombstones and unresolved MoR delta rows, so it
         is an OVERESTIMATE of the resolved state — exactly what
         corpus-size-derived knobs want (``auto_doc_freq_cap`` only
         loosens with an overestimate, never tightens)."""
         snap = self.current() if version is None else self.snapshot(version)
-        if "files" not in snap.__dict__ and snap.manifest_list:
-            return sum(int(m.get("rows", 0)) for m in snap.manifest_list)
-        return sum(int(f.get("rows", 0)) for f in snap.files)
+        return sum(int(m.get("rows", 0)) for m in snap.manifest_list)
 
     def ngram_dedup_pairs(
         self,
@@ -2095,80 +1987,49 @@ class LakeTable:
         row count, LSN/event-time/key ranges, MoR kind, write spec and
         epoch, and whether it carries a key bloom.
 
-        On a sharded snapshot this is a DISTRIBUTED read of the
-        manifest files themselves (exactly how Iceberg serves its
-        ``files`` table): the driver ships O(groups) paths, executors
-        parse and explode the entries, and a 10^6-file table never
-        materializes its file list in driver memory. Hydrated / legacy
-        snapshots build the same schema from the in-memory list."""
+        This is a DISTRIBUTED read of the manifest files themselves
+        (exactly how Iceberg serves its ``files`` table): the driver
+        ships O(groups) paths, executors parse and explode the entries,
+        and a 10^6-file table never materializes its file list in
+        driver memory."""
         snap = self.current() if version is None else self.snapshot(version)
-        out_ddl = (
-            "path string, bucket int, rows long, min_lsn long, "
-            "max_lsn long, min_ts long, max_ts long, min_key string, "
-            "max_key string, kind string, spec_n int, epoch int, "
-            "has_key_bloom boolean, external boolean"
+        ent = (
+            "group string, files array<struct<path:string,"
+            "bucket:int,rows:long,min_lsn:long,max_lsn:long,"
+            "min_ts:long,max_ts:long,min_key:string,max_key:string,"
+            "kind:string,spec_n:int,epoch:int,key_bloom:string,"
+            "external:boolean>>"
         )
-        if "files" not in snap.__dict__ and snap.manifest_list:
-            paths = [
-                os.path.join(self.meta_dir, m["path"])
-                for m in snap.manifest_list
-            ]
-            ent = (
-                "group string, files array<struct<path:string,"
-                "bucket:int,rows:long,min_lsn:long,max_lsn:long,"
-                "min_ts:long,max_ts:long,min_key:string,max_key:string,"
-                "kind:string,spec_n:int,epoch:int,key_bloom:string,"
-                "external:boolean>>"
-            )
-            raw = (
-                self.spark.read.schema(ent)
-                .option("multiLine", True)
-                .json(paths)
-            )
-            f = F.col("f")
-            return raw.select(
-                "group", F.explode("files").alias("f")
-            ).select(
-                f["path"].alias("path"),
-                f["bucket"].alias("bucket"),
-                F.coalesce(f["rows"], F.lit(0)).alias("rows"),
-                f["min_lsn"].alias("min_lsn"),
-                f["max_lsn"].alias("max_lsn"),
-                f["min_ts"].alias("min_ts"),
-                f["max_ts"].alias("max_ts"),
-                f["min_key"].alias("min_key"),
-                f["max_key"].alias("max_key"),
-                F.coalesce(f["kind"], F.lit("base")).alias("kind"),
-                # entries written under the current spec may omit
-                # spec_n; the group key encodes it (see _load_manifest)
-                F.coalesce(
-                    f["spec_n"],
-                    F.regexp_extract("group", r"^s(\d+)-b", 1).cast("int"),
-                ).alias("spec_n"),
-                F.coalesce(f["epoch"], F.lit(0)).alias("epoch"),
-                f["key_bloom"].isNotNull().alias("has_key_bloom"),
-                F.coalesce(f["external"], F.lit(False)).alias("external"),
-            )
-        rows = [
-            (
-                f["path"],
-                int(f["bucket"]),
-                int(f.get("rows", 0)),
-                f.get("min_lsn"),
-                f.get("max_lsn"),
-                f.get("min_ts"),
-                f.get("max_ts"),
-                None if f.get("min_key") is None else str(f["min_key"]),
-                None if f.get("max_key") is None else str(f["max_key"]),
-                f.get("kind", "base"),
-                _file_spec(f, snap),
-                int(f.get("epoch", 0)),
-                bool(f.get("key_bloom")),
-                bool(f.get("external")),
-            )
-            for f in snap.files
-        ]
-        return self.spark.createDataFrame(rows, out_ddl)
+        paths = [os.path.join(self.meta_dir, m["path"]) for m in snap.manifest_list]
+        raw = (
+            self.spark.read.schema(ent).option("multiLine", True).json(paths)
+            if paths
+            else self.spark.createDataFrame([], ent)
+        )
+        f = F.col("f")
+        return raw.select(
+            "group", F.explode("files").alias("f")
+        ).select(
+            f["path"].alias("path"),
+            f["bucket"].alias("bucket"),
+            F.coalesce(f["rows"], F.lit(0)).alias("rows"),
+            f["min_lsn"].alias("min_lsn"),
+            f["max_lsn"].alias("max_lsn"),
+            f["min_ts"].alias("min_ts"),
+            f["max_ts"].alias("max_ts"),
+            f["min_key"].alias("min_key"),
+            f["max_key"].alias("max_key"),
+            F.coalesce(f["kind"], F.lit("base")).alias("kind"),
+            # entries written under the current spec may omit
+            # spec_n; the group key encodes it (see _load_manifest)
+            F.coalesce(
+                f["spec_n"],
+                F.regexp_extract("group", r"^s(\d+)-b", 1).cast("int"),
+            ).alias("spec_n"),
+            F.coalesce(f["epoch"], F.lit(0)).alias("epoch"),
+            f["key_bloom"].isNotNull().alias("has_key_bloom"),
+            F.coalesce(f["external"], F.lit(False)).alias("external"),
+        )
 
     def inspect_snapshots(self) -> DataFrame:
         """Surviving snapshot history as a DataFrame (Iceberg's
@@ -2181,14 +2042,10 @@ class LakeTable:
             glob.glob(os.path.join(self.meta_dir, "version-*.json"))
         ):
             s = Snapshot.from_json(open(p).read())
-            if s.manifest_list:
-                # sharded: the manifest-list summaries already carry
-                # the counts — zero manifest files opened
-                n_files = sum(m["n_files"] for m in s.manifest_list)
-                n_rows = sum(m["rows"] for m in s.manifest_list)
-            else:
-                n_files = len(s.files)
-                n_rows = sum(f.get("rows", 0) for f in s.files)
+            # the manifest-list summaries carry the counts — zero
+            # manifest files opened
+            n_files = sum(m["n_files"] for m in s.manifest_list)
+            n_rows = sum(m["rows"] for m in s.manifest_list)
             rows.append(
                 (
                     s.version,
@@ -2227,50 +2084,27 @@ class LakeTable:
         one row per manifest file at the given (default current)
         version — its group, write spec, bucket, file/row/delta counts
         and LSN range. Served entirely from the snapshot's summary
-        line: O(groups) driver metadata, ZERO manifest files opened.
-        Legacy inline-files snapshots synthesize the same shape from
-        the in-memory list (one virtual group per (spec, bucket))."""
+        line: O(groups) driver metadata, ZERO manifest files opened."""
         snap = self.current() if version is None else self.snapshot(version)
         ddl = (
             "path string, group string, spec_n int, bucket int, "
             "n_files int, rows long, delta_files int, min_lsn long, "
             "max_lsn long"
         )
-        if snap.manifest_list:
-            rows = [
-                (
-                    m["path"],
-                    m["group"],
-                    int(m["spec_n"]),
-                    int(m["bucket"]),
-                    int(m["n_files"]),
-                    int(m["rows"]),
-                    int(m.get("deltas", 0)),
-                    m.get("min_lsn"),
-                    m.get("max_lsn"),
-                )
-                for m in snap.manifest_list
-            ]
-            return self.spark.createDataFrame(rows, ddl)
-        groups: dict[str, list[dict[str, Any]]] = {}
-        for f in snap.files:
-            groups.setdefault(_group_key(f, snap), []).append(f)
-        rows = []
-        for gk in sorted(groups):
-            s = self._manifest_summary(gk, "", groups[gk])
-            rows.append(
-                (
-                    None,
-                    gk,
-                    s["spec_n"],
-                    s["bucket"],
-                    s["n_files"],
-                    s["rows"],
-                    s["deltas"],
-                    s["min_lsn"],
-                    s["max_lsn"],
-                )
+        rows = [
+            (
+                m["path"],
+                m["group"],
+                int(m["spec_n"]),
+                int(m["bucket"]),
+                int(m["n_files"]),
+                int(m["rows"]),
+                int(m.get("deltas", 0)),
+                m.get("min_lsn"),
+                m.get("max_lsn"),
             )
+            for m in snap.manifest_list
+        ]
         return self.spark.createDataFrame(rows, ddl)
 
     def inspect_partitions(self, version: int | None = None) -> DataFrame:
@@ -2559,9 +2393,9 @@ class LakeTable:
     def set_num_buckets(self, new_n: int) -> dict[str, Any]:
         """Bucket-spec (partition spec) evolution, Iceberg-style: a
         METADATA-ONLY commit — no data rewrite, no downtime. Existing
-        files keep their old spec (stamped ``spec_n`` here); new writes
-        use the new spec; reads/merges/lookup prune EXACTLY across the
-        mix because pmod(xxhash64(k), N) nests under divisibility
+        files keep their old spec (their manifest group records it);
+        new writes use the new spec; reads/merges/lookup prune EXACTLY
+        across the mix because pmod(xxhash64(k), N) nests under divisibility
         ((h mod kN) mod N == h mod N), which is why ``new_n`` must be a
         multiple or divisor of the current spec (and of every spec
         still present in the file set). Old-spec files migrate
@@ -2579,24 +2413,14 @@ class LakeTable:
             return {"version": snap.version, "skipped": True}
         if new_n < 1:
             raise LoadError("num_buckets must be >= 1")
-        lazy = (
-            "files" not in snap.__dict__
-            and snap.__dict__.get("_files_loader") is not None
-        )
-        if lazy:
-            # sharded table: every manifest summary carries its spec,
-            # and hydration stamps entries from their manifest's group
-            # (_load_manifest) — so no entry ever falls back to the new
-            # current spec and NO manifest needs rewriting. Spec
-            # evolution on a 10^6-file table is one O(groups) snapshot
-            # JSON, zero manifest bytes read or written.
-            specs = {int(m["spec_n"]) for m in snap.manifest_list} | {
-                snap.num_buckets
-            }
-        else:
-            specs = {_file_spec(f, snap) for f in snap.files} | {
-                snap.num_buckets
-            }
+        # every manifest summary carries its spec, and loading stamps
+        # entries from their manifest's group (_load_manifest) — so no
+        # entry ever falls back to the new current spec and NO manifest
+        # needs rewriting. Spec evolution on a 10^6-file table is one
+        # O(groups) snapshot JSON, zero manifest bytes read or written.
+        specs = {int(m["spec_n"]) for m in snap.manifest_list} | {
+            snap.num_buckets
+        }
         for s in specs:
             if not (new_n % s == 0 or s % new_n == 0):
                 raise LoadError(
@@ -2604,20 +2428,7 @@ class LakeTable:
                     f"every live spec (violates {s}); evolve through a "
                     "compatible intermediate or compact() first"
                 )
-        if lazy:
-            new_snap = snap.child(num_buckets=new_n, operation="set-buckets")
-        else:
-            files = []
-            for f in snap.files:
-                # copy WITHOUT the _mf provenance keys: the stamped
-                # spec_n must reach disk, so the group may not reuse
-                # its parent manifest (see _shard_manifests)
-                g = {k: v for k, v in f.items() if not k.startswith("_")}
-                g.setdefault("spec_n", snap.num_buckets)
-                files.append(g)
-            new_snap = snap.child(
-                num_buckets=new_n, files=files, operation="set-buckets"
-            )
+        new_snap = snap.child(num_buckets=new_n, operation="set-buckets")
         self._commit(new_snap)
         return {
             "version": new_snap.version,
@@ -2671,13 +2482,14 @@ class LakeTable:
         except FileNotFoundError:
             raise LoadError(f"tag target version {v} does not exist")
         new_snap = snap.child(refs={**snap.refs, name: v}, operation="tag")
-        if max_age_ms is not None:
-            # Iceberg max-ref-age-ms for tags: expire_snapshots drops
-            # the tag once the pinned snapshot is older than this
-            new_snap.__dict__["_ref_retention_edits"] = {
-                f"tag:{name}": int(max_age_ms)
-            }
-        self._commit(new_snap)
+        # Iceberg max-ref-age-ms for tags: expire_snapshots drops the
+        # tag once the pinned snapshot is older than this
+        self._commit(
+            new_snap,
+            ref_retention_edits=(
+                {f"tag:{name}": int(max_age_ms)} if max_age_ms is not None else None
+            ),
+        )
         return {"version": new_snap.version, "tag": name, "at": v}
 
     def drop_tag(self, name: str) -> dict[str, Any]:
@@ -2689,8 +2501,7 @@ class LakeTable:
         refs = dict(snap.refs)
         at = refs.pop(name)
         new_snap = snap.child(refs=refs, operation="tag")
-        new_snap.__dict__["_ref_retention_edits"] = {f"tag:{name}": None}
-        self._commit(new_snap)
+        self._commit(new_snap, ref_retention_edits={f"tag:{name}": None})
         return {"version": new_snap.version, "dropped": name, "was_at": at}
 
     def tags(self) -> dict[str, int]:
@@ -2739,11 +2550,15 @@ class LakeTable:
             except FileNotFoundError:
                 raise LoadError(f"branch target version {v} does not exist")
         child = snap.child(operation="branch")
-        if max_age_ms is not None:
-            child.__dict__["_ref_retention_edits"] = {
-                f"branch:{name}": int(max_age_ms)
-            }
-        self._commit(child, branch_edits={name: v})
+        self._commit(
+            child,
+            ref_retention_edits=(
+                {f"branch:{name}": int(max_age_ms)}
+                if max_age_ms is not None
+                else None
+            ),
+            branch_edits={name: v},
+        )
         return {"branch": name, "at": child.branches[name]}
 
     def drop_branch(self, name: str) -> dict[str, Any]:
@@ -2945,9 +2760,7 @@ class LakeTable:
         version files cannot break it — and the plan is one broadcast
         range join against the tiny (version, lsn-range) table instead
         of an O(window)-deep nested CASE (which falls out of codegen
-        for long windows). Legacy manifests without history fall back
-        to walking SURVIVING version files; a version expired away
-        there attributes its rows to the next surviving version."""
+        for long windows)."""
         snap = self.current() if to_version is None else self.snapshot(to_version)
         try:
             wm = self.snapshot(from_version).watermark_lsn
@@ -2972,51 +2785,33 @@ class LakeTable:
         # keep the metadata-pruned scan.
         # bucket identity under the CURRENT spec (exact across bucket-
         # spec evolution: _expand_to_current)
-        # a sharded snapshot prunes at the MANIFEST level, deltas or
-        # not: delta coverage and dirty buckets come from the summary
-        # line's per-group delta counts and lsn ranges (EXACT — every
-        # file in a group shares the group's bucket coverage, so
-        # group-level overlap is file-level overlap), groups wholly at
-        # or below the watermark are never even loaded, and dirty
-        # groups' manifests load only for the LWW-resolve pool below.
-        # An incremental window on a long MoR table therefore reads
-        # O(changed groups) driver metadata, never O(table files).
-        lazy_meta = "files" not in snap.__dict__ and bool(snap.manifest_list)
+        # pruning runs at the MANIFEST level, deltas or not: delta
+        # coverage and dirty buckets come from the summary line's
+        # per-group delta counts and lsn ranges (EXACT — every file in a
+        # group shares the group's bucket coverage, so group-level
+        # overlap is file-level overlap), groups wholly at or below the
+        # watermark are never even loaded, and dirty groups' manifests
+        # load only for the LWW-resolve pool below. An incremental
+        # window on a long MoR table therefore reads O(changed groups)
+        # driver metadata, never O(table files).
         delta_cov: set[int] = set()
         dirty: set[int] = set()
-        if lazy_meta:
-            for m in snap.manifest_list:
-                if m.get("deltas"):
-                    delta_cov |= _expand_to_current(m, snap)
-            for m in snap.manifest_list:
-                if (
-                    m.get("max_lsn") is None or m["max_lsn"] > wm
-                ) and _file_overlaps(m, delta_cov, snap):
-                    dirty |= _expand_to_current(m, snap) & delta_cov
-            files = [
-                f
-                for m in snap.manifest_list
-                if not _file_overlaps(m, dirty, snap)
-                and (m.get("max_lsn") is None or m["max_lsn"] > wm)
-                for f in _load_manifest(self.meta_dir, m["path"])
-                if f.get("max_lsn") is None or f["max_lsn"] > wm
-            ]
-        else:
-            scan_pool = snap.files
-            for f in scan_pool:
-                if f.get("kind") == "delta":
-                    delta_cov |= _expand_to_current(f, snap)
-            for f in scan_pool:
-                if (
-                    f.get("max_lsn") is None or f["max_lsn"] > wm
-                ) and _file_overlaps(f, delta_cov, snap):
-                    dirty |= _expand_to_current(f, snap) & delta_cov
-            files = [
-                f
-                for f in scan_pool
-                if not _file_overlaps(f, dirty, snap)
-                and (f.get("max_lsn") is None or f["max_lsn"] > wm)
-            ]
+        for m in snap.manifest_list:
+            if m.get("deltas"):
+                delta_cov |= _expand_to_current(m, snap)
+        for m in snap.manifest_list:
+            if (
+                m.get("max_lsn") is None or m["max_lsn"] > wm
+            ) and _file_overlaps(m, delta_cov, snap):
+                dirty |= _expand_to_current(m, snap) & delta_cov
+        files = [
+            f
+            for m in snap.manifest_list
+            if not _file_overlaps(m, dirty, snap)
+            and (m.get("max_lsn") is None or m["max_lsn"] > wm)
+            for f in _load_manifest(self.meta_dir, m["path"])
+            if f.get("max_lsn") is None or f["max_lsn"] > wm
+        ]
         df = self._scan_resolved(
             snap,
             files,
@@ -3051,23 +2846,9 @@ class LakeTable:
         # windows inside the inline tail attribute with zero extra
         # reads; only a window reaching past the tail pays O(segments)
         wm_line = snap.wm_history
-        if wm_line and snap.wm_segments and (
-            from_version < wm_line[0][0]
-        ):
+        if snap.wm_segments and from_version < wm_line[0][0]:
             wm_line = self._full_wm_history(snap)
-        if wm_line:
-            hist = [
-                (v, w)
-                for v, w in wm_line
-                if from_version < v <= snap.version
-            ]
-        else:  # legacy manifest: walk surviving version files
-            hist = []
-            for v in range(from_version + 1, snap.version + 1):
-                try:
-                    hist.append((v, self.snapshot(v).watermark_lsn))
-                except FileNotFoundError:
-                    continue
+        hist = [(v, w) for v, w in wm_line if from_version < v <= snap.version]
         ranges, prev_wm = [], wm
         for v, v_wm in hist:
             if v_wm > prev_wm:
@@ -3264,7 +3045,6 @@ class LakeTable:
             shuffled = shuffled.sortWithinPartitions(
                 _BUCKET, *[c for c in sort_cols if c in df.columns]
             )
-        t_w = time.monotonic()
         writer = shuffled.write.partitionBy(_BUCKET).mode("overwrite")
         if compression:
             writer = writer.option("compression", compression)
@@ -3294,7 +3074,6 @@ class LakeTable:
         finally:
             if dist_mode == "range":
                 range_cached.unpersist()
-        t_f = time.monotonic()
         paths = glob.glob(os.path.join(commit_dir, f"{_BUCKET}=*", "*.parquet"))
         if not paths:
             # empty input (possible on a deferred-stats seed merge of an
@@ -3305,11 +3084,6 @@ class LakeTable:
             return []
         stats = _footer_stats_many(paths, ts_col, key_col)
         blooms = self._key_blooms(paths, key_col, props)
-        if os.environ.get("ETL_DEBUG_MERGE"):
-            print(
-                f"[write] job: {t_f-t_w:.1f}s footers({len(paths)}): "
-                f"{time.monotonic()-t_f:.1f}s wp={wp}"
-            )
         out = []
         for p in paths:
             b = int(p.split(f"{_BUCKET}=")[1].split(os.sep)[0])
@@ -3384,11 +3158,10 @@ class LakeTable:
     def append(self, df: DataFrame, lsn_col: str | None = None) -> dict[str, Any]:
         """Blind append (reference DeltaLoader Append mode).
 
-        On a sharded table the commit is a group-edit: only the groups
-        that RECEIVE new files have their manifests loaded and
-        rewritten; every other group's manifest is reused by pointer —
-        an append-only ingest on a 10^6-file table never hydrates the
-        full file list."""
+        The commit is a group edit: only the groups that RECEIVE new
+        files have their manifests loaded and rewritten; every other
+        group's manifest is reused by pointer — an append-only ingest
+        on a 10^6-file table never loads the full file list."""
         snap = self.current()
         out = self._prepare_rows(df, snap, lsn_col)
         new_files = self._write_files(
@@ -3401,29 +3174,10 @@ class LakeTable:
             sort_cols=_sort_order(snap),
             key_col=snap.bucket_col,
         )
-        lazy = (
-            "files" not in snap.__dict__
-            and snap.__dict__.get("_files_loader") is not None
+        new = snap.child(operation="append")
+        self._commit(
+            new, edits=self._edit_groups(snap, new_files), data_commit=True
         )
-        if lazy:
-            by_path = {m["group"]: m["path"] for m in snap.manifest_list}
-            edits: dict[str, list[dict[str, Any]]] = {}
-            for f in new_files:
-                gk = _group_key(f, snap)
-                if gk not in edits:
-                    edits[gk] = (
-                        _load_manifest(self.meta_dir, by_path[gk])
-                        if gk in by_path
-                        else []
-                    )
-                edits[gk].append(f)
-            new = snap.child()
-            new.__dict__["_group_edits"] = edits
-        else:
-            new = snap.child(files=snap.files + new_files)
-        new.operation = "append"
-        new.__dict__["_data_commit"] = True  # rebase-eligible
-        self._commit(new)
         return {"version": new.version, "mode": "append"}
 
     def add_files(self, paths: Sequence[str]) -> dict[str, Any]:
@@ -3582,25 +3336,10 @@ class LakeTable:
             }
             for p in files
         ]
-        lazy = (
-            "files" not in snap.__dict__
-            and snap.__dict__.get("_files_loader") is not None
+        new = snap.child(operation="add-files")
+        self._commit(
+            new, edits=self._edit_groups(snap, new_files), data_commit=True
         )
-        if lazy:
-            by_path = {m["group"]: m["path"] for m in snap.manifest_list}
-            gk = _group_key(new_files[0], snap)
-            prior = (
-                _load_manifest(self.meta_dir, by_path[gk])
-                if gk in by_path
-                else []
-            )
-            new = snap.child()
-            new.__dict__["_group_edits"] = {gk: prior + new_files}
-        else:
-            new = snap.child(files=snap.files + new_files)
-        new.operation = "add-files"
-        new.__dict__["_data_commit"] = True  # rebase-eligible
-        self._commit(new)
         return {
             "version": new.version,
             "mode": "add-files",
@@ -3611,24 +3350,28 @@ class LakeTable:
         }
 
     def overwrite(self, df: DataFrame, lsn_col: str | None = None) -> dict[str, Any]:
-        """Full replace (reference DeltaLoader Overwrite mode)."""
+        """Full replace (reference DeltaLoader Overwrite mode): a group
+        edit that empties every existing group — zero manifests
+        loaded."""
         snap = self.current()
         out = self._prepare_rows(df, snap, lsn_col)
-        new = snap.child(
-            files=self._write_files(
-                self._with_bucket(out, snap),
-                snap.version + 1,
-                snap.num_buckets,
-                props=snap.props,
-                epoch=snap.epoch,
-                ts_col=snap.order_cols[0],
-                sort_cols=_sort_order(snap),
-                key_col=snap.bucket_col,
-            ),
+        new_files = self._write_files(
+            self._with_bucket(out, snap),
+            snap.version + 1,
+            snap.num_buckets,
+            props=snap.props,
+            epoch=snap.epoch,
+            ts_col=snap.order_cols[0],
+            sort_cols=_sort_order(snap),
+            key_col=snap.bucket_col,
         )
-        new.operation = "overwrite"
-        new.__dict__["_data_commit"] = True  # rebase-eligible
-        self._commit(new)
+        new = snap.child(operation="overwrite")
+        emptied = [m["group"] for m in snap.manifest_list]
+        self._commit(
+            new,
+            edits=self._edit_groups(snap, new_files, emptied),
+            data_commit=True,
+        )
         return {"version": new.version, "mode": "overwrite"}
 
     def _prepare_rows(
@@ -3707,11 +3450,10 @@ class LakeTable:
                 refs = {
                     k: v for k, v in snap.refs.items() if k not in aged_tags
                 }
-                child = snap.child(refs=refs, operation="expire-refs")
-                child.__dict__["_ref_retention_edits"] = {
-                    f"tag:{t}": None for t in aged_tags
-                }
-                self._commit(child)
+                self._commit(
+                    snap.child(refs=refs, operation="expire-refs"),
+                    ref_retention_edits={f"tag:{t}": None for t in aged_tags},
+                )
                 dropped_refs += [f"tag:{t}" for t in aged_tags]
         tips = _tips(self._head_snapshot())
         versions = sorted(
@@ -3725,28 +3467,18 @@ class LakeTable:
         # come from manifests any kept snapshot references; candidate-
         # dead paths only from manifests referenced exclusively by
         # expired snapshots (files in a shared manifest are live by
-        # construction). Legacy inline-files snapshots contribute
-        # directly.
-        live: set[str] = set()
+        # construction).
         live_meta: set[str] = set()  # manifest + wm-segment files kept
         for v in keep:
             s = self.snapshot(v)
             live_meta.update(m["path"] for m in s.manifest_list)
             live_meta.update(s.wm_segments)
-            if not s.manifest_list:
-                live.update(f["path"] for f in s.files)
         dead_meta: set[str] = set()
-        dead_candidates: set[str] = set()
-        expired_snaps = [self.snapshot(v) for v in versions if v not in keep]
-        for s in expired_snaps:
-            dead_meta.update(m["path"] for m in s.manifest_list)
-            dead_meta.update(s.wm_segments)
-            if not s.manifest_list:
-                # external (add_files-imported) files are the user's —
-                # never deletion candidates, even once dead
-                dead_candidates.update(
-                    f["path"] for f in s.files if not f.get("external")
-                )
+        for v in versions:
+            if v not in keep:
+                s = self.snapshot(v)
+                dead_meta.update(m["path"] for m in s.manifest_list)
+                dead_meta.update(s.wm_segments)
         live_mf = [
             r for r in live_meta if r.split("/")[-1].startswith("mf-")
         ]
@@ -3756,15 +3488,17 @@ class LakeTable:
             if r.split("/")[-1].startswith("mf-")
         ]
         if distributed:
-            removed_files = self._expire_delete_distributed(
-                live_mf, dead_mf, live, dead_candidates
-            )
+            removed_files = self._expire_delete_distributed(live_mf, dead_mf)
         else:
+            live: set[str] = set()
+            dead_candidates: set[str] = set()
             for rel in live_mf:
                 live.update(
                     e["path"] for e in _load_manifest(self.meta_dir, rel)
                 )
             for rel in dead_mf:
+                # external (add_files-imported) files are the user's —
+                # never deletion candidates, even once dead
                 dead_candidates.update(
                     e["path"]
                     for e in _load_manifest(self.meta_dir, rel)
@@ -3797,67 +3531,48 @@ class LakeTable:
         }
 
     def _manifest_paths_df(
-        self,
-        mf_rel: Sequence[str],
-        inline: Sequence[str],
-        include_external: bool = True,
+        self, mf_rel: Sequence[str], include_external: bool = True
     ) -> DataFrame | None:
         """Distributed DF of suffix-normalized data-file paths from the
-        given manifest files (parsed on executors) plus any
-        legacy-inline paths; the suffix (last three path components,
-        uuid-bearing — ``commit-<uuid>/__b=N/part-<uuid>.parquet``) is
-        collision-free and invariant to how the table root was spelled
-        when each writer opened it. None when both inputs are empty."""
-        sfx = lambda c: F.substring_index(c, "/", -3)  # noqa: E731
-        out = None
-        if mf_rel:
-            raw = (
-                self.spark.read.schema(
-                    "files array<struct<path:string,external:boolean>>"
-                )
-                .option("multiLine", True)
-                .json(
-                    [os.path.join(self.meta_dir, r) for r in sorted(mf_rel)]
-                )
+        given manifest files (parsed on executors); the suffix (last
+        three path components, uuid-bearing —
+        ``commit-<uuid>/__b=N/part-<uuid>.parquet``) is collision-free
+        and invariant to how the table root was spelled when each
+        writer opened it. None when there is no manifest."""
+        if not mf_rel:
+            return None
+        raw = (
+            self.spark.read.schema(
+                "files array<struct<path:string,external:boolean>>"
             )
-            exploded = raw.select(F.explode("files").alias("f"))
-            if not include_external:
-                # external (add_files) entries are the user's files —
-                # never DELETION candidates. They stay in LIVE sets
-                # (include_external=True) so liveness joins still
-                # protect an import that happens to sit under the
-                # table root.
-                exploded = exploded.where(
-                    ~F.coalesce(F.col("f.external"), F.lit(False))
-                )
-            out = exploded.select(
-                sfx(F.col("f.path")).alias("sfx"),
-                F.col("f.path").alias("path"),
+            .option("multiLine", True)
+            .json([os.path.join(self.meta_dir, r) for r in sorted(mf_rel)])
+        )
+        exploded = raw.select(F.explode("files").alias("f"))
+        if not include_external:
+            # external (add_files) entries are the user's files — never
+            # DELETION candidates. They stay in LIVE sets
+            # (include_external=True) so liveness joins still protect
+            # an import that happens to sit under the table root.
+            exploded = exploded.where(
+                ~F.coalesce(F.col("f.external"), F.lit(False))
             )
-        if inline:
-            idf = self.spark.createDataFrame(
-                [(x,) for x in inline], "p string"
-            ).select(sfx(F.col("p")).alias("sfx"), F.col("p").alias("path"))
-            out = idf if out is None else out.unionAll(idf)
-        return out
+        return exploded.select(
+            F.substring_index(F.col("f.path"), "/", -3).alias("sfx"),
+            F.col("f.path").alias("path"),
+        )
 
     def _expire_delete_distributed(
-        self,
-        live_mf: Sequence[str],
-        dead_mf: Sequence[str],
-        live_inline: set[str],
-        dead_inline: set[str],
+        self, live_mf: Sequence[str], dead_mf: Sequence[str]
     ) -> int:
         """Delete dead-only data files as a Spark action: dead-manifest
         entries anti-joined against every kept snapshot's entries, the
         surviving doomed paths deleted inside executor tasks (only a
         per-partition count returns to the driver)."""
-        dead_df = self._manifest_paths_df(
-            dead_mf, sorted(dead_inline), include_external=False
-        )
+        dead_df = self._manifest_paths_df(dead_mf, include_external=False)
         if dead_df is None:
             return 0
-        live_df = self._manifest_paths_df(live_mf, sorted(live_inline))
+        live_df = self._manifest_paths_df(live_mf)
         doomed = dead_df
         if live_df is not None:
             doomed = dead_df.join(
@@ -3918,21 +3633,17 @@ class LakeTable:
         cutoff = time.time() - older_than_s
         if distributed:
             mf_rel: set[str] = set()
-            inline: list[str] = []
             for p in glob.glob(os.path.join(self.meta_dir, "version-*.json")):
                 v = int(p.split("version-")[1].split(".")[0])
                 s = self.snapshot(v)
-                if s.manifest_list:
-                    mf_rel.update(m["path"] for m in s.manifest_list)
-                else:  # legacy inline-files snapshot: paths ride the JSON
-                    inline.extend(f["path"] for f in s.files)
-                live_meta.update(m["path"] for m in s.manifest_list)
+                mf_rel.update(m["path"] for m in s.manifest_list)
                 live_meta.update(s.wm_segments)
+            live_meta |= mf_rel
 
             def sfx(c: F.Column) -> F.Column:
                 return F.substring_index(c, "/", -3)
 
-            df = self._manifest_paths_df(sorted(mf_rel), inline)
+            df = self._manifest_paths_df(sorted(mf_rel))
             live_df = None if df is None else df.select("sfx")
             root = os.path.abspath(self.data_dir)
             subdirs = sorted(
@@ -4053,30 +3764,22 @@ class LakeTable:
         ones); the rest keep their files. A new snapshot is committed
         atomically; concurrent readers keep their snapshot."""
         snap = self.current()
+        # targeted compact stays O(selected buckets) in the metadata
+        # plane: a group's files all share its (spec, bucket), so
+        # group-level overlap IS file-level overlap — only the selected
+        # groups' manifests are ever loaded, and the commit below reuses
+        # every other group's manifest by pointer (the StreamDriver's
+        # compact_every maintenance never pays an O(table-files)
+        # metadata read). A full compact empties every group.
         sel = None if buckets is None else set(buckets)
-        # targeted compact on a sharded table stays O(selected buckets)
-        # in the metadata plane: a group's files all share its
-        # (spec, bucket), so group-level overlap IS file-level overlap
-        # — only the selected groups' manifests are ever loaded, and
-        # the commit below reuses every other group's manifest by
-        # pointer (the StreamDriver's compact_every maintenance never
-        # pays an O(table-files) metadata read)
-        lazy = (
-            sel is not None
-            and "files" not in snap.__dict__
-            and snap.__dict__.get("_files_loader") is not None
-        )
-        if lazy:
-            target = []
-            for m in snap.manifest_list:
-                if _file_overlaps(m, sel, snap):
-                    target.extend(_load_manifest(self.meta_dir, m["path"]))
-        else:
-            target = [
-                f
-                for f in snap.files
-                if sel is None or _file_overlaps(f, sel, snap)
-            ]
+        groups = [
+            m
+            for m in snap.manifest_list
+            if sel is None or _file_overlaps(m, sel, snap)
+        ]
+        target = [
+            f for m in groups for f in _load_manifest(self.meta_dir, m["path"])
+        ]
         if not target:
             return {"version": snap.version, "skipped": True}
         touched = sorted(
@@ -4117,38 +3820,18 @@ class LakeTable:
             sort_cols=_sort_order(snap),
             key_col=snap.bucket_col,
         )
-        if lazy:
-            # selected groups are fully rewritten (emptied); compacted
-            # output lands in its current-spec groups — possibly ones
-            # not selected, when a coarser old-spec file's sibling rows
-            # migrate (the delta-append case loads that group's prior
-            # entries once)
-            edits: dict[str, list[dict[str, Any]]] = {
-                m["group"]: []
-                for m in snap.manifest_list
-                if _file_overlaps(m, sel, snap)
-            }
-            by_path = {m["group"]: m["path"] for m in snap.manifest_list}
-            for f in new_files:
-                gk = _group_key(f, snap)
-                if gk not in edits:
-                    edits[gk] = (
-                        _load_manifest(self.meta_dir, by_path[gk])
-                        if gk in by_path
-                        else []
-                    )
-                edits[gk].append(f)
-            new_snap = snap.child()
-            new_snap.__dict__["_group_edits"] = edits
-        else:
-            target_paths = {f["path"] for f in target}
-            new_snap = snap.child(
-                files=[f for f in snap.files if f["path"] not in target_paths]
-                + new_files,
-            )
-        new_snap.operation = "compact"
-        new_snap.__dict__["_data_commit"] = True  # rebase-eligible
-        self._commit(new_snap)
+        # selected groups are fully rewritten (emptied); compacted output
+        # lands in its current-spec groups — possibly ones not selected,
+        # when a coarser old-spec file's sibling rows migrate (that
+        # group's prior entries load once)
+        new_snap = snap.child(operation="compact")
+        self._commit(
+            new_snap,
+            edits=self._edit_groups(
+                snap, new_files, [m["group"] for m in groups]
+            ),
+            data_commit=True,
+        )
         return {
             "version": new_snap.version,
             "buckets": touched,
@@ -4299,7 +3982,6 @@ class LakeTable:
         # num_buckets result rows; Catalyst prunes the recompute down to
         # the (bucket, lsn) columns). The counts feed the skew-aware
         # write plan; the bucket set drives partition pruning.
-        debug = os.environ.get("ETL_DEBUG_MERGE")
         stage_ms: dict[str, int] = {}
         src = self._with_bucket(winners, snap)
         # caller-provided stats are only valid under the bucket spec
@@ -4325,7 +4007,6 @@ class LakeTable:
             batch_stats is None
             and not snap.props.get("write.target-file-rows")
             and not snap.manifest_list
-            and not snap.files
         )
         if defer_stats:
             incoming_counts = {}
@@ -4353,8 +4034,6 @@ class LakeTable:
                 .collect()
             )
             stage_ms["stats"] = int((time.monotonic() - t_stats) * 1000)
-            if debug:
-                print(f"[merge] bucket/lsn stats: {time.monotonic()-t_stats:.1f}s")
             incoming_counts = {r[_BUCKET]: r["n"] for r in stats_rows}
             hi_lsn = max((r["hi"] for r in stats_rows), default=None)
         affected = sorted(incoming_counts)
@@ -4374,31 +4053,20 @@ class LakeTable:
                     f"unknown merge mode {mode!r} "
                     "(copy-on-write | merge-on-read)"
                 )
-            # sharded + still-lazy snapshot: the whole merge (routing,
-            # current-state selection, and the commit below) runs off
-            # manifest summaries + the TOUCHED groups' manifests only —
-            # O(touched buckets) driver metadata, never O(table files)
-            lazy = (
-                "files" not in snap.__dict__
-                and bool(snap.manifest_list)
-                and snap.__dict__.get("_files_loader") is not None
-            )
+            # the whole merge (routing, current-state selection, and the
+            # commit below) runs off manifest summaries + the TOUCHED
+            # groups' manifests only — O(touched buckets) driver
+            # metadata, never O(table files)
             if mode == "merge-on-read":
                 max_delta = int(snap.props.get("write.delta.max-files", 8))
                 n_delta: dict[int, int] = {}
-                if lazy:
-                    # per-group delta counts ride the manifest list; a
-                    # coarse group's count lands on every covered bucket
-                    # (overcount folds early — safe)
-                    for m in snap.manifest_list:
-                        if m.get("deltas"):
-                            for b in _expand_to_current(m, snap):
-                                n_delta[b] = n_delta.get(b, 0) + m["deltas"]
-                else:
-                    for f in snap.files:
-                        if f.get("kind") == "delta":
-                            for b in _expand_to_current(f, snap):
-                                n_delta[b] = n_delta.get(b, 0) + 1
+                # per-group delta counts ride the manifest list; a
+                # coarse group's count lands on every covered bucket
+                # (overcount folds early — safe)
+                for m in snap.manifest_list:
+                    if m.get("deltas"):
+                        for b in _expand_to_current(m, snap):
+                            n_delta[b] = n_delta.get(b, 0) + m["deltas"]
                 fold = [b for b in affected if n_delta.get(b, 0) + 1 > max_delta]
             else:
                 fold = list(affected)
@@ -4581,39 +4249,22 @@ class LakeTable:
         finally:
             if src_cached:
                 src.unpersist()
-        if debug:
-            print(
-                f"[merge] write ({mode}, fold={len(fold)} "
-                f"delta={len(cold)}): {time.monotonic()-t_write:.1f}s"
-            )
         # fold buckets are fully replaced; cold buckets KEEP their
-        # existing base+delta files (the new deltas stack on top)
-        if lazy:
-            # group-edit commit: untouched groups' manifests are reused
-            # by pointer; fold-overlapping groups are emptied (every
-            # entry was rewritten above); new files land in their
-            # current-spec groups, loading at most the touched groups'
-            # prior entries (the delta-append case)
-            edits: dict[str, list[dict[str, Any]]] = {
-                m["group"]: []
+        # existing base+delta files (the new deltas stack on top):
+        # untouched groups' manifests are reused by pointer,
+        # fold-overlapping groups are emptied (every entry was rewritten
+        # above), and new files land in their current-spec groups,
+        # loading at most the touched groups' prior entries (the
+        # delta-append case)
+        edits = self._edit_groups(
+            snap,
+            new_files,
+            [
+                m["group"]
                 for m in snap.manifest_list
                 if _file_overlaps(m, fold_set, snap)
-            }
-            by_path = {m["group"]: m["path"] for m in snap.manifest_list}
-            for f in new_files:
-                gk = _group_key(f, snap)
-                if gk not in edits:
-                    edits[gk] = (
-                        _load_manifest(self.meta_dir, by_path[gk])
-                        if gk in by_path
-                        else []
-                    )
-                edits[gk].append(f)
-        else:
-            fold_paths = {f["path"] for f in cur_files}
-            kept = [
-                f for f in snap.files if f["path"] not in fold_paths
-            ]
+            ],
+        )
 
         applied = dict(snap.applied)
         if run_id is not None and batch_id is not None:
@@ -4629,29 +4280,17 @@ class LakeTable:
             field_ids[f.name] = nfi
             epoch_names.setdefault(str(snap.epoch), {})[str(nfi)] = f.name
             nfi += 1
-        child_kw: dict[str, Any] = dict(
+        new_snap = snap.child(
             schema_json=schema_json,
             applied=applied,
             watermark_lsn=max(snap.watermark_lsn, int(hi_lsn if hi_lsn is not None else -1)),
             field_ids=field_ids,
             next_field_id=nfi,
             epoch_names=epoch_names,
+            operation=operation,
         )
-        if not lazy:
-            child_kw["files"] = kept + new_files
-        child_kw["operation"] = operation
-        new_snap = snap.child(**child_kw)
-        if lazy:
-            new_snap.__dict__["_group_edits"] = edits
-        if new_snap.watermark_lsn > snap.watermark_lsn:
-            new_snap.wm_history.append(
-                [new_snap.version, new_snap.watermark_lsn]
-            )
-            # _commit retargets this entry to the slot actually taken
-            new_snap.__dict__["_wm_pending"] = True
-        new_snap.__dict__["_data_commit"] = True  # rebase-eligible
         t_commit = time.monotonic()
-        self._commit(new_snap)
+        rebased = self._commit(new_snap, edits=edits, data_commit=True)
         stage_ms["commit"] = int((time.monotonic() - t_commit) * 1000)
         rows_per_bucket: dict[int, int] = {}
         for f in new_files:
@@ -4662,7 +4301,7 @@ class LakeTable:
             "mode": mode,
             # True when a same-branch slot race was resolved by the
             # metadata-level rebase instead of redoing the merge
-            "rebased": bool(new_snap.__dict__.get("_rebased")),
+            "rebased": rebased,
             "buckets_touched": affected,
             "folded_buckets": fold,
             "delta_buckets": cold,

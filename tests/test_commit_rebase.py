@@ -141,6 +141,35 @@ def test_two_streams_on_disjoint_buckets_both_commit(
     assert [v for _, v in snap.wm_history[-2:]] == [5, 7]
 
 
+def test_slot_shift_by_other_branch_keeps_wm_history(
+    spark, tmp_path, monkeypatch
+):
+    """A main-branch merge whose slot is taken by a concurrent commit on
+    ANOTHER branch lands in the next slot without a rebase; its
+    watermark-history entry names the slot it actually took, so
+    changes(with_version=True) attributes its rows to that version."""
+    p = str(tmp_path / "t")
+    t = LakeTable.create(spark, p, DDL, num_buckets=4)
+    t.merge(_w(spark, [("c1", 0, 1, "U", "v0")]), run_id="r", batch_id=0)
+    t.create_branch("side")
+    v0 = t.current().version
+    side = LakeTable.load(spark, p).on_branch("side")
+    fired = _race(
+        monkeypatch, t, lambda: side.append(_w(spark, [("c9", 0, 50, "U", "s")]))
+    )
+    stats = t.merge(_w(spark, [("c2", 0, 7, "U", "v1")]), run_id="r", batch_id=1)
+    assert fired["done"]
+    assert stats["rebased"] is False
+    assert stats["version"] == v0 + 2  # v0+1 went to the branch commit
+    snap = t.current()
+    assert snap.version == v0 + 2
+    assert snap.wm_history[-1] == [v0 + 2, 7]
+    feed = t.changes(v0, with_version=True).toPandas()
+    assert feed.set_index("conv_id")["_commit_version"].to_dict() == {
+        "c2": v0 + 2
+    }
+
+
 def test_rebase_keeps_concurrent_tag(spark, tmp_path, monkeypatch):
     """A metadata-only competitor (create_tag) has an empty data
     footprint: the merge rebases over it and the tag survives."""

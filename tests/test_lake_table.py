@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from etl_rs_spark.errors import LoadError
 from etl_rs_spark.sinks.lake import LakeTable, bucket_expr
+from tests.util import count_manifest_loads
 
 DDL = "conv_id string, turn_idx int, ts timestamp"
 
@@ -126,7 +127,7 @@ def test_compact_and_expire(spark, tmp_path):
 
 
 def test_expire_snapshots_distributed_matches_driver_path(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """Distributed expiry (Iceberg's expire_snapshots Spark action) —
     executors parse live + dead-only manifests, anti-join picks the
@@ -137,8 +138,6 @@ def test_expire_snapshots_distributed_matches_driver_path(
     distributed side, and both tables still read all rows."""
     import glob as _glob
     import os as _os
-
-    import etl_rs_spark.sinks.lake as lake_mod
 
     tables = {}
     for mode in ("drv", "dist"):
@@ -160,18 +159,10 @@ def test_expire_snapshots_distributed_matches_driver_path(
         }
 
     exp_drv = tables["drv"].expire_snapshots(keep_last=1)
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    exp_dist = tables["dist"].expire_snapshots(
-        keep_last=1, distributed=True
-    )
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        exp_dist = tables["dist"].expire_snapshots(
+            keep_last=1, distributed=True
+        )
     assert loads == []  # executors parsed the manifests, not the driver
     assert exp_dist == exp_drv
     assert exp_dist["files_deleted"] > 0
@@ -369,7 +360,7 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
 
 
 def test_merge_loads_only_touched_groups_manifests(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """A merge on a sharded table never hydrates the full manifest set:
     driver-side metadata READS during the merge are O(touched groups)
@@ -377,8 +368,6 @@ def test_merge_loads_only_touched_groups_manifests(
     32-group table — and the commit reuses every other group's
     manifest by pointer."""
     import datetime as dt
-
-    import etl_rs_spark.sinks.lake as lake_mod
 
     t = LakeTable.create(
         spark,
@@ -395,20 +384,12 @@ def test_merge_loads_only_touched_groups_manifests(
     )
     t.merge(wide, run_id="r", batch_id=0)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    one = spark.createDataFrame(
-        [("c7", 0, dt.datetime(2025, 1, 1), 10_000, "U")],
-        "conv_id string, turn_idx int, ts timestamp, lsn long, op string",
-    )
-    res = t.merge(one, run_id="r", batch_id=1)
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        one = spark.createDataFrame(
+            [("c7", 0, dt.datetime(2025, 1, 1), 10_000, "U")],
+            "conv_id string, turn_idx int, ts timestamp, lsn long, op string",
+        )
+        res = t.merge(one, run_id="r", batch_id=1)
     assert len(res["buckets_touched"]) == 1
     assert len(loads) == 1, loads  # only the touched group's manifest
     assert t.read().where("conv_id = 'c7'").collect()[0].ts == dt.datetime(
@@ -472,14 +453,13 @@ def test_expire_snapshots_collects_dead_manifests(spark, tmp_path):
 
 
 def test_append_is_group_edit_on_sharded_table(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """A blind append on a sharded table never hydrates the full file
     list: only the groups RECEIVING files load their prior manifest
     (one here), every other group's manifest is reused by pointer, and
     exactly one new manifest is written — append-only ingest stays
     O(appended buckets) in the metadata plane."""
-    import etl_rs_spark.sinks.lake as lake_mod
 
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=32)
     wide = spark.range(320).select(
@@ -492,19 +472,11 @@ def test_append_is_group_edit_on_sharded_table(
     t.merge(wide, run_id="r", batch_id=0)
     before = _manifest_files(t)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    one = spark.createDataFrame(
-        [("c7", 99)], "conv_id string, turn_idx int"
-    ).withColumn("ts", F.timestamp_seconds(F.lit(1700099999)))
-    t.append(one)
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        one = spark.createDataFrame(
+            [("c7", 99)], "conv_id string, turn_idx int"
+        ).withColumn("ts", F.timestamp_seconds(F.lit(1700099999)))
+        t.append(one)
     assert len(loads) == 1, loads  # only the receiving group's manifest
     assert len(_manifest_files(t) - before) == 1
     assert t.read().count() == 321
@@ -512,14 +484,13 @@ def test_append_is_group_edit_on_sharded_table(
 
 
 def test_targeted_compact_loads_only_selected_groups(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """compact(buckets=[b]) on a sharded table loads exactly the
     selected groups' manifests (here 1 of 32), folds that bucket's
     small files into one, and reuses every other group's manifest by
     pointer — the StreamDriver's periodic maintenance never pays an
     O(table-files) metadata read."""
-    import etl_rs_spark.sinks.lake as lake_mod
     from etl_rs_spark.functions.xxh64 import bucket_of
 
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=32)
@@ -551,30 +522,21 @@ def test_targeted_compact_loads_only_selected_groups(
     n_in_group = files_in(b)
     assert n_in_group == base_n + 2
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    res = t.compact(buckets=[b])
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        res = t.compact(buckets=[b])
     assert res["files_before"] == n_in_group and res["files_after"] == 1
     assert len(loads) == 1, loads  # only the selected group's manifest
     assert t.read().count() == 322
     assert t.lookup("c7").count() == 3
 
 
-def test_set_num_buckets_lazy_zero_manifest_io(spark, tmp_path, monkeypatch):
+def test_set_num_buckets_lazy_zero_manifest_io(spark, tmp_path):
     """Spec evolution on a sharded table is a PURE metadata commit:
     zero manifests read (the live-spec check uses manifest-list
     summaries) and zero manifests written (hydration stamps each
     entry's spec from its manifest's group, so old manifests need no
     rewrite). Reads, bucket-restricted reads and lookups stay row-exact
     across the mixed-spec window."""
-    import etl_rs_spark.sinks.lake as lake_mod
 
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=4)
     wide = spark.range(60).select(
@@ -587,16 +549,8 @@ def test_set_num_buckets_lazy_zero_manifest_io(spark, tmp_path, monkeypatch):
     t.merge(wide, run_id="r", batch_id=0)
     before = _manifest_files(t)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    t.set_num_buckets(8)
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        t.set_num_buckets(8)
     assert loads == []  # zero manifest reads
     assert _manifest_files(t) == before  # zero manifest writes
     snap = t.current()
@@ -625,7 +579,7 @@ def test_set_num_buckets_lazy_zero_manifest_io(spark, tmp_path, monkeypatch):
 
 
 def test_inspect_files_is_distributed_on_sharded_table(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """The files metadata table on a sharded snapshot is served by a
     DISTRIBUTED read of the manifest files (Iceberg's files table):
@@ -633,7 +587,6 @@ def test_inspect_files_is_distributed_on_sharded_table(
     rows match an independently-built expectation from the hydrated
     list, across mixed write specs, blooms, and a post-evolution
     append."""
-    import etl_rs_spark.sinks.lake as lake_mod
     from etl_rs_spark.sinks.lake import _file_spec
 
     t = LakeTable.create(
@@ -658,23 +611,15 @@ def test_inspect_files_is_distributed_on_sharded_table(
         ).withColumn("ts", F.timestamp_seconds(F.lit(1700099999)))
     )
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    got = {
-        (
-            r.path, r.bucket, r.rows, r.min_lsn, r.max_lsn,
-            r.min_key, r.max_key, r.kind, r.spec_n, r.epoch,
-            r.has_key_bloom,
-        )
-        for r in t.inspect_files().collect()
-    }
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
+    with count_manifest_loads() as loads:
+        got = {
+            (
+                r.path, r.bucket, r.rows, r.min_lsn, r.max_lsn,
+                r.min_key, r.max_key, r.kind, r.spec_n, r.epoch,
+                r.has_key_bloom,
+            )
+            for r in t.inspect_files().collect()
+        }
     assert loads == []  # executors parsed the manifests, not the driver
     snap = t.current()
     want = {
@@ -694,7 +639,7 @@ def test_inspect_files_is_distributed_on_sharded_table(
 
 
 def test_changes_on_sharded_mor_loads_only_changed_groups(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """An incremental changes() window on a sharded merge-on-read table
     prunes at the MANIFEST level even when unresolved deltas exist:
@@ -702,7 +647,6 @@ def test_changes_on_sharded_mor_loads_only_changed_groups(
     wholly at or below the from-watermark are never loaded, and only
     the dirty group's manifest is read for the LWW resolve — O(changed
     groups), never the table's full file list. Feed stays net-exact."""
-    import etl_rs_spark.sinks.lake as lake_mod
 
     t = LakeTable.create(
         spark,
@@ -727,16 +671,8 @@ def test_changes_on_sharded_mor_loads_only_changed_groups(
     t.merge(one, run_id="r", batch_id=1)
     assert any(m.get("deltas") for m in t.current().manifest_list)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    feed = t.changes(v1).toPandas()
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        feed = t.changes(v1).toPandas()
     # only the dirty group's manifest (the one holding c7's delta);
     # the other 31 groups sit below the watermark and are never loaded
     assert len(set(loads)) == 1, loads
@@ -859,7 +795,7 @@ def test_vacuum_orphans_removes_only_unreferenced(spark, tmp_path):
     assert t.read().count() == 3
 
 
-def test_vacuum_orphans_distributed(spark, tmp_path, monkeypatch):
+def test_vacuum_orphans_distributed(spark, tmp_path):
     """The distributed vacuum (Iceberg's remove_orphan_files as a
     Spark action) finds the same orphans as the driver path with ZERO
     driver-side manifest loads and zero file-list hydrations: listing
@@ -869,8 +805,6 @@ def test_vacuum_orphans_distributed(spark, tmp_path, monkeypatch):
     as before — across a spec evolution and a legacy-style check."""
     import glob as _glob
     import os as _os
-
-    import etl_rs_spark.sinks.lake as lake_mod
 
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=4)
     wide = spark.range(50).select(
@@ -907,16 +841,8 @@ def test_vacuum_orphans_distributed(spark, tmp_path, monkeypatch):
     _os.utime(old_deep, stale)
     _os.utime(old_root, stale)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    stats = t.vacuum_orphans(distributed=True)
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        stats = t.vacuum_orphans(distributed=True)
     assert loads == []  # executors parsed the manifests, not the driver
     assert stats["orphans_deleted"] == 2
     assert stats["skipped_young"] == 1
@@ -2121,41 +2047,31 @@ def test_rename_bucket_column_keeps_pruning(spark, tmp_path):
     assert touched and touched <= allowed
 
 
-def test_legacy_manifest_synthesizes_field_ids(spark, tmp_path):
-    """A pre-field-id manifest loads with ids synthesized from schema
-    order, and evolution works on top of it."""
+def test_retired_inline_files_format_fails_loud(spark, tmp_path):
+    """A version file carrying an inline ``files`` array (the retired
+    pre-manifest format) is refused with LoadError instead of being
+    skipped as an unknown key, which would read the table as empty.
+    Field ids are still synthesized from schema order at create."""
     import json as _json
 
     from etl_rs_spark.sinks.lake import Snapshot
 
     t = LakeTable.create(spark, str(tmp_path / "t"), EVO_DDL, num_buckets=4)
     t.append(_evo_rows(spark, 20))
-    # strip the field-id metadata from the manifest on disk (legacy shape)
     snap = t.current()
-    vpath = os.path.join(t.meta_dir, f"version-{snap.version:08d}.json")
-    d = _json.loads(open(vpath).read())
-    for k in ("field_ids", "next_field_id", "epoch", "epoch_names"):
-        d.pop(k, None)
-    # legacy manifests carried files INLINE (no manifest sharding):
-    # rebuild that shape from the current snapshot's hydrated entries
-    d["files"] = [
-        {k: v for k, v in f.items() if not k.startswith("_")}
-        for f in snap.files
-    ]
-    d.pop("manifest_list", None)
-    for f in d["files"]:
-        f.pop("epoch", None)
-    os.remove(vpath)
-    with open(vpath, "w") as fh:
-        fh.write(_json.dumps(d))
-    t2 = LakeTable.load(spark, str(tmp_path / "t"))
-    s = t2.current()
-    assert s.field_ids == {
+    assert snap.field_ids == {
         "conv_id": 1, "turn_idx": 2, "text": 3, "score": 4, "ts": 5
     }
-    assert t2.read().count() == 20
-    t2.rename_column("text", "body")
-    assert t2.read().where(F.col("body").isNotNull()).count() == 20
+    vpath = os.path.join(t.meta_dir, f"version-{snap.version:08d}.json")
+    d = _json.loads(open(vpath).read())
+    d["files"] = list(snap.files)
+    d.pop("manifest_list")
+    with open(vpath, "w") as fh:
+        fh.write(_json.dumps(d))
+    with pytest.raises(LoadError, match="inline 'files'"):
+        Snapshot.from_json(open(vpath).read())
+    with pytest.raises(LoadError, match="inline 'files'"):
+        LakeTable.load(spark, str(tmp_path / "t"))
 
 
 # ------------------------------------------------ bucket-spec evolution --
@@ -2489,12 +2405,11 @@ def test_write_sort_order_sorts_within_files(spark, tmp_path):
     assert _sort_order(t3.current()) == ["conv_id"]
 
 
-def test_inspect_manifests_and_partitions(spark, tmp_path, monkeypatch):
+def test_inspect_manifests_and_partitions(spark, tmp_path):
     """Iceberg's t.manifests / t.partitions metadata tables: served
     entirely from the snapshot's manifest-list summaries — zero
     manifest files opened — and exact against the per-file view,
     including delta chains and a mid-life bucket-spec evolution."""
-    import etl_rs_spark.sinks.lake as lake_mod
 
     ddl = "conv_id string, turn_idx int, text string, ts timestamp"
 
@@ -2525,20 +2440,12 @@ def test_inspect_manifests_and_partitions(spark, tmp_path, monkeypatch):
     t.set_num_buckets(8)  # metadata-only: old groups stay under spec 4
     t.merge(_w([("cX", 99, 200, "U", "x")]), run_id="r", batch_id=2)
 
-    loads = []
-    real = lake_mod._load_manifest
-
-    def counting(meta_dir, relpath):
-        loads.append(relpath)
-        return real(meta_dir, relpath)
-
-    monkeypatch.setattr(lake_mod, "_load_manifest", counting)
-    mf = t.inspect_manifests().collect()
-    parts = {
-        (r["spec_n"], r["bucket"]): r
-        for r in t.inspect_partitions().collect()
-    }
-    monkeypatch.setattr(lake_mod, "_load_manifest", real)
+    with count_manifest_loads() as loads:
+        mf = t.inspect_manifests().collect()
+        parts = {
+            (r["spec_n"], r["bucket"]): r
+            for r in t.inspect_partitions().collect()
+        }
     assert loads == []  # summaries only, no manifest hydration
 
     # exact against the per-file view (distributed manifest read)

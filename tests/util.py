@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pandas.testing as pdt
 
@@ -67,3 +69,35 @@ def executed_leaf_scans(spark, action) -> list[str]:
             ):
                 leaves.append(node.name())
     return leaves
+
+
+@contextlib.contextmanager
+def count_manifest_loads():
+    """Record every manifest file the driver loads inside the block:
+    yields the list of manifest paths (relative to meta/) passed to
+    ``sinks.lake._load_manifest``, in load order. Executor-side
+    manifest reads (distributed metadata tables, expiry, vacuum) do
+    not go through it and are not counted."""
+    import etl_rs_spark.sinks.lake as lake
+
+    loads: list[str] = []
+    real = lake._load_manifest
+
+    def counting(meta_dir, relpath):
+        loads.append(relpath)
+        return real(meta_dir, relpath)
+
+    lake._load_manifest = counting
+    try:
+        yield loads
+    finally:
+        lake._load_manifest = real
+
+
+def manifest_pointer_diff(table, v_from: int, v_to: int) -> set[str]:
+    """Manifest groups whose pointer differs between two versions of
+    ``table``: added, removed or rewritten. Every other group's
+    manifest file is shared by both versions."""
+    a = {m["group"]: m["path"] for m in table.snapshot(v_from).manifest_list}
+    b = {m["group"]: m["path"] for m in table.snapshot(v_to).manifest_list}
+    return {g for g in a.keys() | b.keys() if a.get(g) != b.get(g)}
