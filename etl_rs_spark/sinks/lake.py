@@ -212,6 +212,16 @@ def _footer_stats(
 #: hash-function count for the manifest key bloom (write + probe side)
 _KB_K = 3
 
+#: scale-adaptive write-parallelism floor (rows per write task):
+#: splitting a write below this many rows per task costs more in task
+#: scheduling, parquet writer setup and tiny output files than the
+#: parallelism buys (a 15k-row batch salted across 32 cores is 34 files
+#: of ~450 rows). Only binds when the batch is smaller than cores x
+#: floor — a production-scale write always clears it. An explicit
+#: ``write.target-file-rows`` still wins (file-size control is the
+#: caller's call).
+_WRITE_MIN_TASK_ROWS = 4096
+
 
 def _file_may_contain(
     f: dict[str, Any],
@@ -451,16 +461,67 @@ def _needs_structural_align(src: T.DataType, dst: T.DataType) -> bool:
     return False
 
 
-def _with_meta_cols(schema: T.StructType) -> T.StructType:
-    """User schema + hidden (_lsn, _deleted, _sub) — fresh object, no
-    mutation. Files written before the _sub tier read it as NULL."""
+def _with_meta_cols(logical: Sequence[T.StructField]) -> T.StructType:
+    """The schema a data-file scan produces: every logical field,
+    nullable (a file may predate it), then the hidden (_lsn, _deleted,
+    _sub). Files written before the _sub tier read it as NULL."""
     return T.StructType(
-        list(schema.fields)
+        [T.StructField(f.name, f.dataType, True) for f in logical]
         + [
             T.StructField(LSN_COL, T.LongType()),
             T.StructField(DELETED_COL, T.BooleanType()),
             T.StructField(SUB_COL, T.IntegerType()),
         ]
+    )
+
+
+def _epoch_columns(
+    snap: "Snapshot",
+    fs: list[dict[str, Any]],
+    logical: Sequence[T.StructField],
+) -> list[tuple[list[dict[str, Any]], list[tuple[T.StructField, str | None]]]]:
+    """Files grouped by write epoch, each group paired with the PHYSICAL
+    parquet column that serves every logical field: renames relabel by
+    stable field id, and a field that did not exist at the epoch (added
+    later, or a re-add of a retired name) maps to None and reads as
+    NULL — never from a stale physical column that happens to share the
+    name. Files of the snapshot's current epoch carry the logical names
+    (renames/drops bump the epoch), so an all-current file set is one
+    group with identity names. Both read tiers translate through
+    this."""
+    by_epoch: dict[int, list[dict[str, Any]]] = {}
+    for f in fs:
+        by_epoch.setdefault(int(f.get("epoch", 0)), []).append(f)
+    if set(by_epoch) == {snap.epoch}:
+        return [(fs, [(lf, lf.name) for lf in logical])]
+    out = []
+    for e in sorted(by_epoch):
+        phys_by_id = {
+            int(i): n for i, n in snap.epoch_names.get(str(e), {}).items()
+        }
+        cols = []
+        for lf in logical:
+            fid = snap.field_ids.get(lf.name)
+            cols.append((lf, phys_by_id.get(fid) if fid is not None else None))
+        out.append((by_epoch[e], cols))
+    return out
+
+
+def _split_dirty(
+    snap: "Snapshot", files: list[dict[str, Any]]
+) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
+    """(clean, dirty) split of a read's files: a file is dirty when its
+    keys share a CURRENT-spec bucket (_expand_to_current) with a delta
+    file in the set, so a delta always resolves against the base files
+    holding its keys, even across a bucket-spec evolution. Clean files
+    hold resolved one-row-per-key state and are read as they are."""
+    dirty: set[int] = set()
+    for f in files:
+        if f.get("kind") == "delta":
+            dirty |= _expand_to_current(f, snap)
+    return (
+        [f for f in files if not _file_overlaps(f, dirty, snap)],
+        [f for f in files if _file_overlaps(f, dirty, snap)],
     )
 
 
@@ -668,6 +729,176 @@ def _resolve_plan(
     agg = F.max(F.struct(*order_exprs, *[_ride(c) for c in rest])).alias("__w")
     out = tuple(F.col(c) if c in key_cols else _unride(c) for c in schema.names)
     return agg, out
+
+
+# ------------------------------------------- driver-local lookup tier --
+#: Largest candidate row count — the manifest ``rows`` of the files a
+#: lookup selects, summed — that ``lookup()`` resolves on the driver.
+#: Set at the measured crossover of the two tiers: a one-file bucket of
+#: conversation rows, one 100-row key, local[4], median ms Spark/local —
+#: key-sorted file: 10^5 rows 174/42, 10^6 155/92, 2x10^6 187/203,
+#: 4x10^6 107/312; unsorted: 10^6 269/85, 4x10^6 488/374. The driver
+#: decodes every row group the statistics keep, so past ~10^6 candidate
+#: rows it loses to the Spark scan.
+_LOCAL_LOOKUP_MAX_ROWS = 1_000_000
+
+#: bucket-column dtype -> the Python type of the lookup values the
+#: driver-local tier filters on (the driver-side xxhash64 set)
+_LOCAL_KEY_TYPES = {
+    "tinyint": int,
+    "smallint": int,
+    "int": int,
+    "bigint": int,
+    "string": str,
+}
+
+
+class _NotLocal(Exception):
+    """The driver-local lookup tier cannot reproduce the Spark plan's
+    rows exactly for this table state; the caller runs the Spark
+    plan."""
+
+
+def _arrow_widen(col: Any, at: Any) -> Any:
+    """A file column under its logical Arrow type ``at``: as it is when
+    the types are equal, else a top-level cast for the scalar widenings
+    the Spark parquet reader performs (integer and float width, decimal
+    precision, timestamp unit and zone, large strings). Anything else —
+    nested-struct widening, an unsigned or lossy cast — raises
+    _NotLocal."""
+    import pyarrow as pa
+
+    src = col.type
+    if src.equals(at):
+        return col
+    pt = pa.types
+    ok = not pt.is_nested(src) and not pt.is_nested(at) and (
+        (
+            pt.is_signed_integer(src)
+            and pt.is_signed_integer(at)
+            and src.bit_width <= at.bit_width
+        )
+        or (
+            pt.is_floating(src)
+            and pt.is_floating(at)
+            and src.bit_width <= at.bit_width
+        )
+        or (
+            pt.is_decimal(src)
+            and pt.is_decimal(at)
+            and src.scale == at.scale
+            and src.precision <= at.precision
+        )
+        or (pt.is_timestamp(src) and pt.is_timestamp(at))
+        or (
+            (pt.is_string(src) or pt.is_large_string(src))
+            and (pt.is_string(at) or pt.is_large_string(at))
+        )
+    )
+    if not ok:
+        raise _NotLocal(f"no top-level cast from {src} to {at}")
+    try:
+        return col.cast(at)  # safe: a truncating timestamp cast raises
+    except pa.ArrowInvalid as e:
+        raise _NotLocal(str(e)) from e
+
+
+def _arrow_read(
+    path: str,
+    cols: list[tuple[T.StructField, str | None]],
+    key_col: str,
+    key_vals: Any,
+    schema: Any,
+) -> Any:
+    """The rows of one data file whose bucket column (logical name
+    ``key_col``) holds one of ``key_vals``, as an Arrow table of
+    ``schema`` (logical columns, then the hidden ones). Each logical
+    field comes from its physical column (``cols``, from
+    ``_epoch_columns``) through ``_arrow_widen``; a column the file
+    lacks reads as NULL, as in the Spark parquet reader. The key filter
+    is pushed into the reader, so row groups whose statistics exclude
+    every value are never decoded."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    dset = ds.dataset(path, format="parquet")
+    have = set(dset.schema.names)
+    phys = [pn for _, pn in cols] + [LSN_COL, DELETED_COL, SUB_COL]
+    lower = {n.lower() for n in have}
+    for pn in phys:
+        if pn is not None and pn not in have and pn.lower() in lower:
+            # Spark resolves parquet names case-insensitively
+            raise _NotLocal(f"{path}: column {pn!r} differs in case")
+    key_phys = next(pn for lf, pn in cols if lf.name == key_col)
+    if key_phys not in have:
+        return schema.empty_table()  # NULL keys match no lookup value
+    t = dset.to_table(
+        columns=[pn for pn in phys if pn in have],
+        filter=pc.field(key_phys).isin(key_vals),
+    )
+    return pa.Table.from_arrays(
+        [
+            _arrow_widen(t.column(pn), fld.type)
+            if pn in have
+            else pa.nulls(t.num_rows, fld.type)
+            for pn, fld in zip(phys, schema)
+        ],
+        schema=schema,
+    )
+
+
+def _arrow_lww(t: Any, key_cols: Sequence[str], ts_col: str) -> Any:
+    """``_lww_resolve`` on an Arrow table: one row per key, the greatest
+    (ts, coalesce(_lsn, -1), coalesce(_sub, 0)) with NULL ts lowest, as
+    in Spark's struct ordering. The output carries the coalesced order
+    tiers and a winning tombstone's payload nulled, exactly as the Spark
+    projection emits them. Raises _NotLocal when two non-identical rows
+    of one key tie on every order tier: Spark's ``max(struct)`` then
+    breaks the tie on the payload, which is not reproduced here."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = t.num_rows
+    if n == 0:
+        return t
+    tiers = (ts_col, LSN_COL, SUB_COL)
+    for c, dflt in ((LSN_COL, -1), (SUB_COL, 0)):
+        t = t.set_column(
+            t.schema.get_field_index(c), t.schema.field(c), pc.fill_null(t[c], dflt)
+        )
+    order = [(c, "ascending") for c in (*key_cols, *tiers)]
+    t = t.take(pc.sort_indices(t, sort_keys=order, null_placement="at_start"))
+
+    def same(c: str) -> Any:  # row i equals row i+1 on c; NULL == NULL
+        a, b = t[c].slice(0, n - 1), t[c].slice(1)
+        return pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+
+    same_key = functools.reduce(pc.and_, [same(c) for c in key_cols])
+    tied = functools.reduce(pc.and_, [same_key, *[same(c) for c in tiers]])
+    if pc.any(tied).as_py():
+        rest = [c for c in t.column_names if c not in (*key_cols, *tiers)]
+        rows = t.select(rest).to_pylist()
+        for i in pc.indices_nonzero(tied).to_pylist():
+            if rows[i] != rows[i + 1]:
+                raise _NotLocal("two rows of one key tie on every order tier")
+    last = pa.concat_arrays(
+        [pc.invert(same_key).combine_chunks(), pa.array([True])]
+    )
+    won = t.filter(last)
+    # a winning tombstone keeps its order tiers; its payload reads NULL
+    keep = pc.if_else(
+        pc.fill_null(won[DELETED_COL], False),
+        pa.scalar(None, pa.int64()),
+        pa.array(range(won.num_rows), pa.int64()),
+    )
+    for i, c in enumerate(won.column_names):
+        if c not in (*key_cols, *tiers, DELETED_COL):
+            won = won.set_column(i, won.schema.field(i), won[c].take(keep))
+    return won
 
 
 @dataclass
@@ -1604,51 +1835,34 @@ class LakeTable:
         and re-aliased — one extra scan per SURVIVING old epoch, which
         compaction retires."""
         logical = (schema if schema is not None else snap.schema()).fields
-        out_schema = _with_meta_cols(
-            T.StructType([T.StructField(f.name, f.dataType, True) for f in logical])
-        )
+        out_schema = _with_meta_cols(logical)
         if not fs:
             # LIMIT 0 plans as an empty local relation: no Python RDD,
             # no task, and a union drops it (PropagateEmptyRelation)
             return self.spark.range(0).select(
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in out_schema]
             ).limit(0)
-        by_epoch: dict[int, list[dict[str, Any]]] = {}
-        for f in fs:
-            by_epoch.setdefault(int(f.get("epoch", 0)), []).append(f)
-        if set(by_epoch) == {snap.epoch}:
+        groups = _epoch_columns(snap, fs, logical)
+        if len(groups) == 1 and all(pn == lf.name for lf, pn in groups[0][1]):
             return self.spark.read.schema(out_schema).parquet(
                 *[f["path"] for f in fs]
             )
-        meta_fields = [
-            T.StructField(LSN_COL, T.LongType(), True),
-            T.StructField(DELETED_COL, T.BooleanType(), True),
-            T.StructField(SUB_COL, T.IntegerType(), True),
-        ]
+        meta_fields = out_schema.fields[-3:]
         parts: list[DataFrame] = []
-        for e in sorted(by_epoch):
-            phys_by_id = {
-                int(i): n
-                for i, n in snap.epoch_names.get(str(e), {}).items()
-            }
+        for group, cols in groups:
             read_fields: list[T.StructField] = []
             sel: list[F.Column] = []
-            for lf in logical:
-                fid = snap.field_ids.get(lf.name)
-                pn = phys_by_id.get(fid) if fid is not None else None
+            for lf, pn in cols:
                 if pn is not None:
                     # current type (covers in-place promotions), the
                     # epoch's physical name
                     read_fields.append(T.StructField(pn, lf.dataType, True))
                     sel.append(F.col(pn).alias(lf.name))
                 else:
-                    # field didn't exist at this epoch (added later, or
-                    # a re-add of a retired name): NULL — never read a
-                    # stale physical column that happens to share the name
                     sel.append(F.lit(None).cast(lf.dataType).alias(lf.name))
             df = self.spark.read.schema(
                 T.StructType(read_fields + meta_fields)
-            ).parquet(*[f["path"] for f in by_epoch[e]])
+            ).parquet(*[f["path"] for f in group])
             parts.append(
                 df.select(
                     *sel, F.col(LSN_COL), F.col(DELETED_COL), F.col(SUB_COL)
@@ -1666,26 +1880,12 @@ class LakeTable:
         buckets: Sequence[int] | None = None,
         as_of_ms: int | None = None,
         ts_range: tuple[Any, Any] | None = None,
-        key_values: Sequence[Any] | None = None,
-        key_hashes: Sequence[Sequence[int]] | None = None,
     ) -> DataFrame:
         """Read the table's current (LWW-resolved, tombstone-filtered)
         state, optionally restricted to ``buckets`` (manifest-pruned)
         and/or an event-time window ``ts_range=(lo, hi)`` over the
         first order column (each bound a datetime, ISO string, or None
-        for open-ended).
-
-        ``key_values`` restricts the result to rows whose bucket-column
-        value is in the list AND file-skips on the manifest's per-file
-        key bounds (``min_key``/``max_key``, Iceberg's lower/upper
-        bounds): a file whose key range excludes every sought value is
-        never opened. Safe for any file mix — a file without a key can
-        neither produce nor supersede (LWW) a row of that key, and
-        tombstones carry their real key so deletes are never hidden by
-        the prune. The residual ``isin`` filter keeps conservatively
-        retained files (missing bounds) row-exact. ``lookup()`` adds
-        the bucket-hash prune on top; at 10^10 rows the combination
-        reads O(files actually holding the conversation), not O(bucket).
+        for open-ended). Key-restricted reads are ``lookup()``.
 
         ``ts_range`` is Iceberg-style DATA SKIPPING, not just a filter:
         the manifest stores each file's min/max event time (parquet
@@ -1707,44 +1907,91 @@ class LakeTable:
                 raise LoadError("pass version OR as_of_ms, not both")
             version = self.version_as_of(as_of_ms)
         snap = self.current() if version is None else self.snapshot(version)
+        files, mixed = self._select_files(
+            snap,
+            buckets=buckets,
+            ts_lo=ts_range[0] if ts_range is not None else None,
+        )
+        return self._spark_read(
+            snap,
+            files,
+            include_meta,
+            buckets=buckets if mixed else None,
+            ts_range=ts_range,
+        )
+
+    def _select_files(
+        self,
+        snap: Snapshot,
+        buckets: Sequence[int] | None = None,
+        key_values: list[Any] | None = None,
+        key_hashes: Sequence[Sequence[int]] | None = None,
+        ts_lo: Any = None,
+    ) -> tuple[list[dict[str, Any]], bool]:
+        """The data files a read must open, by metadata alone: the
+        manifest-level bucket prune, then the per-file key prune, then
+        the event-time lower bound (``ts_lo``; see ``read``). Returns
+        the files and whether any of them was written under a bucket
+        spec other than the current one — such a file also holds
+        sibling buckets' keys, so a bucket-restricted read needs a
+        residual hash filter to stay row-exact across spec evolution.
+        Every read tier selects its files here.
+
+        ``key_values`` (bucket-column values) skips files whose
+        manifest key bounds (``min_key``/``max_key``, Iceberg's
+        lower/upper bounds) or key bloom (``key_hashes``, see
+        ``_file_may_contain``) exclude every sought value. Safe for any
+        file mix — a file without a key can neither produce nor
+        supersede (LWW) a row of that key, and tombstones carry their
+        real key so deletes are never hidden by the prune. Callers keep
+        a residual key filter, so conservatively retained files
+        (missing bounds) stay row-exact."""
         mixed = False
         if buckets is not None:
             wanted = set(buckets)
             # sharded snapshots load only the admitted groups' manifests
             files = self._candidate_files(snap, buckets=wanted)
             files = [f for f in files if _file_overlaps(f, wanted, snap)]
-            # a file written under a coarser (pre-evolution) spec also
-            # holds sibling buckets' keys; a residual hash filter keeps
-            # bucket-restricted reads row-exact across spec evolution
             mixed = any(_file_spec(f, snap) != snap.num_buckets for f in files)
         else:
             files = snap.files
-        kvals: list[Any] | None = None
         if key_values is not None:
-            kvals = list(key_values)
             files = [
-                f for f in files if _file_may_contain(f, kvals, key_hashes)
+                f for f in files if _file_may_contain(f, key_values, key_hashes)
             ]
-        lo = hi = None
-        if ts_range is not None:
-            lo, hi = ts_range
-            lo_us = _bound_micros(lo)
-            if lo_us is not None:
-                files = [
-                    f
-                    for f in files
-                    if f.get("max_ts") is None or f["max_ts"] >= lo_us
-                ]
+        lo_us = _bound_micros(ts_lo) if ts_lo is not None else None
+        if lo_us is not None:
+            files = [
+                f
+                for f in files
+                if f.get("max_ts") is None or f["max_ts"] >= lo_us
+            ]
+        return files, mixed
+
+    def _spark_read(
+        self,
+        snap: Snapshot,
+        files: list[dict[str, Any]],
+        include_meta: bool,
+        key_values: list[Any] | None = None,
+        buckets: Sequence[int] | None = None,
+        ts_range: tuple[Any, Any] | None = None,
+    ) -> DataFrame:
+        """The Spark plan over files chosen by ``_select_files``:
+        merge-on-read resolution, then the residual row filters — the
+        key ``isin``, the bucket-hash filter (``buckets``, passed only
+        for a spec-mixed file set) and the event-time window."""
         df = self._resolved_scan(snap, files, include_meta)
-        if kvals is not None:
-            df = df.where(F.col(snap.bucket_col).isin(kvals))
-        if mixed:
+        if key_values is not None:
+            df = df.where(F.col(snap.bucket_col).isin(key_values))
+        if buckets is not None:
             df = df.where(
                 bucket_expr(snap.bucket_col, snap.num_buckets).isin(
-                    list(wanted)
+                    list(buckets)
                 )
             )
         if ts_range is not None:
+            lo, hi = ts_range
             tcol = F.col(snap.order_cols[0])
             ttype = next(
                 (
@@ -1808,15 +2055,7 @@ class LakeTable:
         map-side-combined aggregation), clean buckets a plain scan, and
         an empty side nothing — ``_scan_resolved`` leaves it out of the
         plan."""
-        dirty: set[int] = set()
-        for f in files:
-            if f.get("kind") == "delta":
-                dirty |= _expand_to_current(f, snap)
-        df = self._scan_resolved(
-            snap,
-            [f for f in files if not _file_overlaps(f, dirty, snap)],
-            [f for f in files if _file_overlaps(f, dirty, snap)],
-        )
+        df = self._scan_resolved(snap, *_split_dirty(snap, files))
         if include_meta:
             return df
         # tombstones (soft deletes) are an implementation detail: a delete
@@ -1837,11 +2076,12 @@ class LakeTable:
 
         Fast path: a pure-Python xxhash64 (functions/xxh64.py, pinned
         bit-identical to the JVM by tests/test_xxh64_pin.py) hashes the
-        probe keys on the driver, so an interactive ``lookup`` issues
-        exactly ONE Spark job — the pruned scan — instead of paying a
-        ~100 ms hash micro-job first. Key dtypes outside the pinned set
-        fall back to the original Spark-job probe, so the fast path can
-        never be a correctness input."""
+        probe keys on the driver, so an interactive ``lookup`` pays no
+        ~100 ms hash micro-job: a Spark-tier lookup issues exactly ONE
+        Spark job — the pruned scan — and a driver-local one none. Key
+        dtypes outside the pinned set fall back to a Spark-job probe
+        over a literal relation, so the fast path can never be a
+        correctness input."""
         btype = next(
             f.dataType
             for f in snap.schema().fields
@@ -1869,14 +2109,18 @@ class LakeTable:
             return sorted(buckets_set), hashes
         except UnsupportedKeyType:
             pass  # exotic key dtype: hash through Spark below
-        vdf = self.spark.createDataFrame(
-            [(i, v) for i, v in enumerate(values)],
-            T.StructType(
-                [
-                    T.StructField("i", T.IntegerType()),
-                    T.StructField("v", btype),
-                ]
-            ),
+        # a literal relation: no Python RDD, no Python worker
+        vdf = self.spark.range(1).select(
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(i).alias("i"), F.lit(v).cast(btype).alias("v")
+                        )
+                        for i, v in enumerate(values)
+                    ]
+                )
+            )
         )
         rows = vdf.select(
             "i",
@@ -1905,7 +2149,7 @@ class LakeTable:
         """Point lookup by bucket-column value(s) with hash-partition
         pruning: the keys are hashed with the write path's own bucket
         function, the scan is restricted to those buckets' files via the
-        manifest (``read(buckets=...)``), and the residual equality
+        manifest (``_select_files``), and the residual equality
         filter lands on the parquet scan as a pushed predicate. Looking
         up k conversations on an N-bucket table reads at most k buckets'
         files — O(k/N) of the table, regardless of table size — which is
@@ -1914,13 +2158,25 @@ class LakeTable:
         Iceberg gets the identical prune from
         ``PARTITIONED BY (bucket(N, conv_id))`` + a conv_id equality
         predicate. Merge-on-read buckets resolve per-key LWW exactly as
-        in ``read()`` (shared scan path). Cost: one pruned scan, plus one
-        shuffle only when a surviving bucket carries delta files; an
-        empty side (no clean file, say) is not planned at all, so an
-        all-dirty lookup is one scan + one aggregation.
+        in ``read()``; both share the file selection (``_select_files``)
+        and the per-epoch column mapping (``_epoch_columns``).
+
+        Tiers and cost. When the manifest row counts of the selected
+        files sum to at most ``_LOCAL_LOOKUP_MAX_ROWS`` (10^6, the
+        measured crossover), the lookup is served on the driver
+        (``_local_lookup``): pyarrow reads the files with the key filter
+        pushed to row groups, dirty buckets are LWW-resolved in Arrow,
+        and the result is a local relation — zero Spark jobs, ~20-40 ms
+        for a conversation. Larger lookups, and shapes the driver tier
+        cannot reproduce exactly (two different rows of a key tied on
+        every order tier; a file needing nested-struct widening), run
+        the Spark plan: one pruned scan, plus one shuffle only when a
+        surviving bucket carries delta files; an empty side (no clean
+        file, say) is not planned at all, so an all-dirty lookup is one
+        scan + one aggregation.
 
         Inside the surviving buckets, per-file key bounds
-        (``min_key``/``max_key``, via ``read(key_values=...)``) skip
+        (``min_key``/``max_key``, via ``_select_files``) skip
         files whose key range excludes every sought value — so a hot
         bucket that has accumulated many files between compactions
         still opens only the files that can actually hold the
@@ -1936,13 +2192,92 @@ class LakeTable:
             vals = [values]
         snap = self.current() if version is None else self.snapshot(version)
         wanted, hashes = self._key_probe(vals, snap) if vals else ([], [])
-        return self.read(
-            version=snap.version,
-            include_meta=include_meta,
-            buckets=wanted,
-            key_values=vals,
-            key_hashes=hashes,
+        files, mixed = self._select_files(
+            snap, buckets=wanted, key_values=vals, key_hashes=hashes
         )
+        local = self._local_lookup(snap, files, vals, include_meta)
+        if local is not None:
+            return local
+        return self._spark_read(
+            snap,
+            files,
+            include_meta,
+            key_values=vals,
+            buckets=wanted if mixed else None,
+        )
+
+    def _local_lookup(
+        self,
+        snap: Snapshot,
+        files: list[dict[str, Any]],
+        vals: list[Any],
+        include_meta: bool,
+    ) -> DataFrame | None:
+        """``lookup()``'s driver-local tier: the selected files are read
+        with pyarrow (``_arrow_read``, key filter pushed to row groups),
+        dirty buckets are LWW-resolved on the driver (``_arrow_lww``),
+        tombstones are dropped (kept with a NULL payload under
+        ``include_meta``), and the rows come back as
+        ``createDataFrame(arrow_table)`` — a local relation whose
+        ``collect()`` runs no Spark job.
+
+        Returns None — the caller runs the Spark plan — when the files'
+        manifest row counts sum above ``_LOCAL_LOOKUP_MAX_ROWS``, when
+        the bucket column is not a key column or the values are not of
+        its Python type, or when the tier cannot reproduce the Spark
+        answer exactly (``_NotLocal``: an order-tier tie, a file column
+        that needs more than a top-level cast)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        rows = [f.get("rows") for f in files]
+        if (
+            snap.bucket_col not in snap.key_cols
+            or None in rows
+            or sum(rows) > _LOCAL_LOOKUP_MAX_ROWS
+        ):
+            return None
+        logical = snap.schema().fields
+        btype = next(f.dataType for f in logical if f.name == snap.bucket_col)
+        want = _LOCAL_KEY_TYPES.get(btype.simpleString())
+        keys = [v for v in vals if v is not None]
+        if want is None or any(
+            type(v) is not want or (want is int and not -(2**63) <= v < 2**63)
+            for v in keys
+        ):
+            return None
+        out_schema = _with_meta_cols(logical)
+        arrow_schema = to_arrow_schema(out_schema)
+        key_vals = pa.array(keys, pa.string() if want is str else pa.int64())
+
+        def load(fs: list[dict[str, Any]]) -> Any:
+            parts = [
+                _arrow_read(f["path"], cols, snap.bucket_col, key_vals, arrow_schema)
+                for group, cols in _epoch_columns(snap, fs, logical)
+                for f in group
+            ]
+            return pa.concat_tables(parts) if parts else arrow_schema.empty_table()
+
+        clean, dirty = _split_dirty(snap, files if keys else [])
+        try:
+            tbl = pa.concat_tables(
+                [
+                    load(clean),
+                    _arrow_lww(load(dirty), snap.key_cols, snap.order_cols[0]),
+                ]
+            )
+        except (_NotLocal, pa.ArrowNotImplementedError):
+            return None
+        if not include_meta:
+            tbl = tbl.filter(
+                pc.invert(pc.fill_null(tbl[DELETED_COL], False))
+            ).drop_columns([LSN_COL, DELETED_COL, SUB_COL])
+            out_schema = T.StructType(out_schema.fields[:-3])
+        # one chunk per column: pyspark's timestamp pass cannot rebuild
+        # a nested column of zero chunks (an empty read)
+        tbl = tbl.combine_chunks() if tbl.num_rows else tbl.schema.empty_table()
+        return self.spark.createDataFrame(tbl, out_schema)
 
     # ------------------------------------------------- metadata tables --
     def row_count(self, version: int | None = None) -> int:
@@ -2859,8 +3194,20 @@ class LakeTable:
             return out.withColumn(
                 "_commit_version", F.lit(None).cast("int")
             )
-        rdf = self.spark.createDataFrame(
-            ranges, "_cv int, _cv_lo long, _cv_hi long"
+        # a literal relation: no Python RDD, no Python worker
+        rdf = self.spark.range(1).select(
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(v).cast("int").alias("_cv"),
+                            F.lit(lo).cast("long").alias("_cv_lo"),
+                            F.lit(hi).cast("long").alias("_cv_hi"),
+                        )
+                        for v, lo, hi in ranges
+                    ]
+                )
+            )
         )
         return (
             out.join(
@@ -2937,17 +3284,6 @@ class LakeTable:
         target_rows = props.get("write.target-file-rows")
         compression = props.get("write.compression")
         dist_mode = str(props.get("write.distribution-mode", "hash"))
-        # scale-adaptive parallelism floor: splitting a write below this
-        # many rows per task costs more in task scheduling, parquet
-        # writer setup and tiny output files than the parallelism buys
-        # (a 15k-row batch salted across 32 cores is 34 files of ~450
-        # rows). Only binds when the batch is smaller than cores x floor
-        # — a production-scale write always clears it. Explicit
-        # write.target-file-rows still wins below (file-size control is
-        # the caller's call).
-        min_task_rows = int(
-            os.environ.get("ETL_WRITE_MIN_TASK_ROWS", "4096")
-        )
         # unique per write ATTEMPT, not per version: two writers racing
         # the same slot must never share a staging dir — a shared dir
         # lets one clobber the other's _temporary output and, worse,
@@ -2973,7 +3309,7 @@ class LakeTable:
             if bucket_volume:
                 wp = max(wp, self._cores())
                 total = sum(bucket_volume.values()) or 1
-                target = max(total // wp, min_task_rows, 1)
+                target = max(total // wp, _WRITE_MIN_TASK_ROWS, 1)
                 if target_rows:
                     target = min(target, int(target_rows))
                 needed = (total + target - 1) // target
@@ -3002,7 +3338,7 @@ class LakeTable:
         elif bucket_volume:
             wp = max(wp, self._cores())
             total = sum(bucket_volume.values()) or 1
-            target = max(total // wp, min_task_rows, 1)
+            target = max(total // wp, _WRITE_MIN_TASK_ROWS, 1)
             salt_cap = wp
             if target_rows:
                 target = min(target, int(target_rows))

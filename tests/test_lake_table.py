@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from etl_rs_spark.errors import LoadError
 from etl_rs_spark.sinks.lake import LakeTable, bucket_expr
-from tests.util import count_manifest_loads
+from tests.util import assert_local_twin, count_manifest_loads, lookup_tier
 
 DDL = "conv_id string, turn_idx int, ts timestamp"
 
@@ -1427,8 +1427,7 @@ def test_lookup_prunes_to_key_buckets(spark, tmp_path):
     """lookup(values) returns exactly the matching rows while scanning
     ONLY the files of the buckets those values hash into — O(k/N) of
     the table for a k-key lookup, the Iceberg bucket-partition prune."""
-    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=8)
-    t.append(_df(spark, 400, convs=40))
+    t = _bucketed_table(spark, tmp_path)
     keys = ["c3", "c17"]
     got = t.lookup(keys).orderBy("conv_id", "turn_idx").collect()
     want = (
@@ -1447,10 +1446,24 @@ def test_lookup_prunes_to_key_buckets(spark, tmp_path):
         for f in snap.files
         if f["bucket"] in wanted
     }
-    touched = {os.path.basename(p) for p in t.lookup(keys).inputFiles()}
+    with lookup_tier("spark"):
+        touched = {os.path.basename(p) for p in t.lookup(keys).inputFiles()}
     assert touched and touched <= allowed
     # the prune is real: untouched buckets exist and were not scanned
     assert len(allowed) < len(snap.files)
+
+
+def _bucketed_table(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=8)
+    t.append(_df(spark, 400, convs=40))
+    return t
+
+
+def test_lookup_prunes_to_key_buckets_local(spark, tmp_path):
+    """Local-tier twin: the driver reads the files the Spark plan
+    scans and returns the same rows, with no Spark job."""
+    t = _bucketed_table(spark, tmp_path)
+    assert len(assert_local_twin(spark, t, ["c3", "c17"])) > 0
 
 
 def test_lookup_scalar_missing_and_time_travel(spark, tmp_path):
@@ -1535,21 +1548,15 @@ def test_lookup_skips_files_by_key_bounds(spark, tmp_path):
     lower/upper bounds) can hold the sought key: a hot bucket that
     accumulated many commits is read O(files holding the key), not
     O(bucket files)."""
-    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=1)
-    for grp in ("a", "b", "c"):
-        df = spark.range(10).select(
-            F.format_string(grp + "%02d", F.col("id")).alias("conv_id"),
-            F.col("id").cast("int").alias("turn_idx"),
-            F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
-        )
-        t.append(df)
+    t = _three_group_table(spark, tmp_path)
     snap = t.current()
     assert len(snap.files) == 3
     assert all(
         f.get("min_key") is not None and f.get("max_key") is not None
         for f in snap.files
     )
-    got = t.lookup("b05")
+    with lookup_tier("spark"):
+        got = t.lookup("b05")
     assert got.count() == 1
     touched = {os.path.basename(p) for p in got.inputFiles()}
     holders = {
@@ -1559,12 +1566,35 @@ def test_lookup_skips_files_by_key_bounds(spark, tmp_path):
     }
     assert len(holders) == 1 and touched == holders
     # multi-key lookup unions the per-key file sets, nothing more
-    two = t.lookup(["a01", "c09"])
-    assert two.count() == 2
-    assert len({os.path.basename(p) for p in two.inputFiles()}) == 2
-    # a key outside every file's bounds opens nothing at all
-    assert t.lookup("zz").count() == 0
-    assert t.lookup("zz").inputFiles() == []
+    with lookup_tier("spark"):
+        two = t.lookup(["a01", "c09"])
+        assert two.count() == 2
+        assert len({os.path.basename(p) for p in two.inputFiles()}) == 2
+        # a key outside every file's bounds opens nothing at all
+        assert t.lookup("zz").count() == 0
+        assert t.lookup("zz").inputFiles() == []
+
+
+def _three_group_table(spark, tmp_path):
+    """One bucket, three appends of disjoint key ranges a*, b*, c*."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=1)
+    for grp in ("a", "b", "c"):
+        df = spark.range(10).select(
+            F.format_string(grp + "%02d", F.col("id")).alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
+        )
+        t.append(df)
+    return t
+
+
+def test_lookup_skips_files_by_key_bounds_local(spark, tmp_path):
+    """Local-tier twin: the same key-bound prune decides which files
+    the driver opens — one, two, or none."""
+    t = _three_group_table(spark, tmp_path)
+    assert len(assert_local_twin(spark, t, "b05")) == 1
+    assert len(assert_local_twin(spark, t, ["a01", "c09"])) == 2
+    assert assert_local_twin(spark, t, "zz") == []
 
 
 def test_range_distribution_gives_disjoint_key_bounds(spark, tmp_path):
@@ -1573,6 +1603,20 @@ def test_range_distribution_gives_disjoint_key_bounds(spark, tmp_path):
     tight DISJOINT key bounds and lookup opens a small subset — the
     discrimination hash+LSN-salted splits (every file spans the whole
     key range) cannot provide."""
+    t = _range_layout_table(spark, tmp_path)
+    snap = t.current()
+    assert len(snap.files) >= 4  # target-file-rows honored in range mode
+    ordered = sorted(snap.files, key=lambda f: f["min_key"])
+    for a, b in zip(ordered, ordered[1:]):
+        assert a["max_key"] <= b["min_key"]  # disjoint key intervals
+    with lookup_tier("spark"):
+        got = t.lookup("c07")
+    assert got.count() == 5
+    assert len(got.inputFiles()) < len(snap.files)
+    assert t.read().count() == 400
+
+
+def _range_layout_table(spark, tmp_path):
     t = LakeTable.create(
         spark,
         str(tmp_path / "t"),
@@ -1591,15 +1635,14 @@ def test_range_distribution_gives_disjoint_key_bounds(spark, tmp_path):
         F.lit("I").alias("op"),
     )
     t.merge(src, run_id="r", batch_id=0)
-    snap = t.current()
-    assert len(snap.files) >= 4  # target-file-rows honored in range mode
-    ordered = sorted(snap.files, key=lambda f: f["min_key"])
-    for a, b in zip(ordered, ordered[1:]):
-        assert a["max_key"] <= b["min_key"]  # disjoint key intervals
-    got = t.lookup("c07")
-    assert got.count() == 5
-    assert len(got.inputFiles()) < len(snap.files)
-    assert t.read().count() == 400
+    return t
+
+
+def test_range_distribution_gives_disjoint_key_bounds_local(spark, tmp_path):
+    """Local-tier twin of the range-layout prune."""
+    t = _range_layout_table(spark, tmp_path)
+    opened = assert_local_twin(spark, t, "c07")
+    assert 0 < len(opened) < len(t.current().files)
 
 
 def test_key_bloom_prunes_hash_layout_files(spark, tmp_path):
@@ -1610,6 +1653,26 @@ def test_key_bloom_prunes_hash_layout_files(spark, tmp_path):
     bucket: a lookup for a key from the second append must open fewer
     files than the bucket holds (bloom-skipped without being opened)
     and return exactly the right rows."""
+    t = _bloom_table(spark, tmp_path)
+    snap = t.current()
+    assert len(snap.files) == 3
+    assert all(
+        f.get("key_bloom") and f.get("kb_bits") == 4096 for f in snap.files
+    )
+    with lookup_tier("spark"):
+        got = t.lookup("c1005")
+        assert got.count() == 1
+        opened = got.inputFiles()
+        assert len(opened) == 1  # blooms skipped the two foreign files
+        # correctness guard: a key present in EVERY append is found in all
+        t2 = t.lookup("c0999")  # absent everywhere
+        assert t2.count() == 0
+        assert len(t2.inputFiles()) == 0  # pure metadata miss: no file opened
+    assert t.read().count() == 90
+
+
+def _bloom_table(spark, tmp_path):
+    """One bucket, key blooms on, three appends of disjoint key sets."""
     t = LakeTable.create(
         spark,
         str(tmp_path / "t"),
@@ -1627,20 +1690,15 @@ def test_key_bloom_prunes_hash_layout_files(spark, tmp_path):
 
     for lo in (0, 1000, 2000):
         t.append(batch(lo))
-    snap = t.current()
-    assert len(snap.files) == 3
-    assert all(
-        f.get("key_bloom") and f.get("kb_bits") == 4096 for f in snap.files
-    )
-    got = t.lookup("c1005")
-    assert got.count() == 1
-    opened = got.inputFiles()
-    assert len(opened) == 1  # blooms skipped the two foreign files
-    # correctness guard: a key present in EVERY append is found in all
-    t2 = t.lookup("c0999")  # absent everywhere
-    assert t2.count() == 0
-    assert len(t2.inputFiles()) == 0  # pure metadata miss: no file opened
-    assert t.read().count() == 90
+    return t
+
+
+def test_key_bloom_prunes_hash_layout_files_local(spark, tmp_path):
+    """Local-tier twin: the manifest bloom decides which files the
+    driver opens."""
+    t = _bloom_table(spark, tmp_path)
+    assert len(assert_local_twin(spark, t, "c1005")) == 1
+    assert assert_local_twin(spark, t, "c0999") == []
 
 
 def test_key_bloom_survives_compaction_and_merge(spark, tmp_path):
@@ -2029,13 +2087,12 @@ def test_compaction_physically_drops_retired_columns(spark, tmp_path):
 def test_rename_bucket_column_keeps_pruning(spark, tmp_path):
     """Renaming the bucket column re-points key/bucket metadata; lookup
     still prunes (hashing is on values, not names)."""
-    t = LakeTable.create(spark, str(tmp_path / "t"), EVO_DDL, num_buckets=8)
-    t.append(_evo_rows(spark, 40))
-    t.rename_column("conv_id", "conversation")
+    t = _renamed_bucket_table(spark, tmp_path)
     snap = t.current()
     assert snap.bucket_col == "conversation"
     assert "conversation" in snap.key_cols
-    lk = t.lookup(["c1"])
+    with lookup_tier("spark"):
+        lk = t.lookup(["c1"])
     assert lk.count() == t.read().where(F.col("conversation") == "c1").count() > 0
     wanted = set(t._buckets_for(["c1"], snap))
     allowed = {
@@ -2045,6 +2102,20 @@ def test_rename_bucket_column_keeps_pruning(spark, tmp_path):
     }
     touched = {os.path.basename(p) for p in lk.inputFiles()}
     assert touched and touched <= allowed
+
+
+def _renamed_bucket_table(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "t"), EVO_DDL, num_buckets=8)
+    t.append(_evo_rows(spark, 40))
+    t.rename_column("conv_id", "conversation")
+    return t
+
+
+def test_rename_bucket_column_keeps_pruning_local(spark, tmp_path):
+    """Local-tier twin: the driver reads the pre-rename files under
+    their physical bucket column name."""
+    t = _renamed_bucket_table(spark, tmp_path)
+    assert len(assert_local_twin(spark, t, ["c1"])) > 0
 
 
 def test_retired_inline_files_format_fails_loud(spark, tmp_path):

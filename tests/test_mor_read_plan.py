@@ -7,8 +7,9 @@ schema.
   replay — over map columns, tombstones, resurrections, a late losing
   event, ``add_files`` rows without engine columns (no ``_sub``), and
   a schema widened between two reads on the same ``LakeTable``.
-- Plan guard: no executed plan of an all-dirty read, lookup or change
-  poll, and no copy-on-write seed-merge write plan, scans a Python RDD.
+- Plan guard: no executed plan of an all-dirty read, Spark-tier lookup
+  or change poll (with or without ``_commit_version``), and no
+  copy-on-write seed-merge write plan, scans a Python RDD.
 - An explicit ``write_partitions`` is a floor on the write plan.
 """
 
@@ -17,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_rs_spark.sinks.lake import LakeTable
-from tests.util import executed_leaf_scans
+from tests.util import executed_leaf_scans, lookup_tier
 
 DDL = "k string, v long, attrs map<string,string>, ts timestamp"
 BATCH_DDL = (
@@ -185,10 +186,16 @@ def test_no_python_scan_in_all_dirty_reads_or_seed_merge(spark, tmp_path):
     snap = mor.current()
     dirty = {f["bucket"] for f in snap.files if f.get("kind") == "delta"}
     assert dirty == set(range(snap.num_buckets))  # every bucket dirty
+    def spark_lookup():
+        # the Spark plan's scan: the driver-local tier plans none
+        with lookup_tier("spark"):
+            mor.lookup("k3").collect()
+
     for name, action in [
         ("read", lambda: mor.read().collect()),
-        ("lookup", lambda: mor.lookup("k3").collect()),
+        ("lookup", spark_lookup),
         ("changes", lambda: mor.changes(1).collect()),
+        ("changes_with_version", lambda: mor.changes(1, with_version=True).collect()),
     ]:
         leaves = executed_leaf_scans(spark, action)
         assert any(s.startswith("Scan parquet") for s in leaves), (name, leaves)

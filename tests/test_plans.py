@@ -139,6 +139,9 @@ def test_lookup_equality_filter_is_pushed(spark, tmp_path_factory):
             F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
         )
     )
-    df = t.lookup(["c1", "c5"])
+    from tests.util import lookup_tier
+
+    with lookup_tier("spark"):
+        df = t.lookup(["c1", "c5"])
     got = plans.pushed_filters(df)
     assert "In(conv_id" in got, f"lookup filter not pushed: {got!r}"

@@ -94,9 +94,12 @@ def test_xxh64_null_and_unsupported(spark):
 
 
 def test_lookup_issues_exactly_one_spark_job(spark, tmp_path):
-    """With driver-side probe hashing, a point lookup runs ONE job:
-    the pruned scan."""
+    """With driver-side probe hashing, a Spark-tier point lookup runs
+    ONE job: the pruned scan. (The driver-local tier runs none;
+    tests/test_local_lookup.py checks that.)"""
     import datetime as dt
+
+    from tests.util import lookup_tier
 
     from etl_rs_spark.sinks.lake import LakeTable
 
@@ -117,7 +120,8 @@ def test_lookup_issues_exactly_one_spark_job(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("lookup-one-job", "point lookup", False)
     try:
-        rows = t.lookup("c7").collect()
+        with lookup_tier("spark"):
+            rows = t.lookup("c7").collect()
     finally:
         sc.setJobGroup(None, None, False)  # type: ignore[arg-type]
     assert [r.conv_id for r in rows] == ["c7"]

@@ -101,3 +101,77 @@ def manifest_pointer_diff(table, v_from: int, v_to: int) -> set[str]:
     a = {m["group"]: m["path"] for m in table.snapshot(v_from).manifest_list}
     b = {m["group"]: m["path"] for m in table.snapshot(v_to).manifest_list}
     return {g for g in a.keys() | b.keys() if a.get(g) != b.get(g)}
+
+
+def spark_jobs_during(spark, action) -> list[int]:
+    """Run ``action()`` and return the ids of the Spark jobs it ran, as
+    the difference of the status tracker's job ids before and after.
+    Counts jobs outside any job group (the tests set none)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    action()
+    bus.waitUntilEmpty()
+    return sorted(set(tracker.getJobIdsForGroup()) - before)
+
+
+@contextlib.contextmanager
+def lookup_tier(tier: str):
+    """Pin ``LakeTable.lookup()`` to one tier inside the block:
+    ``"spark"`` always runs the Spark plan, ``"local"`` resolves every
+    eligible lookup on the driver whatever its candidate row count."""
+    import etl_rs_spark.sinks.lake as lake
+
+    bound = {"spark": -1, "local": float("inf")}[tier]
+    real = lake._LOCAL_LOOKUP_MAX_ROWS
+    lake._LOCAL_LOOKUP_MAX_ROWS = bound
+    try:
+        yield
+    finally:
+        lake._LOCAL_LOOKUP_MAX_ROWS = real
+
+
+@contextlib.contextmanager
+def local_reads():
+    """Record every data file the driver-local lookup tier opens inside
+    the block: yields the list of paths passed to
+    ``sinks.lake._arrow_read``, in read order."""
+    import etl_rs_spark.sinks.lake as lake
+
+    opened: list[str] = []
+    real = lake._arrow_read
+
+    def recording(path, *args):
+        opened.append(path)
+        return real(path, *args)
+
+    lake._arrow_read = recording
+    try:
+        yield opened
+    finally:
+        lake._arrow_read = real
+
+
+def assert_local_twin(spark, table, keys, **kw) -> list[str]:
+    """The driver-local tier of ``table.lookup(keys, **kw)`` opens
+    exactly the files the Spark plan scans, returns the same rows and
+    schema, and runs no Spark job. Returns the paths it opened."""
+    import os
+
+    with lookup_tier("spark"):
+        ref = table.lookup(keys, **kw)
+        want_files = sorted(os.path.basename(p) for p in ref.inputFiles())
+        want = sorted(map(repr, ref.collect()))
+    got: list = []
+    with lookup_tier("local"), local_reads() as opened:
+        jobs = spark_jobs_during(
+            spark, lambda: got.append(table.lookup(keys, **kw))
+        )
+        jobs += spark_jobs_during(spark, lambda: got.append(got[0].collect()))
+    assert jobs == [], f"local tier ran Spark jobs {jobs}"
+    assert sorted(os.path.basename(p) for p in opened) == want_files
+    assert sorted(map(repr, got[1])) == want
+    assert got[0].schema == ref.schema
+    return opened
