@@ -54,6 +54,18 @@ def _event_split(spark: SparkSession, sf_dir: str) -> int:
         return int(e.agg(F.max("event_id")).first()[0]) // 2
 
 
+def _scratch_table(spark: SparkSession, prefix: str, ddl: str, **kw):
+    """A fresh 8-bucket LakeTable at ``<dir>/t`` in a new scratch dir
+    named ``<prefix>*`` (under ``SPARK_GRAFT_WORK_DIR`` when set) — the
+    table each CDC/table-lifecycle entry replays into."""
+    import tempfile
+
+    from etl_rs_spark.sinks.lake import LakeTable
+
+    work = tempfile.mkdtemp(prefix=prefix, dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
+    return LakeTable.create(spark, f"{work}/t", ddl, num_buckets=8, **kw)
+
+
 def _tc(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """CPU-spread variant of _t for PER-ROW-EXPENSIVE projections: the
     driver-generated parquet ships ONE row group per table, so any scan
@@ -861,11 +873,8 @@ def q_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     winning LSN is beyond batch 1's high-water mark. Exercises merge,
     tombstones, per-row LSN retention, snapshot watermarks and the
     metadata-pruned CDF scan in one hash-checked query."""
-    import tempfile
-
     from etl_rs_spark.cdc.apply import apply_batch
     from etl_rs_spark.config import CdcConfig
-    from etl_rs_spark.sinks.lake import LakeTable
 
     e = _t(spark, sf_dir, "events")
     env = e.select(
@@ -879,13 +888,11 @@ def q_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_json(F.struct(F.round("value", 2).alias("value"))).alias("payload"),
     )
     split = _event_split(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="cdf-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
     cfg = CdcConfig(num_buckets=8)
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "cdf-entry-",
         "conv_id string, turn_idx int, value string, ts timestamp",
-        num_buckets=8,
     )
     apply_batch(t, env.where(F.col("lsn") <= split), batch_id=0, run_id="cdf", cfg=cfg)
     v1 = t.current().version
@@ -954,11 +961,9 @@ def q_point_lookup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _point_lookup_impl(
     spark: SparkSession, sf_dir: str, props: dict | None
 ) -> DataFrame:
-    import tempfile
 
     from etl_rs_spark.cdc.apply import apply_batch
     from etl_rs_spark.config import CdcConfig
-    from etl_rs_spark.sinks.lake import LakeTable
 
     e = _t(spark, sf_dir, "events")
     env = e.select(
@@ -971,12 +976,10 @@ def _point_lookup_impl(
         F.col("ts").cast("timestamp").alias("ts"),
         F.to_json(F.struct(F.round("value", 2).alias("value"))).alias("payload"),
     )
-    work = tempfile.mkdtemp(prefix="lookup-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "lookup-entry-",
         "conv_id string, turn_idx int, value string, ts timestamp",
-        num_buckets=8,
         props=props,
     )
     apply_batch(t, env, batch_id=0, run_id="pl", cfg=CdcConfig(num_buckets=8))
@@ -997,11 +1000,8 @@ def q_cdc_apply_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap, AND read-side LWW resolution over mixed base+delta buckets
     (sinks/lake.py: merge delta leg + _lww_resolve). Final state must
     equal the plain LWW-winner oracle, byte-for-byte."""
-    import tempfile
-
     from etl_rs_spark.cdc.apply import apply_batch
     from etl_rs_spark.config import CdcConfig
-    from etl_rs_spark.sinks.lake import LakeTable
 
     e = _t(spark, sf_dir, "events")
     env = e.select(
@@ -1014,13 +1014,11 @@ def q_cdc_apply_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").alias("ts"),
         F.to_json(F.struct(F.round("value", 2).alias("value"))).alias("payload"),
     )
-    work = tempfile.mkdtemp(prefix="mor-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
     cfg = CdcConfig(num_buckets=8, merge_mode="merge-on-read")
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "mor-entry-",
         "conv_id string, turn_idx int, value string, ts timestamp",
-        num_buckets=8,
         props={"write.delta.max-files": 1},
     )
     for b in range(3):
@@ -1046,10 +1044,6 @@ def q_cdc_schema_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the widened schema (Spark 4 widening parquet read). The
     oracle recomputes the same LWW final state in DuckDB with the score
     expression cast per batch membership."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
     def _batch(pred, score_col):
@@ -1071,12 +1065,10 @@ def q_cdc_schema_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") > split,
         F.floor(F.col("value") * 100).cast("long") + F.lit(2**35),
     )
-    work = tempfile.mkdtemp(prefix="promo-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "promo-entry-",
         "conv_id string, turn_idx int, score int, ts timestamp",
-        num_buckets=8,
     )
     t.merge(
         lww_dedup(b1, keys=["conv_id", "turn_idx"], order_cols=["ts", "lsn"]),
@@ -1108,10 +1100,6 @@ def q_cdc_nested_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     present only for keys whose winner arrived after the widening.
     The reference stores schema-evolution knobs and never applies them
     (/root/reference/src/load/delta.rs:62-69)."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
 
@@ -1138,12 +1126,10 @@ def q_cdc_nested_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 10).cast("int").alias("calls"),
         ),
     )
-    work = tempfile.mkdtemp(prefix="nested-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "nested-entry-",
         "conv_id string, turn_idx int, tool struct<name:string>, ts timestamp",
-        num_buckets=8,
     )
     t.merge(
         lww_dedup(b1, keys=["conv_id", "turn_idx"], order_cols=["ts", "lsn"]),
@@ -1175,9 +1161,6 @@ def q_cdc_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes exactly that in DuckDB (imports as lsn -1
     rows). The reference has no import path at all — its extractors
     copy everything through the engine (/root/reference/src/extract/)."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
 
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
@@ -1195,14 +1178,13 @@ def q_cdc_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("timestamp").alias("ts"),
         )
     )
-    work = tempfile.mkdtemp(prefix="addfiles-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    corpus.coalesce(2).write.parquet(f"{work}/corpus")
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "addfiles-entry-",
         "conv_id string, turn_idx int, text string, ts timestamp",
-        num_buckets=8,
     )
+    work = os.path.dirname(t.path)
+    corpus.coalesce(2).write.parquet(f"{work}/corpus")
     res = t.add_files([f"{work}/corpus"])
     assert res["mode"] == "add-files" and res["files_added"] >= 1
     b2 = e.where(F.col("event_id") > split).select(
@@ -1239,10 +1221,6 @@ def q_cdc_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both rules in DuckDB from batch membership of
     each key's LWW winner. The reference stores schema-evolution knobs
     and never applies them (/root/reference/src/load/delta.rs:62-69)."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
 
@@ -1259,12 +1237,10 @@ def q_cdc_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("flag"),
         )
 
-    work = tempfile.mkdtemp(prefix="renamedrop-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "renamedrop-entry-",
         "conv_id string, turn_idx int, value double, flag string, ts timestamp",
-        num_buckets=8,
     )
     t.merge(
         lww_dedup(
@@ -1306,9 +1282,7 @@ def q_cdc_bucket_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolves without a big-bang rewrite window (Iceberg partition spec
     evolution; the reference stores a partition-evolution knob and
     never applies it, /root/reference/src/load/delta.rs:62-69)."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable, _file_spec
+    from etl_rs_spark.sinks.lake import _file_spec
 
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
@@ -1325,12 +1299,10 @@ def q_cdc_bucket_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("value"),
         )
 
-    work = tempfile.mkdtemp(prefix="bucketevo-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "bucketevo-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(
         lww_dedup(
@@ -1373,9 +1345,6 @@ def q_time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the read pattern that must cost O(window), not O(table);
     the pruning itself is plan-asserted in tests/test_lake_table.py::
     test_ts_range_read_prunes_old_era_files."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
 
     e = _t(spark, sf_dir, "events")
     env = e.select(
@@ -1388,12 +1357,10 @@ def q_time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.round("value", 2).alias("value"),
     )
-    work = tempfile.mkdtemp(prefix="tsrange-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "tsrange-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(
         lww_dedup(env, keys=["conv_id", "turn_idx"], order_cols=["ts", "lsn"]),
@@ -1417,10 +1384,6 @@ def q_cdc_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch-0-only LWW replay, and the replayed state must
     equal the full replay — one hash checks restoration AND
     post-rollback convergence."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
 
@@ -1440,12 +1403,10 @@ def q_cdc_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_cols=["ts", "lsn"],
         )
 
-    work = tempfile.mkdtemp(prefix="rollback-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "rollback-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(_batch(F.col("event_id") <= split), run_id="rb", batch_id=0)
     v1 = t.current().version
@@ -1477,10 +1438,6 @@ def q_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay — proving the maintenance plane deletes ONLY dead bytes.
     The expiry is asserted non-trivial (it must actually remove files
     and versions) so the entry cannot pass vacuously."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
 
@@ -1500,12 +1457,10 @@ def q_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_cols=["ts", "lsn"],
         )
 
-    work = tempfile.mkdtemp(prefix="maint-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "maint-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(_batch(F.col("event_id") <= split), run_id="mx", batch_id=0)
     t.merge(_batch(F.col("event_id") > split), run_id="mx", batch_id=1)
@@ -1532,10 +1487,6 @@ def q_cdc_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``published`` (main after fast_forward) must equal the full replay
     — proving the publish is the complete branch state, CDC
     bookkeeping included. One hash checks isolation AND publish."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     split = _event_split(spark, sf_dir)
 
@@ -1555,12 +1506,10 @@ def q_cdc_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_cols=["ts", "lsn"],
         )
 
-    work = tempfile.mkdtemp(prefix="wap-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "wap-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(_batch(F.col("event_id") <= split), run_id="wap", batch_id=0)
     t.create_branch("audit")
@@ -1589,10 +1538,6 @@ def q_cdc_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark+1 LWW events — bucket-pruned, CDF-visible, replay-safe —
     and the final state must equal DuckDB applying the same replay,
     filter, and CASE update."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     winners = lww_dedup(
         e.select(
@@ -1608,12 +1553,10 @@ def q_cdc_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["conv_id", "turn_idx"],
         order_cols=["ts", "lsn"],
     )
-    work = tempfile.mkdtemp(prefix="dml-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "dml-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(winners, run_id="dml", batch_id=0)
     t.delete_where("value < 0.2")
@@ -1637,8 +1580,6 @@ def q_cdc_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must equal DuckDB's LWW replay over the union of both
     batches, proving neither the compact's nor the merge's effect was
     lost."""
-    import tempfile
-
     from etl_rs_spark.sinks.lake import LakeTable, bucket_expr
 
     e = _t(spark, sf_dir, "events")
@@ -1653,13 +1594,12 @@ def q_cdc_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 2).alias("value"),
     )
     keys, order = ["conv_id", "turn_idx"], ["ts", "lsn"]
-    work = tempfile.mkdtemp(prefix="concurrent-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "concurrent-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
+    work = os.path.dirname(t.path)
     t.merge(
         lww_dedup(base.where(F.col("lsn") % 2 == 0), keys, order),
         run_id="cc",
@@ -1715,9 +1655,6 @@ def q_ngram_jaccard_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is IDENTICAL to ngram_jaccard_capped's: a cap computed
     from metadata must produce byte-identical pairs to one computed
     from the data."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
 
     d = _t(spark, sf_dir, "documents")
     src = d.select(
@@ -1727,14 +1664,12 @@ def q_ngram_jaccard_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("lsn"),
         F.lit("I").alias("op"),
     )
-    work = tempfile.mkdtemp(prefix="ngram-table-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "ngram-table-entry-",
         "doc_id bigint, text string, ts timestamp",
         key_cols=["doc_id"],
         bucket_col="doc_id",
-        num_buckets=8,
     )
     t.merge(src, run_id="nj", batch_id=0)
     return t.ngram_dedup_pairs("doc_id", "text", n=3, threshold=0.1)
@@ -1749,10 +1684,6 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same replayed state (exact NDV here so the hash can match; the
     production default is HyperLogLog approx — constant memory per
     column at 10^10 rows)."""
-    import tempfile
-
-    from etl_rs_spark.sinks.lake import LakeTable
-
     e = _t(spark, sf_dir, "events")
     winners = lww_dedup(
         e.select(
@@ -1768,12 +1699,10 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["conv_id", "turn_idx"],
         order_cols=["ts", "lsn"],
     )
-    work = tempfile.mkdtemp(prefix="stats-entry-", dir=os.environ.get("SPARK_GRAFT_WORK_DIR"))
-    t = LakeTable.create(
+    t = _scratch_table(
         spark,
-        f"{work}/t",
+        "stats-entry-",
         "conv_id string, turn_idx int, value double, ts timestamp",
-        num_buckets=8,
     )
     t.merge(winners, run_id="st", batch_id=0)
     stats = t.analyze(columns=["conv_id", "value", "ts"], exact=True)

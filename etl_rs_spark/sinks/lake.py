@@ -597,6 +597,69 @@ def bucket_expr(col: str, num_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_buckets)).cast("int")
 
 
+def _normalize_rows(
+    df: DataFrame,
+    schema: T.StructType,
+    lsn: F.Column,
+    deleted: F.Column,
+    sub: F.Column,
+) -> DataFrame:
+    """The rows every data commit writes: the table's columns in table
+    order and type, then (_lsn, _deleted, _sub). A column ``df`` lacks
+    becomes a typed NULL; one it carries under another type is cast to
+    the table's (struct-aware, see _align_cast — a plain cast rejects a
+    narrower incoming struct after a nested widening). Under ANSI a
+    value the cast cannot take fails the write, before any commit."""
+    src_types = {f.name: f.dataType for f in df.schema.fields}
+    return df.select(
+        *[
+            _align_cast(F.col(f.name), src_types[f.name], f.dataType).alias(f.name)
+            if f.name in src_types
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ],
+        lsn.cast("long").alias(LSN_COL),
+        deleted.cast("boolean").alias(DELETED_COL),
+        sub.cast("int").alias(SUB_COL),
+    )
+
+
+def _bucket_volume(
+    snap: "Snapshot",
+    files: Iterable[dict[str, Any]],
+    volume: dict[int, int] | None = None,
+) -> dict[int, int]:
+    """Expected rows per current-spec bucket: ``volume`` (incoming
+    counts, kept first so the write plan's salt map keeps its key
+    order) plus each file's manifest row count, split evenly over the
+    buckets it covers (a coarser old-spec file spreads over several)."""
+    out = dict(volume or {})
+    for f in files:
+        dests = _expand_to_current(f, snap)
+        share = max(f.get("rows", 0) // len(dests), 1)
+        for b in dests:
+            out[b] = out.get(b, 0) + share
+    return out
+
+
+def _register_columns(snap: "Snapshot", names: Sequence[str]) -> dict[str, Any]:
+    """Snapshot fields giving each new column a fresh field id under the
+    CURRENT epoch (its physical name == its logical name; older files
+    simply lack it and null-backfill)."""
+    field_ids = dict(snap.field_ids)
+    epoch_names = {e: dict(m) for e, m in snap.epoch_names.items()}
+    nfi = snap.next_field_id
+    for name in names:
+        field_ids[name] = nfi
+        epoch_names.setdefault(str(snap.epoch), {})[str(nfi)] = name
+        nfi += 1
+    return {"field_ids": field_ids, "next_field_id": nfi, "epoch_names": epoch_names}
+
+
+def _ms_since(t: float) -> int:
+    return int((time.monotonic() - t) * 1000)
+
+
 def _tips(hs: "Snapshot") -> dict[str, int]:
     """Branch ref table from the HEAD snapshot. The HEAD snapshot is by
     construction its own branch's tip (_commit always writes
@@ -2707,19 +2770,11 @@ class LakeTable:
             raise LoadError(f"column {name!r} already exists")
         if name in (LSN_COL, DELETED_COL, SUB_COL, _BUCKET):
             raise LoadError(f"{name!r} is a reserved name")
-        field_ids = dict(snap.field_ids)
-        field_ids[name] = snap.next_field_id
-        epoch_names = {e: dict(m) for e, m in snap.epoch_names.items()}
-        epoch_names.setdefault(str(snap.epoch), {})[
-            str(snap.next_field_id)
-        ] = name
         new_snap = snap.child(
             schema_json=json.dumps(
                 snap.schema().add(name, dtype).jsonValue()
             ),
-            field_ids=field_ids,
-            next_field_id=snap.next_field_id + 1,
-            epoch_names=epoch_names,
+            **_register_columns(snap, [name]),
             operation="ddl",
         )
         self._commit(new_snap)
@@ -2950,18 +3005,15 @@ class LakeTable:
         # publish must come from the SAME life of the branch name — a
         # ref dropped and recreated (possibly behind this tip, from
         # another branch handle) gets a fresh epoch and must re-qualify
-        # via the fork-point check instead of riding the stale stamp.
-        # 2-element ff_source = pre-epoch manifest: accept as before.
+        # via the fork-point check instead of riding the stale stamp, as
+        # must a stamp that records no epoch. ``main`` has no epoch
+        # entry (-1), so a stamp published from it never goes stale.
         epoch_now = self._head_snapshot().branch_epochs.get(branch, -1)
         ff_same_life = (
-            bool(cur.ff_source)
+            len(cur.ff_source) == 3
             and cur.ff_source[0] == branch
             and int(cur.ff_source[1]) <= bt
-            and (
-                len(cur.ff_source) < 3
-                or epoch_now < 0
-                or int(cur.ff_source[2]) == epoch_now
-            )
+            and (epoch_now < 0 or int(cur.ff_source[2]) == epoch_now)
         )
         ancestor = bs.fork_version == cur.version or ff_same_life
         if not ancestor:
@@ -3226,23 +3278,26 @@ class LakeTable:
 
     def _write_files(
         self,
+        snap: Snapshot,
         df: DataFrame,
-        version: int,
         n_buckets_touched: int,
         write_partitions: int | None = None,
         bucket_volume: dict[int, int] | None = None,
-        props: dict[str, Any] | None = None,
-        epoch: int = 0,
-        ts_col: str | None = None,
-        sort_cols: Sequence[str] | None = None,
-        key_col: str | None = None,
+        kind: str | None = None,
     ) -> list[dict[str, Any]]:
-        """Write df (which must carry _BUCKET) under a fresh commit dir
-        and return [{path, bucket, rows, min_lsn, max_lsn, min_ts,
-        max_ts, min_key, max_key, epoch}] for the manifest (``epoch`` records which
-        rename/drop epoch's physical column names the files carry — see
-        Snapshot.epoch; ``ts_col`` is the event-time column whose
-        footer min/max feed ``read(ts_range=...)`` file skipping).
+        """The one writer of data files: write ``df`` (rows from
+        ``_normalize_rows``) as the data of the commit after ``snap``
+        under a fresh commit dir, and return [{path, bucket, rows,
+        min_lsn, max_lsn, min_ts, max_ts, min_key, max_key, epoch}]
+        for the manifest, plus ``kind`` when given (``"delta"`` for
+        merge-on-read delta files). Everything about the layout comes
+        from ``snap``: the bucket column routes rows to files
+        (``bucket_expr`` under the current spec), ``epoch`` records
+        which rename/drop epoch's physical column names the files carry
+        (see Snapshot.epoch), the first order column's footer min/max
+        feed ``read(ts_range=...)`` file skipping, the bucket column's
+        feed the key bounds and blooms, and the table properties below
+        shape the write.
 
         Skew-aware write planning: when ``bucket_volume`` (expected rows
         per bucket — existing + incoming, known exactly from manifest
@@ -3256,7 +3311,7 @@ class LakeTable:
         ``write_partitions`` is a floor: the small-batch shrink rules
         never plan fewer write tasks than the caller asked for.
 
-        Table write properties (``props``, normally the snapshot's):
+        Table write properties (the snapshot's ``props``):
         ``write.target-file-rows`` caps expected rows per file — a
         bucket whose volume exceeds it is salted into proportionally
         many files even on an unskewed write (a 100-TB table wants
@@ -3270,17 +3325,21 @@ class LakeTable:
         (bucket, sort keys) — files get tight disjoint key bounds, so
         min_key/max_key file pruning works inside multi-file buckets).
 
-        ``sort_cols`` (normally the snapshot's key columns via
-        ``_sort_order``, Iceberg WRITE ORDERED BY parity): rows are
-        sorted WITHIN each write task before hitting parquet, so every
-        row group's min/max stats on the keys are tight ranges instead
-        of the whole key space — a pushed key-equality predicate (point
-        lookup) then skips row groups inside a big bucket's files, and
-        sorted keys dictionary/RLE-compress better. Costs one in-task
+        Sort order (``_sort_order``: the key columns unless
+        ``write.sort-order`` says otherwise; Iceberg WRITE ORDERED BY
+        parity): rows are sorted WITHIN each write task before hitting
+        parquet, so every row group's min/max stats on the keys are
+        tight ranges instead of the whole key space — a pushed
+        key-equality predicate (point lookup) then skips row groups
+        inside a big bucket's files, and sorted keys dictionary/RLE-
+        compress better. Costs one in-task
         sort per written bucket (no extra shuffle: sortWithinPartitions
         rides the existing repartition); disable per table with
         ``write.sort-order = none``."""
-        props = props or {}
+        props = snap.props
+        sort_cols = _sort_order(snap)
+        ts_col, key_col = snap.order_cols[0], snap.bucket_col
+        df = df.withColumn(_BUCKET, bucket_expr(snap.bucket_col, snap.num_buckets))
         target_rows = props.get("write.target-file-rows")
         compression = props.get("write.compression")
         dist_mode = str(props.get("write.distribution-mode", "hash"))
@@ -3289,9 +3348,37 @@ class LakeTable:
         # lets one clobber the other's _temporary output and, worse,
         # lets the winner's manifest glob up the loser's files
         commit_dir = os.path.join(
-            self.data_dir, f"commit-{version:08d}-{uuid.uuid4().hex[:8]}"
+            self.data_dir, f"commit-{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         )
         wp = max(write_partitions or max(n_buckets_touched, 1), 1)
+        salt_n: dict[int, int] = {}
+        if bucket_volume:
+            wp = max(wp, self._cores())
+            total = sum(bucket_volume.values()) or 1
+            target = max(total // wp, _WRITE_MIN_TASK_ROWS, 1)
+            if target_rows:
+                target = min(target, int(target_rows))
+            if dist_mode == "range":
+                tasks = (total + target - 1) // target
+            else:
+                # file-size control may legitimately need more files
+                # than cores; still bounded per bucket
+                salt_cap = max(wp, 2048) if target_rows else wp
+                salt_n = {
+                    b: max(min((v + target - 1) // target, salt_cap), 1)
+                    for b, v in bucket_volume.items()
+                }
+                # every salt slot needs its own shuffle partition, else
+                # the slots of one bucket coalesce back into a single
+                # file
+                tasks = sum(salt_n.values())
+            # MORE partitions than tasks buys nothing, so a small batch
+            # gets exactly the partitions it needs — range-partitioning
+            # 15k rows 32 ways schedules 32 writer tasks for 32 tiny
+            # files; at scale tasks >= wp and the rule is unchanged
+            wp = min(tasks, 4096) if tasks < wp else max(wp, min(tasks, 4096))
+            # an explicit write_partitions is the caller's floor
+            wp = max(wp, write_partitions or 1)
         if dist_mode == "range":
             # Iceberg write.distribution-mode=range: range-partition on
             # (bucket, sort keys) instead of hash+LSN-salt. Each file
@@ -3306,24 +3393,8 @@ class LakeTable:
             # target-file-rows cannot be split across writers — keep
             # hash mode for extreme single-key skew, range mode for
             # read-heavy tables.
-            if bucket_volume:
-                wp = max(wp, self._cores())
-                total = sum(bucket_volume.values()) or 1
-                target = max(total // wp, _WRITE_MIN_TASK_ROWS, 1)
-                if target_rows:
-                    target = min(target, int(target_rows))
-                needed = (total + target - 1) // target
-                # a small batch gets exactly the partitions it needs —
-                # range-partitioning 15k rows 32 ways schedules 32
-                # writer tasks for 32 tiny files; at scale needed >= wp
-                # and the rule is unchanged
-                wp = min(needed, 4096) if needed < wp else max(
-                    wp, min(needed, 4096)
-                )
-                # an explicit write_partitions is the caller's floor
-                wp = max(wp, write_partitions or 1)
             range_cols = [F.col(_BUCKET)] + [
-                F.col(c) for c in (sort_cols or []) if c in df.columns
+                F.col(c) for c in sort_cols if c in df.columns
             ]
             # repartitionByRange SAMPLES its input to pick boundaries —
             # without a cache that is one full extra computation of the
@@ -3335,46 +3406,15 @@ class LakeTable:
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
             range_cached = df
             shuffled = df.repartitionByRange(wp, *range_cols)
-        elif bucket_volume:
-            wp = max(wp, self._cores())
-            total = sum(bucket_volume.values()) or 1
-            target = max(total // wp, _WRITE_MIN_TASK_ROWS, 1)
-            salt_cap = wp
-            if target_rows:
-                target = min(target, int(target_rows))
-                # file-size control may legitimately need more files
-                # than cores; still bounded per bucket
-                salt_cap = max(wp, 2048)
-            salt_n = {
-                b: max(min((v + target - 1) // target, salt_cap), 1)
-                for b, v in bucket_volume.items()
-            }
-            # every salt slot needs its own shuffle partition, else the
-            # slots of one bucket coalesce back into a single file;
-            # MORE partitions than slots buys nothing (parallelism is
-            # bounded by the distinct (bucket, salt) combos), so a
-            # small batch gets its slot count instead of `cores` empty
-            # writer tasks
-            slots = sum(salt_n.values())
-            wp = min(slots, 4096) if slots < wp else max(
-                wp, min(slots, 4096)
+        elif any(n > 1 for n in salt_n.values()):
+            salt_map = F.create_map(
+                *[F.lit(x) for kv in salt_n.items() for x in kv]
             )
-            wp = max(wp, write_partitions or 1)
-            if any(n > 1 for n in salt_n.values()):
-                salt_map = F.create_map(
-                    *[
-                        F.lit(x)
-                        for kv in salt_n.items()
-                        for x in kv
-                    ]
-                )
-                salt = F.pmod(
-                    F.xxhash64(F.col(LSN_COL)),
-                    F.coalesce(F.element_at(salt_map, F.col(_BUCKET)), F.lit(1)),
-                )
-                shuffled = df.repartition(wp, F.col(_BUCKET), salt)
-            else:
-                shuffled = df.repartition(wp, F.col(_BUCKET))
+            salt = F.pmod(
+                F.xxhash64(F.col(LSN_COL)),
+                F.coalesce(F.element_at(salt_map, F.col(_BUCKET)), F.lit(1)),
+            )
+            shuffled = df.repartition(wp, F.col(_BUCKET), salt)
         else:
             shuffled = df.repartition(wp, F.col(_BUCKET))
         if sort_cols:
@@ -3427,9 +3467,10 @@ class LakeTable:
                 {
                     "path": p,
                     "bucket": b,
-                    "epoch": epoch,
+                    "epoch": snap.epoch,
                     **stats[p],
                     **blooms.get(p, {}),
+                    **({"kind": kind} if kind else {}),
                 }
             )
         return out
@@ -3488,28 +3529,27 @@ class LakeTable:
             }
         return out
 
-    def _with_bucket(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        return df.withColumn(_BUCKET, bucket_expr(snap.bucket_col, snap.num_buckets))
-
     def append(self, df: DataFrame, lsn_col: str | None = None) -> dict[str, Any]:
         """Blind append (reference DeltaLoader Append mode).
 
         The commit is a group edit: only the groups that RECEIVE new
         files have their manifests loaded and rewritten; every other
         group's manifest is reused by pointer — an append-only ingest
-        on a 10^6-file table never loads the full file list."""
+        on a 10^6-file table never loads the full file list.
+
+        Rows are written in the table's column types, as merge writes
+        them (``_normalize_rows``): absent columns are NULL, a column
+        of another type is cast, and under ANSI a value the cast cannot
+        take fails the append before anything commits."""
         snap = self.current()
-        out = self._prepare_rows(df, snap, lsn_col)
-        new_files = self._write_files(
-            self._with_bucket(out, snap),
-            snap.version + 1,
-            snap.num_buckets,
-            props=snap.props,
-            epoch=snap.epoch,
-            ts_col=snap.order_cols[0],
-            sort_cols=_sort_order(snap),
-            key_col=snap.bucket_col,
+        rows = _normalize_rows(
+            df,
+            snap.schema(),
+            F.col(lsn_col) if lsn_col else F.lit(-1),
+            F.lit(False),
+            F.lit(0),
         )
+        new_files = self._write_files(snap, rows, snap.num_buckets)
         new = snap.child(operation="append")
         self._commit(
             new, edits=self._edit_groups(snap, new_files), data_commit=True
@@ -3688,19 +3728,17 @@ class LakeTable:
     def overwrite(self, df: DataFrame, lsn_col: str | None = None) -> dict[str, Any]:
         """Full replace (reference DeltaLoader Overwrite mode): a group
         edit that empties every existing group — zero manifests
-        loaded."""
+        loaded. Rows are normalized to the table's types as in
+        ``append``."""
         snap = self.current()
-        out = self._prepare_rows(df, snap, lsn_col)
-        new_files = self._write_files(
-            self._with_bucket(out, snap),
-            snap.version + 1,
-            snap.num_buckets,
-            props=snap.props,
-            epoch=snap.epoch,
-            ts_col=snap.order_cols[0],
-            sort_cols=_sort_order(snap),
-            key_col=snap.bucket_col,
+        rows = _normalize_rows(
+            df,
+            snap.schema(),
+            F.col(lsn_col) if lsn_col else F.lit(-1),
+            F.lit(False),
+            F.lit(0),
         )
+        new_files = self._write_files(snap, rows, snap.num_buckets)
         new = snap.child(operation="overwrite")
         emptied = [m["group"] for m in snap.manifest_list]
         self._commit(
@@ -3709,23 +3747,6 @@ class LakeTable:
             data_commit=True,
         )
         return {"version": new.version, "mode": "overwrite"}
-
-    def _prepare_rows(
-        self, df: DataFrame, snap: Snapshot, lsn_col: str | None
-    ) -> DataFrame:
-        fields = snap.schema().fields
-        cols = [f.name for f in fields]
-        types = {f.name: f.dataType for f in fields}
-        lsn = F.col(lsn_col).cast("long") if lsn_col else F.lit(-1).cast("long")
-        for c in cols:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(types[c]))
-        return df.select(
-            *cols,
-            lsn.alias(LSN_COL),
-            F.lit(False).alias(DELETED_COL),
-            F.lit(0).cast("int").alias(SUB_COL),
-        )
 
     # ------------------------------------------------------ maintenance --
     def expire_snapshots(
@@ -4132,29 +4153,23 @@ class LakeTable:
                 ~F.coalesce(F.col(DELETED_COL), F.lit(False))
                 | (F.col(LSN_COL) > tombstone_lsn_horizon)
             )
-        out = self._with_bucket(df, snap)
-        # default: one file per bucket. With write.target-file-rows set,
+        # the resolved scan is already in _normalize_rows' form (the
+        # snapshot's columns in table order and type, then the hidden
+        # columns), so it goes to the writer as it is; a no-op
+        # re-projection would only add aliases to the plan.
+        # Default: one file per bucket. With write.target-file-rows set,
         # manifest row counts give per-bucket volume so the compacted
         # output honors the file-size cap instead (delta rows overcount
         # resolved state — an overestimate only splits a file early).
-        vol: dict[int, int] | None = None
-        if snap.props.get("write.target-file-rows"):
-            vol = {}
-            for f in target:
-                dests = _expand_to_current(f, snap)
-                share = max(f.get("rows", 0) // len(dests), 1)
-                for b in dests:
-                    vol[b] = vol.get(b, 0) + share
         new_files = self._write_files(
-            out,
-            snap.version + 1,
+            snap,
+            df,
             len(touched),
-            bucket_volume=vol,
-            props=snap.props,
-            epoch=snap.epoch,
-            ts_col=snap.order_cols[0],
-            sort_cols=_sort_order(snap),
-            key_col=snap.bucket_col,
+            bucket_volume=(
+                _bucket_volume(snap, target)
+                if snap.props.get("write.target-file-rows")
+                else None
+            ),
         )
         # selected groups are fully rewritten (emptied); compacted output
         # lands in its current-spec groups — possibly ones not selected,
@@ -4233,6 +4248,20 @@ class LakeTable:
         (delete_where/update_where) passes 0, so a genuine binlog event
         later arriving with the DML's borrowed (ts, lsn) coordinates
         wins instead of being dropped as idempotent replay.
+
+        Stages, each one method called once, timed in the result's
+        ``stage_ms`` under the key in brackets (routing — which affected
+        buckets fold, which take a delta append — is inline):
+          _merge_schema  — additive widening and type promotion;
+          _merge_stats   — per-bucket incoming counts + max LSN
+                           ["stats", only when no caller stats are
+                           given and the table is not empty];
+          _merge_fold, _merge_delta, _merge_reconcile — the two write
+                           legs, then (deferred seed merge only) the
+                           affected set and watermark from the written
+                           footers ["write"];
+          _merge_commit  — group edits, field ids, the snapshot
+                           commit ["commit"].
         """
         t0 = time.monotonic()
         snap = self.current()
@@ -4245,33 +4274,188 @@ class LakeTable:
                     "skipped": True,
                     "reason": f"batch {batch_id} already applied for {run_id}",
                 }
+        empty = {"version": snap.version, "skipped": True, "reason": "empty batch"}
+        schema, new_fields, promotions = self._merge_schema(
+            snap, winners, {op_col, lsn_col, _BUCKET, LSN_COL}
+        )
 
+        stage_ms: dict[str, int] = {}
+        src = winners.withColumn(
+            _BUCKET, bucket_expr(snap.bucket_col, snap.num_buckets)
+        )
+        # caller-provided stats are only valid under the bucket spec
+        # they were computed with; a set_num_buckets committed between
+        # the caller's prescan and this merge would otherwise route the
+        # fold/delta split on stale bucket ids (and silently drop rows
+        # from both legs). Stats carrying a mismatched spec_n — or none,
+        # from a pre-evolution caller — are recomputed here.
+        if batch_stats is not None and (
+            batch_stats.get("spec_n", snap.num_buckets) != snap.num_buckets
+        ):
+            batch_stats = None
+        # seed merge into a table with NO data files: the stats job's
+        # only pre-write consumers are the affected-bucket set (prunes
+        # the current-state scan — there is nothing to scan) and the
+        # skew-aware write volumes (file-size splitting — deferred to
+        # the explicit write.target-file-rows case, which keeps stats).
+        # Every bucket is routed as affected, and the real affected set
+        # and hi_lsn for the watermark are read back from the written
+        # files' parquet footers, so the whole merge is ONE job over the
+        # batch instead of two.
+        deferred = (
+            batch_stats is None
+            and not snap.props.get("write.target-file-rows")
+            and not snap.manifest_list
+        )
+        # without caller stats, the stats aggregation AND the write job
+        # would each recompute the caller's full winners pipeline
+        # (typically a dedup over the raw batch) — cache the bucketed
+        # winners for the merge's lifetime instead: O(batch) rows, the
+        # batch's smallest representation. The CDC apply path achieves
+        # the same sharing by persisting raw_winners and passing
+        # batch_stats; this covers direct merge() callers.
+        src_cached = batch_stats is None and not deferred
+        if src_cached:
+            from pyspark import StorageLevel
+
+            src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            counts: dict[int, int] = {}
+            hi_lsn = None
+            if batch_stats is not None:
+                counts = dict(batch_stats["bucket_counts"])
+                hi_lsn = batch_stats.get("hi_lsn")
+            elif src_cached:
+                t = time.monotonic()
+                counts, hi_lsn = self._merge_stats(src, lsn_col)
+                stage_ms["stats"] = _ms_since(t)
+            affected = range(snap.num_buckets) if deferred else sorted(counts)
+            if not affected:
+                return empty
+            # -- merge-mode routing: which affected buckets FOLD (read
+            # current state, resolve, rewrite base) vs take a DELTA
+            # append. Copy-on-write folds everything; merge-on-read folds
+            # only the buckets whose delta chain would outgrow
+            # write.delta.max-files. Runs off the manifest list's
+            # summaries — O(groups) driver metadata, never O(table files)
+            mode = mode or snap.props.get("write.merge.mode", "copy-on-write")
+            if mode not in ("copy-on-write", "merge-on-read"):
+                raise LoadError(
+                    f"unknown merge mode {mode!r} (copy-on-write | merge-on-read)"
+                )
+            fold = list(affected)
+            if mode == "merge-on-read":
+                max_delta = int(snap.props.get("write.delta.max-files", 8))
+                n_delta: dict[int, int] = {}
+                # per-group delta counts ride the manifest list; a coarse
+                # group's count lands on every covered bucket (overcount
+                # folds early — safe)
+                for m in snap.manifest_list:
+                    if m.get("deltas"):
+                        for b in _expand_to_current(m, snap):
+                            n_delta[b] = n_delta.get(b, 0) + m["deltas"]
+                fold = [b for b in affected if n_delta.get(b, 0) + 1 > max_delta]
+            fold_set = set(fold)
+            cold = [b for b in affected if b not in fold_set]
+            incoming = _normalize_rows(
+                src,
+                schema,
+                F.col(lsn_col),
+                F.col(op_col) == "D",
+                F.lit(int(sub_lsn)),
+            )
+            t = time.monotonic()
+            new_files: list[dict[str, Any]] = []
+            if fold:
+                new_files = self._merge_fold(
+                    snap, schema, incoming, fold, cold, counts, write_partitions
+                )
+            if cold:
+                new_files += self._merge_delta(
+                    snap, schema, incoming, fold, cold, counts
+                )
+            if deferred:
+                if not new_files:
+                    return empty
+                affected, fold, cold, hi_lsn = self._merge_reconcile(
+                    new_files, fold
+                )
+            stage_ms["write"] = _ms_since(t)
+        finally:
+            if src_cached:
+                src.unpersist()
+        t = time.monotonic()
+        new_snap, rebased = self._merge_commit(
+            snap,
+            schema,
+            new_fields,
+            new_files,
+            fold,
+            hi_lsn,
+            run_id,
+            batch_id,
+            operation,
+        )
+        stage_ms["commit"] = _ms_since(t)
+        rows_per_bucket: dict[int, int] = {}
+        for f in new_files:
+            rows_per_bucket[f["bucket"]] = rows_per_bucket.get(f["bucket"], 0) + f["rows"]
+        out_stats = {
+            "version": new_snap.version,
+            "skipped": False,
+            "mode": mode,
+            # True when a same-branch slot race was resolved by the
+            # metadata-level rebase instead of redoing the merge
+            "rebased": rebased,
+            "buckets_touched": affected,
+            "folded_buckets": fold,
+            "delta_buckets": cold,
+            "files_written": len(new_files),
+            # footer rows of this commit's files: post-merge state rows
+            # for folded buckets, appended winners for delta buckets
+            "rows_per_bucket": rows_per_bucket,
+            "schema_widened": [f.name for f in new_fields],
+            "schema_promoted": {
+                k: v.simpleString() for k, v in promotions.items()
+            },
+            "watermark_lsn": new_snap.watermark_lsn,
+            "wall_ms": _ms_since(t0),
+            "stage_ms": stage_ms,
+        }
+        from etl_rs_spark import telemetry
+
+        telemetry.record(
+            "merge", {"wall_ms": out_stats["wall_ms"], "stage_ms": stage_ms}
+        )
+        return out_stats
+
+    def _merge_schema(
+        self, snap: Snapshot, winners: DataFrame, reserved: set[str]
+    ) -> tuple[T.StructType, list[T.StructField], dict[str, T.DataType]]:
+        """Schema-evolution stage: the table schema widened by the
+        incoming payload columns it lacks (additive evolution) and with
+        Iceberg-promotable wider incoming types promoted in place.
+        Returns (schema, new fields, {column: promoted type})."""
         schema = snap.schema()
-        table_cols = [f.name for f in schema.fields]
-        ts_col = snap.order_cols[0]
-
-        # -- additive schema evolution: widen with new incoming columns
-        reserved = {op_col, lsn_col, _BUCKET, LSN_COL}
+        by_name = {f.name: f for f in schema.fields}
         incoming_payload = [
             f for f in winners.schema.fields if f.name not in reserved
         ]
-        new_fields = [f for f in incoming_payload if f.name not in table_cols]
+        new_fields = [f for f in incoming_payload if f.name not in by_name]
         # -- in-place type promotion: an existing column arriving with an
         # Iceberg-promotable wider type (int->long, float->double,
         # decimal precision growth) widens the table column rather than
         # down-casting the incoming values. Non-promotable mismatches
-        # keep the table type (incoming is cast to it below), matching
-        # Iceberg's rule that only widening changes the schema.
-        promotions = {}
-        if incoming_payload:
-            by_name = {f.name: f for f in schema.fields}
-            for f in incoming_payload:
-                cur_f = by_name.get(f.name)
-                if cur_f is None:
-                    continue
-                p = _promote_type(cur_f.dataType, f.dataType)
-                if p is not None:
-                    promotions[f.name] = p
+        # keep the table type (incoming is cast to it by
+        # _normalize_rows), matching Iceberg's rule that only widening
+        # changes the schema.
+        promotions = {
+            f.name: p
+            for f in incoming_payload
+            if f.name in by_name
+            and (p := _promote_type(by_name[f.name].dataType, f.dataType))
+            is not None
+        }
         # the BUCKET column's type is load-bearing for every hash in the
         # table: bucket routing (bucket_expr), manifest key blooms, and
         # lookup()'s probe all use Spark xxhash64, which hashes int and
@@ -4305,292 +4489,176 @@ class LakeTable:
                     for f in schema.fields
                 ]
             )
-        if new_fields:
-            for f in new_fields:
-                schema = schema.add(f.name, f.dataType)
-            table_cols = [f.name for f in schema.fields]
-        schema_json = json.dumps(schema.jsonValue())
-        types = {f.name: f.dataType for f in schema.fields}
+        for f in new_fields:
+            schema = schema.add(f.name, f.dataType)
+        return schema, new_fields, promotions
 
-        # -- per-bucket source counts + max lsn: taken from the caller's
-        # prescan when provided (the CDC apply path — zero extra jobs
-        # here), else computed in one tiny aggregation (at most
-        # num_buckets result rows; Catalyst prunes the recompute down to
-        # the (bucket, lsn) columns). The counts feed the skew-aware
-        # write plan; the bucket set drives partition pruning.
-        stage_ms: dict[str, int] = {}
-        src = self._with_bucket(winners, snap)
-        # caller-provided stats are only valid under the bucket spec
-        # they were computed with; a set_num_buckets committed between
-        # the caller's prescan and this merge would otherwise route the
-        # fold/delta split on stale bucket ids (and silently drop rows
-        # from both legs). Stats carrying a mismatched spec_n — or none,
-        # from a pre-evolution caller — are recomputed here.
-        if batch_stats is not None and (
-            batch_stats.get("spec_n", snap.num_buckets) != snap.num_buckets
-        ):
-            batch_stats = None
-        src_cached = False
-        # seed merge into a table with NO data files: the stats job's
-        # only pre-write consumers are the affected-bucket set (prunes
-        # the current-state scan — there is nothing to scan) and the
-        # skew-aware write volumes (file-size splitting — deferred to
-        # the explicit write.target-file-rows case, which keeps stats).
-        # Everything else (affected set, hi_lsn for the watermark) is
-        # read back from the written files' parquet footers, so the
-        # whole merge is ONE job over the batch instead of two.
-        defer_stats = (
-            batch_stats is None
-            and not snap.props.get("write.target-file-rows")
-            and not snap.manifest_list
+    def _merge_stats(
+        self, src: DataFrame, lsn_col: str
+    ) -> tuple[dict[int, int], Any]:
+        """Stats stage: per-bucket incoming counts and the batch's max
+        LSN in one tiny aggregation (at most num_buckets result rows;
+        Catalyst prunes the recompute down to the (bucket, lsn)
+        columns). The counts feed the skew-aware write plan; the bucket
+        set drives partition pruning."""
+        rows = (
+            src.groupBy(_BUCKET)
+            .agg(F.count("*").alias("n"), F.max(F.col(lsn_col)).alias("hi"))
+            .collect()
         )
-        if defer_stats:
-            incoming_counts = {}
-            hi_lsn = None
-        elif batch_stats is not None:
-            incoming_counts = dict(batch_stats["bucket_counts"])
-            hi_lsn = batch_stats.get("hi_lsn")
-        else:
-            # without caller stats, the stats aggregation AND the write
-            # job would each recompute the caller's full winners
-            # pipeline (typically a dedup over the raw batch) — cache
-            # the bucketed winners for the merge's lifetime instead:
-            # O(batch) rows, the batch's smallest representation. The
-            # CDC apply path achieves the same sharing by persisting
-            # raw_winners and passing batch_stats; this covers direct
-            # merge() callers.
-            from pyspark import StorageLevel
+        return (
+            {r[_BUCKET]: r["n"] for r in rows},
+            max((r["hi"] for r in rows), default=None),
+        )
 
-            src = src.persist(StorageLevel.MEMORY_AND_DISK)
-            src_cached = True
-            t_stats = time.monotonic()
-            stats_rows = (
-                src.groupBy(_BUCKET)
-                .agg(F.count("*").alias("n"), F.max(F.col(lsn_col)).alias("hi"))
-                .collect()
+    def _merge_fold(
+        self,
+        snap: Snapshot,
+        schema: T.StructType,
+        incoming: DataFrame,
+        fold: list[int],
+        cold: list[int],
+        counts: dict[int, int],
+        write_partitions: int | None,
+    ) -> list[dict[str, Any]]:
+        """FOLD leg: LWW across {stored row/tombstone, incoming winner}
+        per key — one associative max aggregation (partial map-side
+        combine before the shuffle); AQE handles residual skew. Rewrites
+        the fold buckets' base files; any delta files those buckets
+        carried are resolved away here."""
+        fold_set = set(fold)
+        # current rows of FOLD buckets only (partition pruning; only the
+        # touched groups' manifests load). A pre-evolution
+        # (coarser-spec) file overlapping the fold set is folded WHOLE:
+        # its sibling buckets' rows ride the LWW resolve unopposed and
+        # land in current-spec files — merges migrate the table toward
+        # the new spec as buckets get touched
+        cur_files = [
+            f
+            for f in self._candidate_files(snap, buckets=fold_set)
+            if _file_overlaps(f, fold_set, snap)
+        ]
+        pool = incoming
+        if cold:
+            pool = pool.where(bucket_expr(snap.bucket_col, snap.num_buckets).isin(fold))
+        if cur_files:
+            # stored rows, scanned under the WIDENED/PROMOTED logical
+            # schema with per-epoch physical-name translation for
+            # pre-rename files; a fold of buckets holding no files (the
+            # seed merge) has no stored side to plan
+            existing = _normalize_rows(
+                self._scan_files(snap, cur_files, schema=schema),
+                schema,
+                F.col(LSN_COL),
+                F.coalesce(F.col(DELETED_COL), F.lit(False)),
+                F.coalesce(F.col(SUB_COL), F.lit(0)),
             )
-            stage_ms["stats"] = int((time.monotonic() - t_stats) * 1000)
-            incoming_counts = {r[_BUCKET]: r["n"] for r in stats_rows}
-            hi_lsn = max((r["hi"] for r in stats_rows), default=None)
-        affected = sorted(incoming_counts)
-        if not affected and not defer_stats:
-            if src_cached:
-                src.unpersist()
-            return {"version": snap.version, "skipped": True, "reason": "empty batch"}
+            pool = existing.unionByName(pool)
+        final = _lww_resolve(pool, snap.key_cols, snap.order_cols[0])
+        # expected write volume per bucket = incoming winners + existing
+        # rows (manifest footer counts) — drives the skew-aware salt plan
+        volume = _bucket_volume(
+            snap, cur_files, {b: n for b, n in counts.items() if b in fold_set}
+        )
+        return self._write_files(
+            snap, final, len(fold), write_partitions, bucket_volume=volume or None
+        )
 
-        try:
-            # -- merge-mode routing: which affected buckets FOLD (read
-            # current state, resolve, rewrite base) vs take a DELTA append.
-            # Copy-on-write folds everything; merge-on-read folds only the
-            # buckets whose delta chain would outgrow write.delta.max-files.
-            mode = mode or snap.props.get("write.merge.mode", "copy-on-write")
-            if mode not in ("copy-on-write", "merge-on-read"):
-                raise LoadError(
-                    f"unknown merge mode {mode!r} "
-                    "(copy-on-write | merge-on-read)"
-                )
-            # the whole merge (routing, current-state selection, and the
-            # commit below) runs off manifest summaries + the TOUCHED
-            # groups' manifests only — O(touched buckets) driver
-            # metadata, never O(table files)
-            if mode == "merge-on-read":
-                max_delta = int(snap.props.get("write.delta.max-files", 8))
-                n_delta: dict[int, int] = {}
-                # per-group delta counts ride the manifest list; a
-                # coarse group's count lands on every covered bucket
-                # (overcount folds early — safe)
-                for m in snap.manifest_list:
-                    if m.get("deltas"):
-                        for b in _expand_to_current(m, snap):
-                            n_delta[b] = n_delta.get(b, 0) + m["deltas"]
-                fold = [b for b in affected if n_delta.get(b, 0) + 1 > max_delta]
-            else:
-                fold = list(affected)
-            fold_set = set(fold)
-            cold = [b for b in affected if b not in fold_set]
-            # deferred-stats seed merge: the affected set is unknown
-            # until the write's footers come back — route EVERYTHING
-            # down the leg an empty table implies (CoW folds all, MoR
-            # delta-appends all; n_delta is empty so no bucket can
-            # exceed max_delta) and reconcile fold/cold/affected below.
-            fold_all = defer_stats and mode == "copy-on-write"
-            cold_all = defer_stats and mode == "merge-on-read"
+    def _merge_delta(
+        self,
+        snap: Snapshot,
+        schema: T.StructType,
+        incoming: DataFrame,
+        fold: list[int],
+        cold: list[int],
+        counts: dict[int, int],
+    ) -> list[dict[str, Any]]:
+        """DELTA leg: append the batch winners as delta files for the
+        cold buckets without reading their current state. Tombstone
+        payload is nulled on disk (parity with the fold
+        representation); resolution happens at read/compaction."""
+        rows = incoming
+        if fold:
+            rows = rows.where(bucket_expr(snap.bucket_col, snap.num_buckets).isin(cold))
+        bare = set(snap.key_cols) | {snap.order_cols[0]}
+        delta_rows = rows.select(
+            *[
+                F.col(f.name)
+                if f.name in bare
+                else F.when(F.col(DELETED_COL), F.lit(None).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                for f in schema.fields
+            ],
+            LSN_COL,
+            DELETED_COL,
+            SUB_COL,
+        )
+        # one delta file per touched bucket per batch (the chain the
+        # max-files cap counts); volume-driven splitting only when the
+        # table caps file sizes explicitly
+        cold_set = set(cold)
+        dvol = (
+            {b: n for b, n in counts.items() if b in cold_set}
+            if snap.props.get("write.target-file-rows")
+            else None
+        )
+        return self._write_files(
+            snap, delta_rows, len(cold), bucket_volume=dvol, kind="delta"
+        )
 
-            # -- current rows of FOLD buckets only (partition pruning);
-            # delta-append buckets are never read — that is the point
-            # a pre-evolution (coarser-spec) file overlapping the fold set
-            # is folded WHOLE: its sibling buckets' rows ride the LWW
-            # resolve unopposed and land in current-spec files — merges
-            # migrate the table toward the new spec as buckets get touched
-            cur_files = [
-                f
-                for f in self._candidate_files(snap, buckets=fold_set)
-                if _file_overlaps(f, fold_set, snap)
-            ]
-
-            def norm(
-                df: DataFrame, lsn: F.Column, deleted: F.Column, sub: F.Column
-            ) -> DataFrame:
-                src_types = {f.name: f.dataType for f in df.schema.fields}
-                sel = []
-                for c in table_cols:
-                    if c in df.columns:
-                        # struct-aware alignment: after a nested widening
-                        # the incoming struct is narrower than the table's
-                        # — plain cast would reject it (field-count rule)
-                        sel.append(_align_cast(F.col(c), src_types[c], types[c]).alias(c))
-                    else:
-                        sel.append(F.lit(None).cast(types[c]).alias(c))
-                return df.select(
-                    *sel,
-                    lsn.cast("long").alias(LSN_COL),
-                    deleted.cast("boolean").alias(DELETED_COL),
-                    sub.cast("int").alias(SUB_COL),
-                )
-
-            incoming = norm(
-                src, F.col(lsn_col), F.col(op_col) == "D", F.lit(int(sub_lsn))
+    def _merge_reconcile(
+        self, new_files: list[dict[str, Any]], fold: list[int]
+    ) -> tuple[list[int], list[int], list[int], Any]:
+        """Footer reconcile of a deferred seed merge: affected = buckets
+        that produced rows, split into the planned fold and delta legs,
+        and hi_lsn = max stored _lsn — the max over the stored winners,
+        not over the raw batch the skipped stats job would have
+        aggregated (SQL max and parquet stats both ignore nulls).
+        Returns (affected, fold, cold, hi_lsn)."""
+        affected = sorted({f["bucket"] for f in new_files})
+        fold_set = set(fold)
+        his = [f["max_lsn"] for f in new_files if f.get("max_lsn") is not None]
+        # a footer without _lsn stats (a stats-less row group) must not
+        # let the watermark fall below its rows: one column-pruned max
+        # over just those files
+        no_stats = [f["path"] for f in new_files if f.get("max_lsn") is None]
+        if no_stats:
+            his.append(
+                self.spark.read.schema(f"{LSN_COL} long")
+                .parquet(*no_stats)
+                .agg(F.max(LSN_COL))
+                .first()[0]
             )
-            _bexpr = bucket_expr(snap.bucket_col, snap.num_buckets)
+        return (
+            affected,
+            [b for b in affected if b in fold_set],
+            [b for b in affected if b not in fold_set],
+            max((h for h in his if h is not None), default=None),
+        )
 
-            t_write = time.monotonic()
-            new_files: list[dict[str, Any]] = []
-            if fold or fold_all:
-                # -- FOLD leg: LWW across {stored row/tombstone, incoming
-                # winner} per key — one associative max aggregation (partial
-                # map-side combine before the shuffle); AQE handles residual
-                # skew. Rewrites the fold buckets' base files; any delta
-                # files those buckets carried are resolved away here.
-                pool = (
-                    incoming if not cold else incoming.where(_bexpr.isin(fold))
-                )
-                if cur_files:
-                    # stored rows, scanned under the WIDENED/PROMOTED
-                    # logical schema with per-epoch physical-name
-                    # translation for pre-rename files; a fold of
-                    # buckets holding no files (the seed merge) has no
-                    # stored side to plan
-                    existing = norm(
-                        self._scan_files(snap, cur_files, schema=schema),
-                        F.col(LSN_COL),
-                        F.coalesce(F.col(DELETED_COL), F.lit(False)),
-                        F.coalesce(F.col(SUB_COL), F.lit(0)),
-                    )
-                    pool = existing.unionByName(pool)
-                final = _lww_resolve(pool, snap.key_cols, ts_col)
-                # expected write volume per bucket = existing rows (manifest
-                # footer counts) + incoming winners — drives the skew-aware
-                # salt plan
-                volume: dict[int, int] = {
-                    b: n for b, n in incoming_counts.items() if b in fold_set
-                }
-                for f in cur_files:
-                    dests = _expand_to_current(f, snap)
-                    share = max(f.get("rows", 0) // len(dests), 1)
-                    for b in dests:
-                        volume[b] = volume.get(b, 0) + share
-                new_files += self._write_files(
-                    self._with_bucket(final, snap),
-                    snap.version + 1,
-                    snap.num_buckets if fold_all else len(fold),
-                    write_partitions,
-                    bucket_volume=volume or None,
-                    props=snap.props,
-                    epoch=snap.epoch,
-                    ts_col=snap.order_cols[0],
-                    sort_cols=_sort_order(snap),
-                    key_col=snap.bucket_col,
-                )
-            if cold or cold_all:
-                # -- DELTA leg: append the batch winners as delta files for
-                # the cold buckets without reading their current state.
-                # Tombstone payload is nulled on disk (parity with the fold
-                # representation); resolution happens at read/compaction.
-                delta_rows = (
-                    incoming if not fold else incoming.where(_bexpr.isin(cold))
-                ).select(
-                    *[
-                        F.col(c)
-                        if c in snap.key_cols or c == ts_col
-                        else F.when(
-                            F.col(DELETED_COL), F.lit(None).cast(types[c])
-                        )
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in table_cols
-                    ],
-                    LSN_COL,
-                    DELETED_COL,
-                    SUB_COL,
-                )
-                # one delta file per touched bucket per batch (the chain the
-                # max-files cap counts); volume-driven splitting only when
-                # the table caps file sizes explicitly
-                dvol = (
-                    {b: n for b, n in incoming_counts.items() if b in set(cold)}
-                    if snap.props.get("write.target-file-rows")
-                    else None
-                )
-                dfiles = self._write_files(
-                    self._with_bucket(delta_rows, snap),
-                    snap.version + 1,
-                    snap.num_buckets if cold_all else len(cold),
-                    None,
-                    bucket_volume=dvol,
-                    props=snap.props,
-                    epoch=snap.epoch,
-                    ts_col=snap.order_cols[0],
-                    sort_cols=_sort_order(snap),
-                    key_col=snap.bucket_col,
-                )
-                for f in dfiles:
-                    f["kind"] = "delta"
-                new_files += dfiles
-            stage_ms["write"] = int((time.monotonic() - t_write) * 1000)
-            if defer_stats:
-                # reconcile from the written files' footers: affected =
-                # buckets that produced rows, hi_lsn = max stored _lsn —
-                # the max over the stored winners, not over the raw
-                # batch the skipped stats job would have aggregated
-                # (SQL max and parquet stats both ignore nulls)
-                if not new_files:
-                    return {
-                        "version": snap.version,
-                        "skipped": True,
-                        "reason": "empty batch",
-                    }
-                affected = sorted({f["bucket"] for f in new_files})
-                fold = affected if mode == "copy-on-write" else []
-                fold_set = set(fold)
-                cold = affected if mode == "merge-on-read" else []
-                his = [
-                    f["max_lsn"]
-                    for f in new_files
-                    if f.get("max_lsn") is not None
-                ]
-                # a footer without _lsn stats (a stats-less row group)
-                # must not let the watermark fall below its rows: one
-                # column-pruned max over just those files
-                no_stats = [
-                    f["path"] for f in new_files if f.get("max_lsn") is None
-                ]
-                if no_stats:
-                    his.append(
-                        self.spark.read.schema(f"{LSN_COL} long")
-                        .parquet(*no_stats)
-                        .agg(F.max(LSN_COL))
-                        .first()[0]
-                    )
-                hi_lsn = max((h for h in his if h is not None), default=None)
-        finally:
-            if src_cached:
-                src.unpersist()
+    def _merge_commit(
+        self,
+        snap: Snapshot,
+        schema: T.StructType,
+        new_fields: list[T.StructField],
+        new_files: list[dict[str, Any]],
+        fold: list[int],
+        hi_lsn: Any,
+        run_id: str | None,
+        batch_id: int | None,
+        operation: str,
+    ) -> tuple[Snapshot, bool]:
+        """Commit stage: the group edits, the applied-batch log, the
+        watermark and the widened schema's field ids, committed as one
+        snapshot. Returns (new snapshot, rebased)."""
+        fold_set = set(fold)
         # fold buckets are fully replaced; cold buckets KEEP their
         # existing base+delta files (the new deltas stack on top):
         # untouched groups' manifests are reused by pointer,
         # fold-overlapping groups are emptied (every entry was rewritten
-        # above), and new files land in their current-spec groups,
-        # loading at most the touched groups' prior entries (the
+        # by the fold leg), and new files land in their current-spec
+        # groups, loading at most the touched groups' prior entries (the
         # delta-append case)
         edits = self._edit_groups(
             snap,
@@ -4601,61 +4669,16 @@ class LakeTable:
                 if _file_overlaps(m, fold_set, snap)
             ],
         )
-
         applied = dict(snap.applied)
         if run_id is not None and batch_id is not None:
             applied[run_id] = max(applied.get(run_id, -1), batch_id)
-
-        # widened columns get fresh field ids, registered under the
-        # CURRENT epoch (their physical name == logical name; older
-        # files of this epoch simply lack the column -> null backfill)
-        field_ids = dict(snap.field_ids)
-        nfi = snap.next_field_id
-        epoch_names = {e: dict(m) for e, m in snap.epoch_names.items()}
-        for f in new_fields:
-            field_ids[f.name] = nfi
-            epoch_names.setdefault(str(snap.epoch), {})[str(nfi)] = f.name
-            nfi += 1
         new_snap = snap.child(
-            schema_json=schema_json,
+            schema_json=json.dumps(schema.jsonValue()),
             applied=applied,
-            watermark_lsn=max(snap.watermark_lsn, int(hi_lsn if hi_lsn is not None else -1)),
-            field_ids=field_ids,
-            next_field_id=nfi,
-            epoch_names=epoch_names,
+            watermark_lsn=max(
+                snap.watermark_lsn, int(hi_lsn if hi_lsn is not None else -1)
+            ),
+            **_register_columns(snap, [f.name for f in new_fields]),
             operation=operation,
         )
-        t_commit = time.monotonic()
-        rebased = self._commit(new_snap, edits=edits, data_commit=True)
-        stage_ms["commit"] = int((time.monotonic() - t_commit) * 1000)
-        rows_per_bucket: dict[int, int] = {}
-        for f in new_files:
-            rows_per_bucket[f["bucket"]] = rows_per_bucket.get(f["bucket"], 0) + f["rows"]
-        out_stats = {
-            "version": new_snap.version,
-            "skipped": False,
-            "mode": mode,
-            # True when a same-branch slot race was resolved by the
-            # metadata-level rebase instead of redoing the merge
-            "rebased": rebased,
-            "buckets_touched": affected,
-            "folded_buckets": fold,
-            "delta_buckets": cold,
-            "files_written": len(new_files),
-            # footer rows of this commit's files: post-merge state rows
-            # for folded buckets, appended winners for delta buckets
-            "rows_per_bucket": rows_per_bucket,
-            "schema_widened": [f.name for f in new_fields],
-            "schema_promoted": {
-                k: v.simpleString() for k, v in promotions.items()
-            },
-            "watermark_lsn": new_snap.watermark_lsn,
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-            "stage_ms": stage_ms,
-        }
-        from etl_rs_spark import telemetry
-
-        telemetry.record(
-            "merge", {"wall_ms": out_stats["wall_ms"], "stage_ms": stage_ms}
-        )
-        return out_stats
+        return new_snap, self._commit(new_snap, edits=edits, data_commit=True)

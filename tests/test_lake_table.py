@@ -91,7 +91,7 @@ def test_commit_crash_leaves_old_head(spark, tmp_path):
 
 def test_append_after_evolution_backfills(spark, tmp_path):
     """Merging a batch with an extra column widens; a later plain append
-    without that column still works (null backfill via _prepare_rows)."""
+    without that column still works (null backfill via _normalize_rows)."""
     from etl_rs_spark.cdc.apply import apply_batch
 
     t = LakeTable.create(
@@ -110,6 +110,61 @@ def test_append_after_evolution_backfills(spark, tmp_path):
     got = t.read()
     assert got.count() == 4
     assert got.where(F.col("lang").isNull()).count() == 3
+
+
+@pytest.mark.parametrize("op", ["append", "overwrite"])
+@pytest.mark.parametrize("value", ["bigint", "string"])
+def test_bulk_write_casts_to_table_types(spark, tmp_path, op, value):
+    """append/overwrite write their rows in the table's column types, as
+    merge does: a frame whose ``value`` arrives as bigint or as digit
+    strings commits files every later read, lookup and change feed can
+    scan under the table's ``int``."""
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "t"),
+        "conv_id string, turn_idx int, value int, ts timestamp",
+        num_buckets=2,
+    )
+    df = _df(spark, 6, convs=2).select(
+        "*",
+        (F.col("turn_idx") * 10).cast(value).alias("value"),
+        (F.col("turn_idx") + 1).cast("long").alias("lsn"),
+    )
+    assert getattr(t, op)(df, lsn_col="lsn")["version"] == 1
+    want = sorted((f"c{i % 2}", i, i * 10) for i in range(6))
+    assert dict(t.read().dtypes)["value"] == "int"
+    got = t.read().select("conv_id", "turn_idx", "value").collect()
+    assert sorted(tuple(r) for r in got) == want
+    for tier in ("spark", "local"):
+        with lookup_tier(tier):
+            hit = t.lookup("c0")
+            assert dict(hit.dtypes)["value"] == "int"
+            assert sorted(tuple(r) for r in hit.select(
+                "conv_id", "turn_idx", "value"
+            ).collect()) == [w for w in want if w[0] == "c0"]
+    feed = t.changes(0)
+    assert dict(feed.dtypes)["value"] == "int"
+    assert sorted(
+        tuple(r) for r in feed.select("conv_id", "turn_idx", "value").collect()
+    ) == want
+
+
+@pytest.mark.parametrize("op", ["append", "overwrite"])
+def test_bulk_write_cast_failure_leaves_head(spark, tmp_path, op):
+    """A value the table type cannot hold fails the write under ANSI
+    casting; nothing commits, so HEAD and the state stay as they were."""
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "t"),
+        "conv_id string, turn_idx int, value int, ts timestamp",
+        num_buckets=2,
+    )
+    t.append(_df(spark, 4).withColumn("value", F.lit(1)))
+    bad = _df(spark, 4).withColumn("value", F.lit(1 << 40))
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        getattr(t, op)(bad)
+    assert t.current().version == 1
+    assert t.read().count() == 4
 
 
 def test_compact_and_expire(spark, tmp_path):
@@ -2578,3 +2633,23 @@ def test_snapshot_operation_stamps(spark, tmp_path):
     assert ops[5] == "properties"
     assert ops[6] == "delete"
     assert ops[7] == "rollback"
+
+
+def test_fast_forward_stamp_without_epoch_requalifies(spark, tmp_path):
+    """A publish stamp that records no branch epoch (two elements) is
+    not trusted as a same-life repeat publish: the fast-forward falls
+    back to the fork-point check, which rejects a main that moved
+    since the fork, instead of failing on the missing element."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=2)
+    t.append(_df(spark, 4))
+    t.create_branch("stage")
+    b = t.on_branch("stage")
+    b.append(_df(spark, 2))
+    t.fast_forward("stage")
+    cur = t.current()
+    assert len(cur.ff_source) == 3
+    t._commit(cur.child(ff_source=cur.ff_source[:2], operation="fast-forward"))
+    b.append(_df(spark, 2))
+    with pytest.raises(LoadError, match="not fast-forwardable"):
+        t.fast_forward("stage")
+    assert t.read().count() == 6
