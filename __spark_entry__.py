@@ -1429,13 +1429,12 @@ def q_cdc_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full maintenance lifecycle under the oracle: two CDC merges,
-    RewriteDataFiles-style compaction, then the DISTRIBUTED metadata
-    actions round 5 added — ``expire_snapshots(distributed=True)``
-    (executors diff live vs dead-only manifests, executor tasks delete
-    the pre-compaction files) and ``vacuum_orphans(distributed=True)``
-    (parallelized listing anti-joined against executor-parsed
-    manifests). The surviving table state must hash-equal the full LWW
-    replay — proving the maintenance plane deletes ONLY dead bytes.
+    RewriteDataFiles-style compaction, then the metadata actions —
+    ``expire_snapshots`` (deletes the dead-only manifests' files that
+    no kept snapshot lists: the pre-compaction files) and
+    ``vacuum_orphans`` (lists the data directory against every
+    retained manifest). The surviving table state must hash-equal the
+    full LWW replay — proving the maintenance plane deletes ONLY dead bytes.
     The expiry is asserted non-trivial (it must actually remove files
     and versions) so the entry cannot pass vacuously."""
     e = _t(spark, sf_dir, "events")
@@ -1465,10 +1464,10 @@ def q_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.merge(_batch(F.col("event_id") <= split), run_id="mx", batch_id=0)
     t.merge(_batch(F.col("event_id") > split), run_id="mx", batch_id=1)
     t.compact()
-    exp = t.expire_snapshots(keep_last=1, distributed=True)
+    exp = t.expire_snapshots(keep_last=1)
     if not (exp["files_deleted"] > 0 and exp["expired_versions"] > 0):
         raise AssertionError(f"expiry was a no-op: {exp}")
-    vac = t.vacuum_orphans(older_than_s=0, distributed=True)
+    vac = t.vacuum_orphans(older_than_s=0)
     if vac["orphans_deleted"] != 0:  # expiry left nothing behind
         raise AssertionError(f"expiry leaked orphans: {vac}")
     return t.read().select(

@@ -195,10 +195,8 @@ class StreamDriver:
                 self.table.compact()
         if self.retention_every and not stats.get("skipped"):
             if (batch_id + 1) % self.retention_every == 0:
-                self.table.expire_snapshots(
-                    keep_last=self.retention_keep_last, distributed=True
-                )
-                self.table.vacuum_orphans(distributed=True)
+                self.table.expire_snapshots(keep_last=self.retention_keep_last)
+                self.table.vacuum_orphans()
 
     def _reader(self):
         if self.fmt == "kafka":

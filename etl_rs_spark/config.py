@@ -88,7 +88,7 @@ class CdcConfig:
     compact_every: int | None = None
     #: run retention every N applied microbatches (None = never):
     #: expire_snapshots(keep_last=retention_keep_last) then an orphan
-    #: vacuum, both as DISTRIBUTED Spark actions — bounds snapshot
+    #: vacuum, both driver-side with no Spark job — bounds snapshot
     #: count, manifest bytes and dead data files over a 10^10-event
     #: run with no external scheduler. Vacuum keeps its in-flight
     #: grace (default 3h), so a concurrent writer's uncommitted files

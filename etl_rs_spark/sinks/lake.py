@@ -553,6 +553,14 @@ def _load_manifest(meta_dir: str, relpath: str) -> list[dict[str, Any]]:
     return doc["files"]
 
 
+def _path_suffix(path: str) -> str:
+    """A data file's identity for retention: its last three path
+    components (``commit-<v>-<uuid>/__b=N/part-<uuid>.parquet``), unique by
+    the uuids and the same however the table root was spelled (a
+    symlink, a relative path) by the handle that wrote the entry."""
+    return "/".join(path.split("/")[-3:])
+
+
 def _file_spec(f: dict[str, Any], snap: "Snapshot") -> int:
     """Bucket-spec (num_buckets) a data file was written under. Entries
     loaded from a manifest carry their group's spec (_load_manifest);
@@ -1306,6 +1314,14 @@ class LakeTable:
         self._attach_files_loader(snap)
         return snap
 
+    def _versions(self) -> list[int]:
+        """Sorted numbers of the version files on disk (every retained
+        snapshot of every branch)."""
+        return sorted(
+            int(os.path.basename(p)[len("version-") : -len(".json")])
+            for p in glob.glob(os.path.join(self.meta_dir, "version-*.json"))
+        )
+
     def _attach_files_loader(self, snap: Snapshot) -> None:
         """Bind a snapshot to this table's meta/ dir, so ``snap.files``
         can load its manifests."""
@@ -1326,16 +1342,7 @@ class LakeTable:
         the downward lineage walk already has. A file expiring between
         the listing and the read is skipped the same way."""
         tip = self.current()
-        versions = sorted(
-            v
-            for v in (
-                int(p.split("version-")[1].split(".")[0])
-                for p in glob.glob(
-                    os.path.join(self.meta_dir, "version-*.json")
-                )
-            )
-            if v <= tip.version
-        )
+        versions = [v for v in self._versions() if v <= tip.version]
 
         def _committed_at(idx: int) -> int:
             try:
@@ -2436,10 +2443,8 @@ class LakeTable:
         expire_snapshots trims it. O(retained versions) metadata
         reads, no data touched."""
         rows = []
-        for p in sorted(
-            glob.glob(os.path.join(self.meta_dir, "version-*.json"))
-        ):
-            s = Snapshot.from_json(open(p).read())
+        for v in self._versions():
+            s = self.snapshot(v)
             # the manifest-list summaries carry the counts — zero
             # manifest files opened
             n_files = sum(m["n_files"] for m in s.manifest_list)
@@ -3541,7 +3546,21 @@ class LakeTable:
         them (``_normalize_rows``): absent columns are NULL, a column
         of another type is cast, and under ANSI a value the cast cannot
         take fails the append before anything commits."""
-        snap = self.current()
+        return self._bulk_write(self.current(), df, lsn_col, "append")
+
+    def _bulk_write(
+        self,
+        snap: Snapshot,
+        df: DataFrame,
+        lsn_col: str | None,
+        operation: str,
+        emptied: Iterable[str] = (),
+    ) -> dict[str, Any]:
+        """The body of ``append`` and ``overwrite``: rows normalized to
+        the table's types, written, and committed on top of ``snap`` as
+        one group edit that first empties the ``emptied`` groups. The
+        watermark rises to the max ``_lsn`` the written files store, so
+        ``changes()`` from this version on does not emit them again."""
         rows = _normalize_rows(
             df,
             snap.schema(),
@@ -3550,11 +3569,36 @@ class LakeTable:
             F.lit(0),
         )
         new_files = self._write_files(snap, rows, snap.num_buckets)
-        new = snap.child(operation="append")
-        self._commit(
-            new, edits=self._edit_groups(snap, new_files), data_commit=True
+        new = snap.child(
+            operation=operation,
+            watermark_lsn=max(
+                snap.watermark_lsn, self._max_stored_lsn(new_files)
+            ),
         )
-        return {"version": new.version, "mode": "append"}
+        self._commit(
+            new,
+            edits=self._edit_groups(snap, new_files, emptied),
+            data_commit=True,
+        )
+        return {"version": new.version, "mode": operation}
+
+    def _max_stored_lsn(self, new_files: list[dict[str, Any]]) -> int:
+        """Max ``_lsn`` stored in freshly written files, -1 when none
+        holds one: the footers' ``max_lsn`` first, then one
+        column-pruned max over just the files whose footers carry no
+        ``_lsn`` stats (a stats-less row group must not let the
+        watermark fall below its rows). SQL max and parquet stats both
+        ignore nulls."""
+        his = [f["max_lsn"] for f in new_files if f.get("max_lsn") is not None]
+        no_stats = [f["path"] for f in new_files if f.get("max_lsn") is None]
+        if no_stats:
+            his.append(
+                self.spark.read.schema(f"{LSN_COL} long")
+                .parquet(*no_stats)
+                .agg(F.max(LSN_COL))
+                .first()[0]
+            )
+        return max((h for h in his if h is not None), default=-1)
 
     def add_files(self, paths: Sequence[str]) -> dict[str, Any]:
         """Register EXISTING parquet files into the table without
@@ -3731,22 +3775,13 @@ class LakeTable:
         loaded. Rows are normalized to the table's types as in
         ``append``."""
         snap = self.current()
-        rows = _normalize_rows(
+        return self._bulk_write(
+            snap,
             df,
-            snap.schema(),
-            F.col(lsn_col) if lsn_col else F.lit(-1),
-            F.lit(False),
-            F.lit(0),
+            lsn_col,
+            "overwrite",
+            [m["group"] for m in snap.manifest_list],
         )
-        new_files = self._write_files(snap, rows, snap.num_buckets)
-        new = snap.child(operation="overwrite")
-        emptied = [m["group"] for m in snap.manifest_list]
-        self._commit(
-            new,
-            edits=self._edit_groups(snap, new_files, emptied),
-            data_commit=True,
-        )
-        return {"version": new.version, "mode": "overwrite"}
 
     # ------------------------------------------------------ maintenance --
     def expire_snapshots(
@@ -3765,15 +3800,15 @@ class LakeTable:
         than their limit — aged branches/tags stop pinning history, the
         un-aged ones keep the full contract above.
 
-        ``distributed=True`` is the 100-TB shape (Iceberg's
-        expire_snapshots Spark action): executors parse the live and
-        dead-only manifests, the files-to-delete set is a left-anti
-        join, and the deletes themselves run in executor tasks — the
-        driver holds only O(manifests) paths and a per-partition delete
-        count, never the file list. That matters exactly when expiry is
-        biggest: right after a full-table compaction, the dead-only
-        manifests hold every pre-compaction file."""
-        dropped_refs: list[str] = []
+        The dead-file set is a set difference on the driver: entries of
+        the manifests only expired snapshots reference, minus every
+        entry a kept snapshot references, each unique manifest loaded
+        once and no Spark job run. Liveness is keyed by path suffix
+        (``_path_suffix``), so a file written through a handle that
+        spelled the table root differently (a symlink) is still
+        recognised as live; a suffix collision can only keep a file.
+        Imported (``add_files``) entries are never deleted.
+        ``distributed`` is accepted and ignored."""
         now_ms = int(time.time() * 1000)
         rr = self._head_snapshot().ref_retention
         if rr:
@@ -3790,7 +3825,6 @@ class LakeTable:
                         self.current().child(operation="expire-refs"),
                         branch_edits={b: None},
                     )
-                    dropped_refs.append(f"branch:{b}")
             snap = self.current()
             aged_tags = []
             for tname, pinned in snap.refs.items():
@@ -3811,61 +3845,21 @@ class LakeTable:
                     snap.child(refs=refs, operation="expire-refs"),
                     ref_retention_edits={f"tag:{t}": None for t in aged_tags},
                 )
-                dropped_refs += [f"tag:{t}" for t in aged_tags]
         tips = _tips(self._head_snapshot())
-        versions = sorted(
-            int(p.split("version-")[1].split(".")[0])
-            for p in glob.glob(os.path.join(self.meta_dir, "version-*.json"))
-        )
+        versions = self._versions()
         keep = set(versions[-keep_last:]) | {int(v) for v in tips.values()}
         for tv in set(tips.values()):
             keep |= {int(v) for v in self.snapshot(int(tv)).refs.values()}
-        # each unique manifest is loaded at most ONCE: live data paths
-        # come from manifests any kept snapshot references; candidate-
-        # dead paths only from manifests referenced exclusively by
-        # expired snapshots (files in a shared manifest are live by
-        # construction).
-        live_meta: set[str] = set()  # manifest + wm-segment files kept
-        for v in keep:
-            s = self.snapshot(v)
-            live_meta.update(m["path"] for m in s.manifest_list)
-            live_meta.update(s.wm_segments)
-        dead_meta: set[str] = set()
-        for v in versions:
-            if v not in keep:
-                s = self.snapshot(v)
-                dead_meta.update(m["path"] for m in s.manifest_list)
-                dead_meta.update(s.wm_segments)
-        live_mf = [
-            r for r in live_meta if r.split("/")[-1].startswith("mf-")
-        ]
-        dead_mf = [
-            r
-            for r in dead_meta - live_meta
-            if r.split("/")[-1].startswith("mf-")
-        ]
-        if distributed:
-            removed_files = self._expire_delete_distributed(live_mf, dead_mf)
-        else:
-            live: set[str] = set()
-            dead_candidates: set[str] = set()
-            for rel in live_mf:
-                live.update(
-                    e["path"] for e in _load_manifest(self.meta_dir, rel)
-                )
-            for rel in dead_mf:
-                # external (add_files-imported) files are the user's —
-                # never deletion candidates, even once dead
-                dead_candidates.update(
-                    e["path"]
-                    for e in _load_manifest(self.meta_dir, rel)
-                    if not e.get("external")
-                )
-            removed_files = 0
-            for path in dead_candidates - live:
-                if os.path.exists(path):
-                    os.remove(path)
-                    removed_files += 1
+        live_meta = self._meta_refs(keep)
+        dead_meta = (
+            self._meta_refs(v for v in versions if v not in keep) - live_meta
+        )
+        live = self._entry_paths(live_meta)
+        removed_files = 0
+        for sfx, path in self._entry_paths(dead_meta).items():
+            if path is not None and sfx not in live and os.path.exists(path):
+                os.remove(path)
+                removed_files += 1
         for v in versions:
             if v not in keep:
                 os.remove(
@@ -3876,7 +3870,7 @@ class LakeTable:
         # the same way); wm-history segments are retained while any
         # surviving snapshot lists them
         removed_manifests = 0
-        for rel in dead_meta - live_meta:
+        for rel in dead_meta:
             p = os.path.join(self.meta_dir, rel)
             if os.path.exists(p):
                 os.remove(p)
@@ -3887,72 +3881,32 @@ class LakeTable:
             "manifests_deleted": removed_manifests,
         }
 
-    def _manifest_paths_df(
-        self, mf_rel: Sequence[str], include_external: bool = True
-    ) -> DataFrame | None:
-        """Distributed DF of suffix-normalized data-file paths from the
-        given manifest files (parsed on executors); the suffix (last
-        three path components, uuid-bearing —
-        ``commit-<uuid>/__b=N/part-<uuid>.parquet``) is collision-free
-        and invariant to how the table root was spelled when each
-        writer opened it. None when there is no manifest."""
-        if not mf_rel:
-            return None
-        raw = (
-            self.spark.read.schema(
-                "files array<struct<path:string,external:boolean>>"
-            )
-            .option("multiLine", True)
-            .json([os.path.join(self.meta_dir, r) for r in sorted(mf_rel)])
-        )
-        exploded = raw.select(F.explode("files").alias("f"))
-        if not include_external:
-            # external (add_files) entries are the user's files — never
-            # DELETION candidates. They stay in LIVE sets
-            # (include_external=True) so liveness joins still protect
-            # an import that happens to sit under the table root.
-            exploded = exploded.where(
-                ~F.coalesce(F.col("f.external"), F.lit(False))
-            )
-        return exploded.select(
-            F.substring_index(F.col("f.path"), "/", -3).alias("sfx"),
-            F.col("f.path").alias("path"),
-        )
+    def _meta_refs(self, versions: Iterable[int]) -> set[str]:
+        """Manifest and wm-segment files (relative to meta/) referenced
+        by the given snapshot versions."""
+        out: set[str] = set()
+        for v in versions:
+            s = self.snapshot(v)
+            out.update(m["path"] for m in s.manifest_list)
+            out.update(s.wm_segments)
+        return out
 
-    def _expire_delete_distributed(
-        self, live_mf: Sequence[str], dead_mf: Sequence[str]
-    ) -> int:
-        """Delete dead-only data files as a Spark action: dead-manifest
-        entries anti-joined against every kept snapshot's entries, the
-        surviving doomed paths deleted inside executor tasks (only a
-        per-partition count returns to the driver)."""
-        dead_df = self._manifest_paths_df(dead_mf, include_external=False)
-        if dead_df is None:
-            return 0
-        live_df = self._manifest_paths_df(live_mf)
-        doomed = dead_df
-        if live_df is not None:
-            doomed = dead_df.join(
-                live_df.select("sfx"), on="sfx", how="left_anti"
-            )
-        # a path can ride several dead manifests (carried forward
-        # across snapshots): dedupe before deleting so the count is
-        # exact
-        doomed = doomed.select("path").distinct()
-
-        def rm(rows):
-            import os as _os
-
-            n = 0
-            for r in rows:
-                try:
-                    _os.remove(r["path"])
-                    n += 1
-                except FileNotFoundError:
-                    pass
-            yield n
-
-        return sum(doomed.rdd.mapPartitions(rm).collect())
+    def _entry_paths(self, meta_refs: Iterable[str]) -> dict[str, str | None]:
+        """Data files listed by the manifests among ``meta_refs``, each
+        manifest loaded once: ``_path_suffix`` -> the entry's path, or
+        None for an imported (``add_files``) entry — live, but the
+        user's file, never a deletion candidate."""
+        out: dict[str, str | None] = {}
+        for rel in meta_refs:
+            if not os.path.basename(rel).startswith("mf-"):
+                continue
+            for e in _load_manifest(self.meta_dir, rel):
+                sfx = _path_suffix(e["path"])
+                if e.get("external"):
+                    out[sfx] = None
+                else:
+                    out.setdefault(sfx, e["path"])
+        return out
 
     def vacuum_orphans(
         self,
@@ -3964,7 +3918,9 @@ class LakeTable:
         _write_files and _commit leaves its files on disk but in no
         manifest — invisible to readers, but they accumulate. Safe
         against every retained snapshot (expire_snapshots first if old
-        manifests should stop pinning files).
+        manifests should stop pinning files). Manifest and wm-segment
+        files no snapshot references (a writer that crashed between
+        writing its manifests and _commit) go the same way.
 
         ``older_than_s`` skips unreferenced files younger than the
         threshold: an IN-FLIGHT writer between _write_files and _commit
@@ -3973,136 +3929,43 @@ class LakeTable:
         older-than-3-days for the same reason). Pass 0 only when no
         writer can be running.
 
-        ``distributed=True`` is the 100-TB shape — exactly how
-        Iceberg's remove_orphan_files runs as a Spark action: the
-        storage LISTING is a parallelized walk over the table's
-        commit directories, the LIVE set comes from executors parsing
-        the manifest files (no driver-side file-list hydration — the
-        driver never holds more than O(groups) manifest paths), and
-        liveness is a left-anti join. Only the orphan rows — crash
-        residue, small by construction — are collected and deleted.
-        The join key is the path's last three components
-        (``commit-<uuid>/__b=N/part-<uuid>.parquet``), which is
-        collision-free by the uuids and invariant to how the table
-        root was spelled when each writer opened it."""
-        live_meta: set[str] = set()
-        removed = skipped_young = 0
+        The live set comes from the manifests of every retained
+        snapshot, each loaded once, and the listing is a walk of the
+        table's data directory: no Spark job runs. A listed file is
+        live when its path suffix (``_path_suffix``) matches a manifest
+        entry's, not its full path: a handle that opened the table
+        through another spelling of its root (a symlink) writes entries
+        under that spelling, and comparing full paths would delete
+        them. A suffix collision can only keep a file. Imported
+        (``add_files``) entries under the data directory are live like
+        any other. ``distributed`` is accepted and ignored."""
         cutoff = time.time() - older_than_s
-        if distributed:
-            mf_rel: set[str] = set()
-            for p in glob.glob(os.path.join(self.meta_dir, "version-*.json")):
-                v = int(p.split("version-")[1].split(".")[0])
-                s = self.snapshot(v)
-                mf_rel.update(m["path"] for m in s.manifest_list)
-                live_meta.update(s.wm_segments)
-            live_meta |= mf_rel
-
-            def sfx(c: F.Column) -> F.Column:
-                return F.substring_index(c, "/", -3)
-
-            df = self._manifest_paths_df(sorted(mf_rel))
-            live_df = None if df is None else df.select("sfx")
-            root = os.path.abspath(self.data_dir)
-            subdirs = sorted(
-                e.path for e in os.scandir(root) if e.is_dir()
-            )
-
-            def walk(dirs):
-                import os as _os
-
-                for d in dirs:
-                    for dirpath, _unused, names in _os.walk(d):
-                        for n in names:
-                            if not n.endswith(".parquet"):
-                                continue
-                            p = _os.path.join(dirpath, n)
-                            try:
-                                yield (p, _os.path.getmtime(p))
-                            except OSError:
-                                pass  # raced with a concurrent delete
-
-            loose = [  # parquet directly under data/: never written by
-                # the engine, but the driver path would see them
-                (e.path, os.path.getmtime(e.path))
-                for e in os.scandir(root)
-                if e.is_file() and e.name.endswith(".parquet")
-            ]
-            if subdirs or loose:
-                listed = self.spark.createDataFrame(
-                    self.spark.sparkContext.parallelize(
-                        subdirs, max(1, len(subdirs))
-                    ).mapPartitions(walk),
-                    "path string, mtime double",
-                )
-                if loose:
-                    listed = listed.unionAll(
-                        self.spark.createDataFrame(
-                            loose, "path string, mtime double"
-                        )
-                    )
-                listed = listed.select(
-                    "path", "mtime", sfx(F.col("path")).alias("sfx")
-                )
-                if live_df is not None:
-                    orphans = listed.join(live_df, on="sfx", how="left_anti")
-                else:
-                    orphans = listed
-                for r in orphans.select("path", "mtime").collect():
-                    if r["mtime"] > cutoff:
-                        skipped_young += 1
-                        continue
-                    try:
-                        os.remove(r["path"])
-                        removed += 1
-                    except FileNotFoundError:
-                        pass
-        else:
-            live: set[str] = set()
-            for p in glob.glob(os.path.join(self.meta_dir, "version-*.json")):
-                v = int(p.split("version-")[1].split(".")[0])
-                s = self.snapshot(v)
-                live.update(f["path"] for f in s.files)
-                live_meta.update(m["path"] for m in s.manifest_list)
-                live_meta.update(s.wm_segments)
-            live_abs = {os.path.abspath(x) for x in live}
+        live_meta = self._meta_refs(self._versions())
+        live = self._entry_paths(live_meta)
+        unreferenced = [
+            ("orphans_deleted", p)
             for p in glob.glob(
-                os.path.join(self.data_dir, "**", "*.parquet"),
-                recursive=True,
-            ):
-                if os.path.abspath(p) in live_abs:
-                    continue
-                try:
-                    if os.path.getmtime(p) > cutoff:
-                        skipped_young += 1
-                        continue
-                    os.remove(p)
-                    removed += 1
-                except FileNotFoundError:
-                    pass
-        # manifest/segment files referenced by NO snapshot: residue of a
-        # writer that crashed between _shard_manifests and _commit. Same
-        # age gate — an in-flight writer has exactly such files.
-        removed_manifests = 0
-        live_meta_abs = {
-            os.path.abspath(os.path.join(self.meta_dir, r))
-            for r in live_meta
-        }
-        for p in glob.glob(os.path.join(self.meta_dir, "manifests", "*.json")):
-            if os.path.abspath(p) in live_meta_abs:
-                continue
+                os.path.join(self.data_dir, "**", "*.parquet"), recursive=True
+            )
+            if _path_suffix(p) not in live
+        ] + [
+            ("orphan_manifests_deleted", p)
+            for p in glob.glob(os.path.join(self.meta_dir, "manifests", "*.json"))
+            if os.path.relpath(p, self.meta_dir) not in live_meta
+        ]
+        out = dict.fromkeys(
+            ("orphans_deleted", "skipped_young", "orphan_manifests_deleted"), 0
+        )
+        for key, p in unreferenced:
             try:
                 if os.path.getmtime(p) > cutoff:
-                    skipped_young += 1
+                    out["skipped_young"] += 1
                     continue
                 os.remove(p)
-                removed_manifests += 1
+                out[key] += 1
             except FileNotFoundError:
                 pass
-        return {
-            "orphans_deleted": removed,
-            "skipped_young": skipped_young,
-            "orphan_manifests_deleted": removed_manifests,
-        }
+        return out
 
     def compact(
         self,
@@ -4612,29 +4475,17 @@ class LakeTable:
     ) -> tuple[list[int], list[int], list[int], Any]:
         """Footer reconcile of a deferred seed merge: affected = buckets
         that produced rows, split into the planned fold and delta legs,
-        and hi_lsn = max stored _lsn — the max over the stored winners,
-        not over the raw batch the skipped stats job would have
-        aggregated (SQL max and parquet stats both ignore nulls).
+        and hi_lsn = max stored _lsn (``_max_stored_lsn``) — the max
+        over the stored winners, not over the raw batch the skipped
+        stats job would have aggregated.
         Returns (affected, fold, cold, hi_lsn)."""
         affected = sorted({f["bucket"] for f in new_files})
         fold_set = set(fold)
-        his = [f["max_lsn"] for f in new_files if f.get("max_lsn") is not None]
-        # a footer without _lsn stats (a stats-less row group) must not
-        # let the watermark fall below its rows: one column-pruned max
-        # over just those files
-        no_stats = [f["path"] for f in new_files if f.get("max_lsn") is None]
-        if no_stats:
-            his.append(
-                self.spark.read.schema(f"{LSN_COL} long")
-                .parquet(*no_stats)
-                .agg(F.max(LSN_COL))
-                .first()[0]
-            )
         return (
             affected,
             [b for b in affected if b in fold_set],
             [b for b in affected if b not in fold_set],
-            max((h for h in his if h is not None), default=None),
+            self._max_stored_lsn(new_files),
         )
 
     def _merge_commit(

@@ -96,18 +96,9 @@ def parse_args(argv):
 
     e = sub.add_parser("expire-snapshots")
     e.add_argument("--keep-last", type=int, default=5)
-    e.add_argument("--distributed", action="store_true",
-                   help="compute and delete the dead-file set as Spark "
-                        "jobs (Iceberg's expire_snapshots action shape; "
-                        "use after large compactions)")
 
     v = sub.add_parser("vacuum")
     v.add_argument("--older-than-s", type=float, default=3 * 3600)
-    v.add_argument("--distributed", action="store_true",
-                   help="run listing + liveness as Spark jobs "
-                        "(Iceberg's remove_orphan_files action shape; "
-                        "use on large tables — the driver never holds "
-                        "the file list)")
 
     af = sub.add_parser("add-files")
     af.add_argument("--paths", required=True,
@@ -244,13 +235,9 @@ def main(argv=None) -> int:
             props[k] = v if v != "" else None
         out = t.set_properties(props)
     elif args.cmd == "expire-snapshots":
-        out = t.expire_snapshots(
-            keep_last=args.keep_last, distributed=args.distributed
-        )
+        out = t.expire_snapshots(keep_last=args.keep_last)
     elif args.cmd == "vacuum":
-        out = t.vacuum_orphans(
-            older_than_s=args.older_than_s, distributed=args.distributed
-        )
+        out = t.vacuum_orphans(older_than_s=args.older_than_s)
     elif args.cmd == "add-files":
         out = t.add_files(args.paths.split(","))
     elif args.cmd == "lookup":

@@ -19,11 +19,10 @@ visibly. Shape:
   every wave boundary is a real kill/resume, so the run also soaks the
   recovery path ~wave-count times (batch ids must keep advancing, no
   reprocessing — asserted).
-- Inline maintenance: ``compact_every`` + distributed
-  ``retention_every`` (snapshot expiry + orphan vacuum as Spark
-  actions), so snapshot count, manifest bytes and dead files must stay
-  O(keep_last), not O(batches) — the per-wave metadata series in the
-  report is the evidence.
+- Inline maintenance: ``compact_every`` + ``retention_every``
+  (snapshot expiry + orphan vacuum), so snapshot count, manifest bytes
+  and dead files must stay O(keep_last), not O(batches) — the
+  per-wave metadata series in the report is the evidence.
 - Final verification is ENGINE-INDEPENDENT: the full stream is
   regenerated and reduced in one pass — ``groupBy(key).max_by(row,
   (ts, lsn))``, drop keys whose winner is a delete, coerce the dirty

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_rs_spark.errors import LoadError
 from etl_rs_spark.sinks.lake import LakeTable
+from tests.util import count_manifest_loads, spark_jobs_during
 
 DDL = "conv_id string, turn_idx int, text string, ts timestamp"
 
@@ -221,6 +222,10 @@ def test_compact_migrates_import_and_expiry_spares_originals(
 
 
 def test_distributed_expiry_spares_externals(spark, tmp_path):
+    """Expiry after the import was compacted away deletes none of the
+    user's imported files, runs no Spark job and loads no manifest
+    twice. (The name predates the removal of the executor-side
+    expiry.)"""
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=4)
     files = _write_corpus(str(tmp_path / "c"), _rows(20), n_files=2)
     t.add_files([str(tmp_path / "c")])
@@ -231,9 +236,16 @@ def test_distributed_expiry_spares_externals(spark, tmp_path):
                 [("x", 999, "pad", dt.datetime(2025, 1, 1))], DDL
             )
         )
-    res = t.expire_snapshots(keep_last=2, distributed=True)
+    got = []
+    with count_manifest_loads() as loads:
+        jobs = spark_jobs_during(
+            spark, lambda: got.append(t.expire_snapshots(keep_last=2))
+        )
+    res = got[0]
+    assert jobs == []
+    assert loads and len(loads) == len(set(loads))
     assert res["expired_versions"] > 0
-    assert all(os.path.exists(p) for p in files), "distributed expiry ate user files"
+    assert all(os.path.exists(p) for p in files), "expiry ate user files"
 
 
 def test_merge_after_import_migrates_touched_buckets(spark, tmp_path):
@@ -276,15 +288,24 @@ def test_distributed_vacuum_protects_external_under_table_root(
     spark, tmp_path
 ):
     """An import that physically sits under the table's data directory
-    must survive vacuum_orphans(distributed=True) — the live set keeps
-    external entries even though they are never deletion candidates."""
+    must survive vacuum_orphans — the live set keeps external entries
+    even though they are never deletion candidates. The vacuum runs no
+    Spark job and loads no manifest twice. (The name predates the
+    removal of the executor-side vacuum.)"""
     t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=4)
     inside = os.path.join(t.data_dir, "imported")
     files = _write_corpus(inside, _rows(10), n_files=1)
     t.add_files([inside])
-    res = t.vacuum_orphans(older_than_s=0.0, distributed=True)
+    got = []
+    with count_manifest_loads() as loads:
+        jobs = spark_jobs_during(
+            spark, lambda: got.append(t.vacuum_orphans(older_than_s=0.0))
+        )
+    res = got[0]
+    assert jobs == []
+    assert loads and len(loads) == len(set(loads))
     assert all(os.path.exists(p) for p in files), (
-        f"distributed vacuum deleted live imported files: {res}"
+        f"vacuum deleted live imported files: {res}"
     )
     got = t.read().count()
     assert got == 10

@@ -8,7 +8,12 @@ from pyspark.sql import functions as F
 
 from etl_rs_spark.errors import LoadError
 from etl_rs_spark.sinks.lake import LakeTable, bucket_expr
-from tests.util import assert_local_twin, count_manifest_loads, lookup_tier
+from tests.util import (
+    assert_local_twin,
+    count_manifest_loads,
+    lookup_tier,
+    spark_jobs_during,
+)
 
 DDL = "conv_id string, turn_idx int, ts timestamp"
 
@@ -184,13 +189,12 @@ def test_compact_and_expire(spark, tmp_path):
 def test_expire_snapshots_distributed_matches_driver_path(
     spark, tmp_path
 ):
-    """Distributed expiry (Iceberg's expire_snapshots Spark action) —
-    executors parse live + dead-only manifests, anti-join picks the
-    doomed files, executor tasks delete them — removes EXACTLY the
-    files the driver path would: twin tables, identical history
-    (appends → full compact), one expired each way, identical stats,
-    identical surviving file sets, zero driver manifest loads on the
-    distributed side, and both tables still read all rows."""
+    """Expiry is one driver-side set difference over the manifest
+    list: twin tables with identical history (appends → full compact)
+    expire to identical stats and surviving file sets, the expiry runs
+    no Spark job and loads no manifest twice, and both tables still
+    read all rows. (The name predates the removal of the executor-side
+    expiry this test once compared against.)"""
     import glob as _glob
     import os as _os
 
@@ -214,11 +218,15 @@ def test_expire_snapshots_distributed_matches_driver_path(
         }
 
     exp_drv = tables["drv"].expire_snapshots(keep_last=1)
+    got = []
     with count_manifest_loads() as loads:
-        exp_dist = tables["dist"].expire_snapshots(
-            keep_last=1, distributed=True
+        jobs = spark_jobs_during(
+            spark,
+            lambda: got.append(tables["dist"].expire_snapshots(keep_last=1)),
         )
-    assert loads == []  # executors parsed the manifests, not the driver
+    exp_dist = got[0]
+    assert jobs == []
+    assert loads and len(loads) == len(set(loads))
     assert exp_dist == exp_drv
     assert exp_dist["files_deleted"] > 0
     # identical histories delete identical file sets (paths differ only
@@ -227,7 +235,7 @@ def test_expire_snapshots_distributed_matches_driver_path(
     for t in tables.values():
         assert t.read().count() == 24
         # orphan sweep right after: nothing left to reclaim
-        assert t.vacuum_orphans(older_than_s=0, distributed=True) == {
+        assert t.vacuum_orphans(older_than_s=0) == {
             "orphans_deleted": 0,
             "skipped_young": 0,
             "orphan_manifests_deleted": 0,
@@ -851,13 +859,13 @@ def test_vacuum_orphans_removes_only_unreferenced(spark, tmp_path):
 
 
 def test_vacuum_orphans_distributed(spark, tmp_path):
-    """The distributed vacuum (Iceberg's remove_orphan_files as a
-    Spark action) finds the same orphans as the driver path with ZERO
-    driver-side manifest loads and zero file-list hydrations: listing
-    is a parallelized walk, the live set is an executor-side manifest
-    parse, liveness a left-anti join. Old orphans (deep and root-level)
-    go, young ones and every live file stay, the table reads exactly
-    as before — across a spec evolution and a legacy-style check."""
+    """Vacuum (Iceberg's remove_orphan_files) runs no Spark job and
+    loads each manifest at most once: the data directory is listed on
+    the driver and matched by path suffix against every retained
+    manifest. Old orphans (deep and root-level) go, young ones and
+    every live file stay, the table reads exactly as before — across a
+    spec evolution. (The name predates the removal of the
+    executor-side vacuum this test once exercised.)"""
     import glob as _glob
     import os as _os
 
@@ -896,9 +904,12 @@ def test_vacuum_orphans_distributed(spark, tmp_path):
     _os.utime(old_deep, stale)
     _os.utime(old_root, stale)
 
+    got = []
     with count_manifest_loads() as loads:
-        stats = t.vacuum_orphans(distributed=True)
-    assert loads == []  # executors parsed the manifests, not the driver
+        jobs = spark_jobs_during(spark, lambda: got.append(t.vacuum_orphans()))
+    stats = got[0]
+    assert jobs == []
+    assert loads and len(loads) == len(set(loads))
     assert stats["orphans_deleted"] == 2
     assert stats["skipped_young"] == 1
     assert not _os.path.exists(old_deep) and not _os.path.exists(old_root)
@@ -911,13 +922,181 @@ def test_vacuum_orphans_distributed(spark, tmp_path):
     assert after == live_before | {young}
     assert t.read().count() == rows_before
     # and once the in-flight grace elapses, the young orphan goes too
-    stats = t.vacuum_orphans(older_than_s=0, distributed=True)
+    stats = t.vacuum_orphans(older_than_s=0)
     assert stats["orphans_deleted"] == 1
     assert after - {young} == set(
         _glob.glob(
             _os.path.join(t.data_dir, "**", "*.parquet"), recursive=True
         )
     )
+
+
+def _rows_from(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.format_string("c%d", F.col("id") % 4).alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
+    )
+
+
+def _parquet_under(d):
+    import glob as _glob
+
+    return set(_glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+
+
+@pytest.mark.parametrize("via", ["real", "link"])
+def test_retention_keeps_files_written_through_another_root_spelling(
+    spark, tmp_path, via
+):
+    """One table written through two handles whose roots differ only by
+    a symlink: each handle's manifest entries spell the root its own
+    way. Vacuum and, after a compaction, expiry run from either handle
+    delete no live file, and the table reads as before."""
+    (tmp_path / "x").mkdir()
+    os.symlink(tmp_path / "x", tmp_path / "y")
+    handles = {
+        "real": LakeTable.create(
+            spark, str(tmp_path / "x" / "t"), DDL, num_buckets=2
+        )
+    }
+    handles["link"] = LakeTable.load(spark, str(tmp_path / "y" / "t"))
+    handles["real"].append(_rows_from(spark, 0, 6))
+    handles["link"].append(_rows_from(spark, 6, 12))
+    t = handles[via]
+    rows = sorted(t.read().collect())
+    assert len(rows) == 12
+
+    def live_files_exist():
+        return all(os.path.exists(f["path"]) for f in t.current().files)
+
+    assert t.vacuum_orphans(older_than_s=0)["orphans_deleted"] == 0
+    assert live_files_exist()
+    assert sorted(t.read().collect()) == rows
+    t.compact()
+    assert t.expire_snapshots(keep_last=1)["files_deleted"] > 0
+    assert t.vacuum_orphans(older_than_s=0)["orphans_deleted"] == 0
+    assert live_files_exist()
+    assert sorted(t.read().collect()) == rows
+
+
+def test_retention_honours_every_reference_kind(spark, tmp_path):
+    """One table carrying every reference retention must honour — a
+    tag on main, a branch tip, add_files imports inside and outside the
+    table root — plus deep, root-level and young crashed-writer orphans.
+    Expiry deletes exactly the files that only expired snapshots list
+    (never an import); vacuum deletes exactly the aged unreferenced
+    files. Each runs no Spark job and loads no manifest twice, and
+    main, the branch and the tag read as before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=2)
+    t.append(_rows_from(spark, 0, 6))
+    t.create_tag("v1")
+
+    def imported(i, d):
+        os.makedirs(d)
+        p = os.path.join(d, "part-0.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "conv_id": [f"e{i}"],
+                    "turn_idx": pa.array([500 + i], pa.int32()),
+                    "ts": pa.array([1700000000 * 10**6], pa.timestamp("us")),
+                }
+            ),
+            p,
+        )
+        t.add_files([p])
+        return p
+
+    # the import under the root stays listed by the branch tip; the one
+    # outside is listed only by main snapshots the expiry drops
+    imports = [imported(0, os.path.join(t.data_dir, "imported"))]
+    t.create_branch("dev")
+    dev = t.on_branch("dev")
+    dev.append(_rows_from(spark, 100, 104))
+    imports.append(imported(1, str(tmp_path / "ext")))
+    for lo in (6, 12, 18):
+        t.append(_rows_from(spark, lo, lo + 6))
+    t.compact()
+    tag_v = t.tags()["v1"]
+    want = {
+        "main": sorted(t.read().collect()),
+        "dev": sorted(dev.read().collect()),
+        "tag": sorted(t.read(version=tag_v).collect()),
+    }
+    meta = t.meta_dir
+    listed = {
+        v: {f["path"] for f in t.snapshot(v).files}
+        for v in (
+            int(n[len("version-") : -len(".json")])
+            for n in os.listdir(meta)
+            if n.startswith("version-")
+        )
+    }
+    # crashed-writer residue: deep and root-level orphans aged past the
+    # grace, one young deep orphan
+    crash = os.path.join(t.data_dir, "commit-99999999-deadbeef", "__b=0")
+    os.makedirs(crash)
+    old_deep, young = (os.path.join(crash, f"part-{n}.parquet") for n in "ab")
+    old_root = os.path.join(t.data_dir, "orphan-root.parquet")
+    for p in (old_deep, young, old_root):
+        pq.write_table(pa.table({"k": ["x"]}), p)
+    os.utime(old_deep, (1, 1))
+    os.utime(old_root, (1, 1))
+
+    def run(action):
+        got = []
+        with count_manifest_loads() as loads:
+            jobs = spark_jobs_during(spark, lambda: got.append(action()))
+        assert jobs == []
+        assert loads and len(loads) == len(set(loads))
+        return got[0]
+
+    before = _parquet_under(t.data_dir)
+    exp = run(lambda: t.expire_snapshots(keep_last=1))
+    kept = {
+        v
+        for v in listed
+        if os.path.exists(os.path.join(meta, f"version-{v:08d}.json"))
+    }
+    assert tag_v in kept and t.branches()["dev"] in kept
+    assert exp["expired_versions"] == len(listed) - len(kept) > 0
+    only_expired = set().union(
+        *(listed[v] for v in listed if v not in kept)
+    ) - set().union(*(listed[v] for v in kept)) - set(imports)
+    assert only_expired
+    after = _parquet_under(t.data_dir)
+    assert after == before - only_expired
+    assert exp["files_deleted"] == len(only_expired)
+    assert all(os.path.exists(p) for p in imports)
+
+    vac = run(lambda: t.vacuum_orphans(older_than_s=3600))
+    assert vac == {
+        "orphans_deleted": 2,
+        "skipped_young": 1,
+        "orphan_manifests_deleted": 0,
+    }
+    assert _parquet_under(t.data_dir) == after - {old_deep, old_root}
+    assert all(os.path.exists(p) for p in imports)
+    assert sorted(t.read().collect()) == want["main"]
+    assert sorted(dev.read().collect()) == want["dev"]
+    assert sorted(t.read(version=tag_v).collect()) == want["tag"]
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_bulk_write_with_lsn_raises_watermark(spark, tmp_path, mode):
+    """append/overwrite with ``lsn_col`` raise ``watermark_lsn`` to the
+    max stored ``_lsn``, so the change feed from the write's own
+    version does not emit its rows again."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=2)
+    rows = _df(spark, 6).withColumn("lsn", F.col("turn_idx").cast("long") + 1)
+    getattr(t, mode)(rows, lsn_col="lsn")
+    assert t.current().watermark_lsn == 6
+    assert t.changes(0).count() == 6
+    assert t.changes(1).count() == 0
 
 
 def test_changes_feed_net_semantics(spark, tmp_path):

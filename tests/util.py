@@ -75,8 +75,8 @@ def executed_leaf_scans(spark, action) -> list[str]:
 def count_manifest_loads():
     """Record every manifest file the driver loads inside the block:
     yields the list of manifest paths (relative to meta/) passed to
-    ``sinks.lake._load_manifest``, in load order. Executor-side
-    manifest reads (distributed metadata tables, expiry, vacuum) do
+    ``sinks.lake._load_manifest``, in load order. Manifests Spark
+    reads as JSON on executors (the ``inspect_*`` metadata tables) do
     not go through it and are not counted."""
     import etl_rs_spark.sinks.lake as lake
 
