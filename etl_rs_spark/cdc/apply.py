@@ -20,7 +20,8 @@ Per-microbatch execution shape (the scaling-efficiency budget):
    event counts + LSN ranges (lineage, merge partition pruning, the
    skew-aware write plan) reduce to groupBy(bucket) over one row per
    key. No envelope re-read.
-3. **write job** — from_json parse + pandas coercion on winners only
+3. **write job** — from_json parse + Column-expression coercion
+   (functions/coercion.py, JVM-side, no Python worker) on winners only
    (10-100x fewer rows than events) -> union with the touched
    buckets' current rows -> LWW merge agg -> skew-aware bucketed
    write.
@@ -35,6 +36,9 @@ remaining separate prescan pass into the dedup aggregation itself.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
 import time
 import uuid
 from typing import Any
@@ -72,7 +76,14 @@ def _write_dead_letters(
 ) -> None:
     """Quarantine the invalid rows (rare path — launched only when the
     observed invalid count is nonzero): original envelope columns plus
-    a reason and the (run, batch) provenance, appended as parquet."""
+    a reason and the (run, batch) provenance, written as parquet to the
+    batch's own ``dlq_batch=<run hash>-<batch id>`` directory. The write
+    replaces that directory, so a retried or replayed batch leaves its
+    dead letters once, not once per attempt. The run id (an absolute
+    checkpoint path under StreamDriver) is hashed, so the directory name
+    stays short however long the path is."""
+    _adopt_flat_dead_letters(cfg.dead_letter_dir)
+    run = hashlib.sha1(run_id.encode()).hexdigest()[:16]
     null_key = F.lit(False)
     for c in (*cfg.merge_keys, *cfg.order_cols):
         null_key = null_key | F.col(c).isNull()
@@ -86,9 +97,22 @@ def _write_dead_letters(
             F.lit(run_id).alias("dlq_run_id"),
             F.lit(batch_id).alias("dlq_batch_id"),
         )
-        .write.mode("append")
-        .parquet(cfg.dead_letter_dir)
+        .write.mode("overwrite")
+        .parquet(os.path.join(cfg.dead_letter_dir, f"dlq_batch={run}-{batch_id}"))
     )
+
+
+def _adopt_flat_dead_letters(dlq_dir: str) -> None:
+    """Move the parquet files an older append-only layout left at the
+    queue's root into ``dlq_batch=legacy``. Next to ``dlq_batch=``
+    directories, ``spark.read.parquet(dlq_dir)`` reads only those, so
+    rows left at the root would silently drop out of the queue."""
+    flat = glob.glob(os.path.join(glob.escape(dlq_dir), "*.parquet"))
+    if flat:
+        legacy = os.path.join(dlq_dir, "dlq_batch=legacy")
+        os.makedirs(legacy, exist_ok=True)
+        for path in flat:
+            os.replace(path, os.path.join(legacy, os.path.basename(path)))
 
 
 def apply_batch(
@@ -131,7 +155,7 @@ def apply_batch(
     # LWW-dedup the OPAQUE envelope first: winner selection needs only
     # the typed key/order columns, so the JSON payload rides the dedup
     # shuffle as an unparsed string and every payload-parsing step below
-    # (key discovery, from_json, pandas-UDF coercion) runs on one row
+    # (key discovery, from_json, coercion) runs on one row
     # per key — typically 10-100x fewer rows than events. The winners
     # are persisted (they are the batch's smallest representation) so
     # key discovery, the per-bucket stats and the merge's write job all
@@ -265,7 +289,7 @@ def apply_batch(
             }
 
         winners = normalize_events(
-            raw_winners.drop(*STATS_COLS), coerce_spec, coerce=False, keys=keys
+            raw_winners.drop(*STATS_COLS), coerce_spec, keys=keys
         )
         winners = coerce_columns(winners, coerce_spec)
         # source->table column mapping (the operational pair of

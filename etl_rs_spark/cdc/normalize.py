@@ -12,11 +12,12 @@ The wire envelope carries evolving payload fields inside one JSON string
    ``discover_payload_keys`` is the standalone job.
 2. **JSON parse** with ``from_json`` against the discovered struct —
    JVM-side, codegen'd; the payload never reaches Python as a row.
-3. **Dirty-value coercion** of spec'd metadata columns via vectorized
-   pandas UDFs (functions/coercion.py) — mixed-case boolean strings,
-   multi-format date strings — per the reference cast semantics
-   (/root/reference/src/types.rs:206-331). Arrow-batched; no per-row
-   Python anywhere (BASELINE.json input_hint).
+3. **Dirty-value coercion** of spec'd columns (``coerce_columns``,
+   run by the apply path on the deduped winners) through the Column
+   expressions of functions/coercion.py — mixed-case boolean strings,
+   multi-format date strings — per the reference cast semantics of
+   functions/coercion.py. JVM-side like the parse: no value reaches a
+   Python worker (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
@@ -25,10 +26,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_rs_spark.functions.coercion import PANDAS_COERCERS
+from etl_rs_spark.functions.coercion import COLUMN_COERCERS
 
 #: default dirty-metadata coercion spec: payload key -> target type
 DEFAULT_COERCE_SPEC = {"meta_active": "boolean", "meta_edited": "date"}
+#: spec targets coerced through ``COLUMN_COERCERS`` rather than try_cast
+_FLEX_TARGETS = ("boolean", "date")
 
 
 def discover_payload_keys(envelope: DataFrame, payload_col: str = "payload") -> list[str]:
@@ -53,7 +56,6 @@ def normalize_events(
     envelope: DataFrame,
     coerce_spec: dict[str, str] | None = None,
     payload_col: str = "payload",
-    coerce: bool = True,
     keys: list[str] | None = None,
 ) -> DataFrame:
     """Envelope (lsn, op, conv_id, turn_idx, ts, payload-json) ->
@@ -62,7 +64,8 @@ def normalize_events(
     Payload columns are whatever keys this batch actually carries —
     additive schema evolution flows through here to the MERGE, which
     widens the table. Pass ``keys`` (e.g. the apply path's key union
-    from its stats action) to skip the discovery job.
+    from its stats action) to skip the discovery job. Scalar payload
+    columns stay strings; ``coerce_columns`` types them.
     """
     spec = DEFAULT_COERCE_SPEC if coerce_spec is None else coerce_spec
     if keys is None:
@@ -108,27 +111,18 @@ def normalize_events(
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.col("ts").cast("timestamp").alias("ts"),
     ]
-    for k in keys:
-        c = F.col(f"__p.{k}")
-        target = spec.get(k)
-        if k in complex_types:
-            cols.append(c.alias(k))  # already parsed to the target type
-            continue
-        if coerce and target is not None and target in PANDAS_COERCERS:
-            c = PANDAS_COERCERS[target](c)  # vectorized Arrow batch coercion
-        elif coerce and target is not None:
-            # try_cast: malformed payload values must yield NULL, not an
-            # ANSI CAST_INVALID_INPUT that kills the microbatch.
-            c = c.try_cast(target)
-        cols.append(c.alias(k))
+    cols += [F.col(f"__p.{k}").alias(k) for k in keys]
     return df.select(*cols)
 
 
 def coerce_columns(df: DataFrame, spec: dict[str, str] | None = None) -> DataFrame:
     """Apply the dirty-value coercion spec to whichever spec'd columns are
-    present. Called AFTER LWW dedup in the apply pipeline so the
-    vectorized pandas UDFs see one row per key (the winners), not every
-    duplicate event — same result, a fraction of the Arrow traffic."""
+    present. Called AFTER LWW dedup in the apply pipeline, so it types
+    one row per key (the winners), not every duplicate event. A boolean
+    or date target takes the reference's flexible forms (``bool_flex``,
+    ``date_flex``); any other scalar target is a ``try_cast``: a
+    malformed value yields NULL, not an ANSI CAST_INVALID_INPUT that
+    kills the microbatch."""
     spec = DEFAULT_COERCE_SPEC if spec is None else spec
     out = {}
     types = {f.name: f.dataType for f in df.schema.fields}
@@ -140,37 +134,31 @@ def coerce_columns(df: DataFrame, spec: dict[str, str] | None = None) -> DataFra
         ):
             continue  # parsed natively by normalize_events already
         c = F.col(k)
-        if target not in PANDAS_COERCERS:
-            # a COMPLEX target against a still-string column (data that
-            # did not pass through normalize_events with this spec):
-            # string->struct/array/map try_cast is not a valid cast and
-            # would raise an AnalysisException at plan time instead of
-            # nulling malformed values — parse with from_json, which
-            # yields NULL for malformed input, the coercion contract
-            # (ADVICE r05).
-            try:
-                target_dt = T.StructType.fromDDL(f"`__c` {target}")[
-                    0
-                ].dataType
-            except Exception:
-                target_dt = None
-            if isinstance(
-                target_dt, (T.StructType, T.ArrayType, T.MapType)
-            ) and isinstance(types[k], T.StringType):
-                # from_json in PERMISSIVE mode yields an all-null
-                # struct for malformed input; gate on JSON validity so
-                # malformed values become NULL like every other failed
-                # coercion
-                valid = (
-                    F.json_array_length(c).isNotNull()
-                    if isinstance(target_dt, T.ArrayType)
-                    else F.json_object_keys(c).isNotNull()
-                )
-                out[k] = F.when(
-                    c.isNotNull() & valid, F.from_json(c, target_dt)
-                )
-                continue
-            out[k] = c.try_cast(target)
+        if target in _FLEX_TARGETS:
+            out[k] = COLUMN_COERCERS[target](c)
             continue
-        out[k] = PANDAS_COERCERS[target](c)
+        # a COMPLEX target against a still-string column (data that did
+        # not pass through normalize_events with this spec):
+        # string->struct/array/map try_cast is not a valid cast and
+        # would raise an AnalysisException at plan time instead of
+        # nulling malformed values — parse with from_json, which yields
+        # NULL for malformed input, the coercion contract (ADVICE r05).
+        try:
+            target_dt = T.StructType.fromDDL(f"`__c` {target}")[0].dataType
+        except Exception:
+            target_dt = None
+        if isinstance(
+            target_dt, (T.StructType, T.ArrayType, T.MapType)
+        ) and isinstance(types[k], T.StringType):
+            # from_json in PERMISSIVE mode yields an all-null struct for
+            # malformed input; gate on JSON validity so malformed values
+            # become NULL like every other failed coercion
+            valid = (
+                F.json_array_length(c).isNotNull()
+                if isinstance(target_dt, T.ArrayType)
+                else F.json_object_keys(c).isNotNull()
+            )
+            out[k] = F.when(c.isNotNull() & valid, F.from_json(c, target_dt))
+            continue
+        out[k] = c.try_cast(target)
     return df.withColumns(out) if out else df

@@ -103,9 +103,9 @@ class StreamDriver:
         #: retention under sustained ingest: every N batches,
         #: expire old snapshots (keeping retention_keep_last — enough
         #: history for CDF consumers and rollback) and sweep orphans,
-        #: both as DISTRIBUTED Spark actions (the driver never holds
-        #: the file list). Vacuum keeps its default in-flight grace, so
-        #: this stream's own just-written files are never raced. Bounds
+        #: both on the driver from the manifest list, with no Spark
+        #: job. Vacuum keeps its default in-flight grace, so this
+        #: stream's own just-written files are never raced. Bounds
         #: snapshot count, manifest bytes and dead data bytes over a
         #: 10^10-event run with no external scheduler.
         self.retention_every = retention_every

@@ -4,8 +4,6 @@ from etl_rs_spark.functions.coercion import (
     datetime_flex,
     float_flex,
     int_flex,
-    pd_bool_flex,
-    pd_date_flex,
     timestamp_flex,
 )
 
@@ -16,6 +14,4 @@ __all__ = [
     "date_flex",
     "datetime_flex",
     "timestamp_flex",
-    "pd_bool_flex",
-    "pd_date_flex",
 ]

@@ -1,15 +1,11 @@
 """Flexible type coercions — the reference's DataValue cast semantics
 (/root/reference/src/types.rs:206-331), as Spark expressions.
 
-Two tiers, same semantics:
-
-- **Column-expression versions** (bool_flex, date_flex, ...): pure
-  built-in functions, so Catalyst keeps them inside whole-stage codegen
-  and they're SQL-expressible (used by the oracle-checked queries).
-- **Vectorized pandas-UDF versions** (pd_bool_flex, pd_date_flex):
-  Arrow-batched Series->Series, used by the CDC payload normalizer where
-  the north rule mandates vectorized pandas/Arrow UDFs. Never
-  row-at-a-time Python.
+Pure built-in functions, so Catalyst keeps them inside whole-stage
+codegen and they are SQL-expressible: the oracle-checked queries, the
+ConvertTypes transform and the CDC payload normalizer
+(cdc/normalize.coerce_columns) all use this one tier, and no value ever
+crosses into a Python worker.
 
 Reference semantics reproduced:
 - as_boolean accepts true/1/yes/y and false/0/no/n case-insensitively
@@ -17,33 +13,52 @@ Reference semantics reproduced:
 - as_integer truncates floats (/root/reference/src/types.rs:227)
 - date parse cascade %Y-%m-%d -> %d/%m/%Y -> %m/%d/%Y
   (/root/reference/src/types.rs:262-273)
+- as with strptime, a date's day and month may be unpadded
+  (``2024-1-5``, ``5/1/2024``) and its year has exactly four digits
 - datetime cascade "%Y-%m-%d %H:%M:%S" -> "%d/%m/%Y %H:%M:%S" ->
   "%Y-%m-%dT%H:%M:%S" (/root/reference/src/types.rs:284-296)
 - timestamp: RFC-3339 first, bare date -> midnight UTC
   (/root/reference/src/types.rs:309-322)
 - every failed conversion yields NULL, never an error
   (/root/reference/src/transform/common.rs:212-236)
+- input is stripped of the whitespace Python's ``str.strip()`` removes
+  (tabs, newlines, NBSP, ...), not only the spaces ``F.trim`` removes;
+  the pandas reference in ``etl_rs_spark.oracle`` strips the same set
+
+One divergence from that pandas reference: a date outside pandas'
+nanosecond Timestamp range (before 1677-09-22 or after 2262-04-11)
+parses here and is NULL there.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _TRUE = ("true", "1", "yes", "y")
 _FALSE = ("false", "0", "no", "n")
+#: every character ``str.isspace()`` accepts, i.e. what ``str.strip()``
+#: removes (tests/test_coercion.py pins the set)
+_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
+# strptime's shapes for the date cascade: four-digit year, one- or
+# two-digit day and month. Values of any other shape skip the parse,
+# which would otherwise accept "2024-001-05" or a signed year.
+_YMD = r"^[0-9]{4}-[0-9]{1,2}-[0-9]{1,2}$"
+_SLASHED = r"^[0-9]{1,2}/[0-9]{1,2}/[0-9]{4}$"
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _text(col: Column | str) -> Column:
+    """The value as a string, stripped of surrounding whitespace."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.trim(c.cast("string"), F.lit(_WHITESPACE))
 
 
-# --------------------------------------------------------------- Column --
 def bool_flex(col: Column | str) -> Column:
-    s = F.lower(F.trim(_c(col).cast("string")))
+    s = F.lower(_text(col))
     return (
         F.when(s.isin(*_TRUE), F.lit(True))
         .when(s.isin(*_FALSE), F.lit(False))
@@ -53,7 +68,7 @@ def bool_flex(col: Column | str) -> Column:
 
 def int_flex(col: Column | str) -> Column:
     """int parse; else float parse truncated toward zero; else null."""
-    s = F.trim(_c(col).cast("string"))
+    s = _text(col)
     as_long = s.try_cast("long")
     as_dbl = s.try_cast("double")
     # try_cast on the double too: ANSI mode (Spark 4 default) raises
@@ -62,20 +77,21 @@ def int_flex(col: Column | str) -> Column:
 
 
 def float_flex(col: Column | str) -> Column:
-    return F.trim(_c(col).cast("string")).try_cast("double")
+    return _text(col).try_cast("double")
 
 
 def date_flex(col: Column | str) -> Column:
-    s = F.trim(_c(col).cast("string"))
-    return F.coalesce(
-        F.try_to_timestamp(s, F.lit("yyyy-MM-dd")).cast("date"),
-        F.try_to_timestamp(s, F.lit("dd/MM/yyyy")).cast("date"),
-        F.try_to_timestamp(s, F.lit("MM/dd/yyyy")).cast("date"),
+    """The cascade tries only the patterns the value's shape can match,
+    so the common forms parse on the first attempt."""
+    s = _text(col)
+    return F.when(s.rlike(_YMD), F.try_to_date(s, "yyyy-M-d")).when(
+        s.rlike(_SLASHED),
+        F.coalesce(F.try_to_date(s, "d/M/yyyy"), F.try_to_date(s, "M/d/yyyy")),
     )
 
 
 def datetime_flex(col: Column | str) -> Column:
-    s = F.trim(_c(col).cast("string"))
+    s = _text(col)
     return F.coalesce(
         F.try_to_timestamp(s, F.lit("yyyy-MM-dd HH:mm:ss")),
         F.try_to_timestamp(s, F.lit("dd/MM/yyyy HH:mm:ss")),
@@ -86,7 +102,7 @@ def datetime_flex(col: Column | str) -> Column:
 def timestamp_flex(col: Column | str) -> Column:
     """RFC-3339 first (with offset), then datetime forms, then bare date
     at midnight UTC — session tz is pinned UTC in session.py."""
-    s = F.trim(_c(col).cast("string"))
+    s = _text(col)
     return F.coalesce(
         F.try_to_timestamp(s, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
         F.try_to_timestamp(s, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
@@ -95,34 +111,7 @@ def timestamp_flex(col: Column | str) -> Column:
     )
 
 
-# ----------------------------------------------------------- pandas UDF --
-def _bool_series(s: pd.Series) -> pd.Series:
-    low = s.astype("string").str.strip().str.lower()
-    out = pd.Series(pd.NA, index=s.index, dtype="boolean")
-    out[low.isin(list(_TRUE))] = True
-    out[low.isin(list(_FALSE))] = False
-    return out
-
-
-def _date_series(s: pd.Series) -> pd.Series:
-    st = s.astype("string").str.strip()
-    out = pd.to_datetime(st, format="%Y-%m-%d", errors="coerce")
-    for fmt in ("%d/%m/%Y", "%m/%d/%Y"):
-        mask = out.isna() & st.notna()
-        if mask.any():
-            out[mask] = pd.to_datetime(st[mask], format=fmt, errors="coerce")
-    return out.dt.date.astype(object).where(out.notna(), None)
-
-
-pd_bool_flex = pandas_udf(_bool_series, T.BooleanType())
-pd_date_flex = pandas_udf(_date_series, T.DateType())
-
-#: coercion registry used by the CDC normalizer: target type -> pandas UDF
-PANDAS_COERCERS = {
-    "boolean": pd_bool_flex,
-    "date": pd_date_flex,
-}
-#: Column-expression registry (SQL-expressible fast path)
+#: coercion registry: target type -> Column expression
 COLUMN_COERCERS = {
     "boolean": bool_flex,
     "long": int_flex,

@@ -4,7 +4,7 @@ Single-pass LWW reduction, intentionally naive and engine-independent:
 sort every event by (ts, lsn), keep the last event per (conv_id,
 turn_idx), drop keys whose winning event is a delete, project to the
 table schema with evolved columns null-backfilled, and apply the same
-dirty-payload coercions the engine's vectorized normalizer applies.
+dirty-payload coercions the engine's normalizer applies.
 Engine final state must equal this exactly, compared sorted by
 (conv_id, turn_idx) — the BASELINE.json per-row invariant ("per-turn
 text equality under stable turn ordering").
@@ -34,8 +34,9 @@ def coerce_bool_series(s: pd.Series) -> pd.Series:
 def coerce_date_series(s: pd.Series) -> pd.Series:
     """Multi-format date parse cascade, reference semantics
     (/root/reference/src/types.rs:262-273): %Y-%m-%d, then %d/%m/%Y,
-    then %m/%d/%Y; failure -> null."""
-    s = s.astype("string")
+    then %m/%d/%Y, on the value stripped of surrounding whitespace;
+    failure -> null."""
+    s = s.astype("string").str.strip()
     out = pd.to_datetime(s, format="%Y-%m-%d", errors="coerce")
     for fmt in ("%d/%m/%Y", "%m/%d/%Y"):
         mask = out.isna() & s.notna()

@@ -4,8 +4,9 @@ One place configures everything the engine relies on:
 
 - AQE on (runtime re-planning, skew-join splitting) — our complement to
   explicit salting for hot-conversation skew.
-- Arrow execution on — the payload normalizer is a vectorized pandas UDF
-  (no per-row Python anywhere in the engine).
+- Arrow execution on — the analytics operators' pandas UDFs (dedup,
+  ANN) and driver-side pandas transfers move Arrow batches (no per-row
+  Python anywhere in the engine; the CDC apply path runs none at all).
 - ``spark.sql.shuffle.partitions`` sized to the core count, not the 200
   default: on local[N] a 200-partition shuffle of a small microbatch is
   pure overhead; on a real cluster this is set to ~2-3x total cores.

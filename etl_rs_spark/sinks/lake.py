@@ -3627,8 +3627,11 @@ class LakeTable:
         Imported entries are stamped ``external`` and are NEVER deleted
         by ``expire_snapshots`` (the originals belong to the user; the
         same reason Iceberg's add_files docs warn about gc on imported
-        locations). ``vacuum_orphans`` only walks the table's own
-        directories, so externals are structurally safe there.
+        locations). ``vacuum_orphans`` deletes only files in the
+        engine's own layout (``commit-*/**/part-*.parquet``) and parquet
+        files directly under ``data/``, so an import anywhere else under
+        the table root survives even after every snapshot listing it
+        has expired.
 
         Like ``append``, an import is a BULK load outside the change
         feed: ``changes()`` covers rows applied through ``merge`` (CDC
@@ -3930,24 +3933,27 @@ class LakeTable:
         writer can be running.
 
         The live set comes from the manifests of every retained
-        snapshot, each loaded once, and the listing is a walk of the
-        table's data directory: no Spark job runs. A listed file is
-        live when its path suffix (``_path_suffix``) matches a manifest
-        entry's, not its full path: a handle that opened the table
-        through another spelling of its root (a symlink) writes entries
-        under that spelling, and comparing full paths would delete
-        them. A suffix collision can only keep a file. Imported
+        snapshot, each loaded once, and the candidates are the files a
+        writer of this engine leaves: ``commit-*/**/part-*.parquet``
+        under the data directory, plus parquet files directly in it.
+        Any other file there (an ``add_files`` import in a directory of
+        the user's) is never a candidate. No Spark job runs. A listed
+        file is live when its path suffix (``_path_suffix``) matches a
+        manifest entry's, not its full path: a handle that opened the
+        table through another spelling of its root (a symlink) writes
+        entries under that spelling, and comparing full paths would
+        delete them. A suffix collision can only keep a file. Imported
         (``add_files``) entries under the data directory are live like
         any other. ``distributed`` is accepted and ignored."""
         cutoff = time.time() - older_than_s
         live_meta = self._meta_refs(self._versions())
         live = self._entry_paths(live_meta)
+        written = glob.glob(
+            os.path.join(self.data_dir, "commit-*", "**", "part-*.parquet"),
+            recursive=True,
+        ) + glob.glob(os.path.join(self.data_dir, "*.parquet"))
         unreferenced = [
-            ("orphans_deleted", p)
-            for p in glob.glob(
-                os.path.join(self.data_dir, "**", "*.parquet"), recursive=True
-            )
-            if _path_suffix(p) not in live
+            ("orphans_deleted", p) for p in written if _path_suffix(p) not in live
         ] + [
             ("orphan_manifests_deleted", p)
             for p in glob.glob(os.path.join(self.meta_dir, "manifests", "*.json"))

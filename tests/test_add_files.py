@@ -311,6 +311,35 @@ def test_distributed_vacuum_protects_external_under_table_root(
     assert got == 10
 
 
+def test_vacuum_keeps_expired_import_under_table_root(spark, tmp_path):
+    """An import under ``data/`` outlives every snapshot that listed it:
+    once compact folded it and expiry dropped those snapshots, no
+    manifest names it, but it is the user's file, not an orphan of the
+    engine's, and vacuum must leave it where it is."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), DDL, num_buckets=4)
+    inside = os.path.join(t.data_dir, "imported")
+    (imported,) = _write_corpus(inside, _rows(2), n_files=1)
+    t.add_files([imported])
+
+    def pad(i):
+        t.append(
+            spark.createDataFrame(
+                [("x", 900 + i, "pad", dt.datetime(2025, 1, 1))], DDL
+            )
+        )
+
+    pad(0)
+    t.compact()
+    pad(1)
+    t.expire_snapshots(keep_last=1)
+    assert not any(f.get("external") for f in t.current().files)
+    rows = sorted(t.read().collect())
+    res = t.vacuum_orphans(older_than_s=0)
+    assert os.path.exists(imported), f"vacuum deleted the import: {res}"
+    assert res["orphans_deleted"] == 0
+    assert sorted(t.read().collect()) == rows and len(rows) == 4
+
+
 def test_import_is_outside_the_change_feed(spark, tmp_path):
     """Pinned contract: like append, add_files is a bulk load — CDF
     windows cover merge-applied CDC events only. A window across an

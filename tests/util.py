@@ -35,26 +35,28 @@ def assert_state_equal(engine: pd.DataFrame, oracle: pd.DataFrame, cols=None):
     pdt.assert_frame_equal(e, o, check_dtype=False, check_like=True)
 
 
-def executed_leaf_scans(spark, action) -> list[str]:
-    """Run ``action()`` and return the leaf node names of every SQL
-    execution it ran, read from the final (post-AQE) physical plan
-    graphs in Spark's SQL status store: ``"Scan parquet "``,
-    ``"LocalTableScan"``, ``"Range"``, or ``"Scan ExistingRDD"`` for a
-    DataFrame built from a Python RDD, whose tasks run on Python
-    workers. Works with the UI disabled."""
+def executed_plan_nodes(spark, action) -> list[tuple[str, bool]]:
+    """Run ``action()`` and return ``(name, is_leaf)`` for every node of
+    every SQL execution it ran, read from the final (post-AQE) physical
+    plan graphs in Spark's SQL status store. WholeStageCodegen
+    clusters group nodes and are not listed. Python-evaluating nodes
+    show up by name: ``"ArrowEvalPython"``, ``"BatchEvalPython"``,
+    ``"MapInPandas"``. Works with the UI disabled."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
 
-    def recent(limit: int = 64) -> list:
-        bus.waitUntilEmpty()
+    def recent(limit: int) -> list:
         n = store.executionsCount()
         seq = store.executionsList(max(n - limit, 0), limit)
         return [seq.apply(i) for i in range(seq.size())]
 
+    bus.waitUntilEmpty()
+    n0 = store.executionsCount()
     seen = max((e.executionId() for e in recent(1)), default=-1)
     action()
-    leaves = []
-    for e in recent():
+    bus.waitUntilEmpty()
+    out = []
+    for e in recent(store.executionsCount() - n0 + 64):
         if e.executionId() <= seen:
             continue
         graph = store.planGraph(e.executionId())
@@ -63,12 +65,18 @@ def executed_leaf_scans(spark, action) -> list[str]:
         nodes = graph.allNodes()
         for i in range(nodes.size()):
             node = nodes.apply(i)
-            # WholeStageCodegen clusters group nodes; they are no plan node
-            if node.id() not in parents and (
-                node.getClass().getSimpleName() != "SparkPlanGraphCluster"
-            ):
-                leaves.append(node.name())
-    return leaves
+            if node.getClass().getSimpleName() != "SparkPlanGraphCluster":
+                out.append((node.name(), node.id() not in parents))
+    return out
+
+
+def executed_leaf_scans(spark, action) -> list[str]:
+    """Run ``action()`` and return the leaf node names of every SQL
+    execution it ran (``executed_plan_nodes``): ``"Scan parquet "``,
+    ``"LocalTableScan"``, ``"Range"``, or ``"Scan ExistingRDD"`` for a
+    DataFrame built from an RDD: a Python RDD, whose tasks run on
+    Python workers, or the JVM RDD a foreachBatch microbatch wraps."""
+    return [name for name, leaf in executed_plan_nodes(spark, action) if leaf]
 
 
 @contextlib.contextmanager
