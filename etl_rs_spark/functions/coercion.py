@@ -24,10 +24,6 @@ Reference semantics reproduced:
 - input is stripped of the whitespace Python's ``str.strip()`` removes
   (tabs, newlines, NBSP, ...), not only the spaces ``F.trim`` removes;
   the pandas reference in ``etl_rs_spark.oracle`` strips the same set
-
-One divergence from that pandas reference: a date outside pandas'
-nanosecond Timestamp range (before 1677-09-22 or after 2262-04-11)
-parses here and is NULL there.
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ text equality under stable turn ordering").
 from __future__ import annotations
 
 import json
+from datetime import datetime
 
 import pandas as pd
 
@@ -31,18 +32,29 @@ def coerce_bool_series(s: pd.Series) -> pd.Series:
     return out
 
 
+def _parse_date(v: str):
+    for fmt in ("%Y-%m-%d", "%d/%m/%Y", "%m/%d/%Y"):
+        try:
+            return datetime.strptime(v, fmt).date()
+        except ValueError:
+            continue
+    return None
+
+
 def coerce_date_series(s: pd.Series) -> pd.Series:
     """Multi-format date parse cascade, reference semantics
     (/root/reference/src/types.rs:262-273): %Y-%m-%d, then %d/%m/%Y,
     then %m/%d/%Y, on the value stripped of surrounding whitespace;
-    failure -> null."""
+    failure -> null. Parsed per value with ``datetime.strptime``, so
+    every four-digit year parses, as in the engine's ``date_flex``
+    (pandas' nanosecond Timestamp would null dates outside
+    1677-2262)."""
     s = s.astype("string").str.strip()
-    out = pd.to_datetime(s, format="%Y-%m-%d", errors="coerce")
-    for fmt in ("%d/%m/%Y", "%m/%d/%Y"):
-        mask = out.isna() & s.notna()
-        if mask.any():
-            out[mask] = pd.to_datetime(s[mask], format=fmt, errors="coerce")
-    return out.dt.date.astype(object).where(out.notna(), None)
+    return pd.Series(
+        [_parse_date(v) if isinstance(v, str) else None for v in s],
+        index=s.index,
+        dtype=object,
+    )
 
 
 DEFAULT_COERCIONS = {"meta_active": coerce_bool_series, "meta_edited": coerce_date_series}

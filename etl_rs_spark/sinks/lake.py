@@ -669,14 +669,24 @@ def _ms_since(t: float) -> int:
 
 
 def _tips(hs: "Snapshot") -> dict[str, int]:
-    """Branch ref table from the HEAD snapshot. The HEAD snapshot is by
-    construction its own branch's tip (_commit always writes
-    ``branches[branch] = slot``), so that entry is normalized here —
-    which also makes reads robust to a manually-forged manifest whose
-    carried dict is stale."""
-    tips = dict(hs.branches)
+    """Branch name -> tip version, from the HEAD snapshot's ref map.
+    The HEAD snapshot is by construction its own branch's tip (_commit
+    always points that ref at its slot), so that entry is normalized
+    here — which also makes reads robust to a manually-forged manifest
+    whose carried map is stale."""
+    tips = {n: r["version"] for n, r in hs.refs.items() if r["kind"] == "branch"}
     tips[hs.branch] = hs.version
     return tips
+
+
+def _ref(kind: str, version: int, max_age_ms: int | None) -> dict[str, Any]:
+    """A ``ref_edits`` value creating a tag or branch ref (_commit adds
+    its incarnation)."""
+    return {
+        "kind": kind,
+        "version": version,
+        "max_age_ms": None if max_age_ms is None else int(max_age_ms),
+    }
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -1031,34 +1041,20 @@ class Snapshot:
     #: per-epoch physical names to current logical names by id.
     epoch: int = 0
     epoch_names: dict = field(default_factory=dict)
-    #: named refs (Iceberg table refs, tag flavor): tag name -> pinned
-    #: version. A tagged version and the files it references are
-    #: protected from expire_snapshots until the tag is dropped —
-    #: the audit pin for "the exact table state a training run read".
+    #: the table's ref map (Iceberg table refs: one namespace for tags
+    #: and branches, "main" included): name -> {"kind": "branch" |
+    #: "tag", "version": tip or pinned version, "incarnation": slot of
+    #: the commit that created the ref (globally unique, so a dropped-
+    #: then-recreated name is told apart from its previous life),
+    #: "max_age_ms": Iceberg's max-ref-age-ms, measured from the commit
+    #: time of the snapshot the ref points to, or None}. Written by
+    #: _commit from HEAD's map plus the commit's ``ref_edits`` (the
+    #: committing branch's version becomes the new slot), so HEAD's
+    #: ``refs`` is authoritative and a non-HEAD snapshot's is the map
+    #: as of its commit. A ref pins its version, and the files it
+    #: references, against expire_snapshots until the ref is dropped
+    #: or ages out.
     refs: dict = field(default_factory=dict)
-    #: Iceberg table refs, BRANCH flavor: branch name -> tip version,
-    #: including "main". Maintained by _commit (the committing branch's
-    #: tip becomes the new version; other tips are carried verbatim),
-    #: so the HEAD snapshot's ``branches`` is the authoritative ref
-    #: table.
-    branches: dict = field(default_factory=dict)
-    #: branch name -> INCARNATION id (the version slot of the commit
-    #: that created the ref — globally unique, so a dropped-then-
-    #: recreated name is distinguishable from its previous life even
-    #: when both incarnations fork at the same version). Maintained by
-    #: _commit alongside ``branches``; fast_forward stamps it into
-    #: ``ff_source`` and rejects a publish whose source-branch
-    #: incarnation changed since the recorded publish. Absent on
-    #: legacy manifests ({} -> epoch -1 -> the pre-epoch check applies).
-    branch_epochs: dict = field(default_factory=dict)
-    #: per-ref retention (Iceberg's ``max-ref-age-ms`` ref property):
-    #: "branch:<name>" / "tag:<name>" -> max age in ms, measured from
-    #: the commit time of the snapshot the ref points to. Maintained
-    #: GLOBALLY by _commit (like ``branches``), edited through
-    #: create_branch/create_tag(max_age_ms=...) and purged on ref drop.
-    #: expire_snapshots drops aged refs before computing what to keep,
-    #: so a forgotten audit branch stops pinning history forever.
-    ref_retention: dict = field(default_factory=dict)
     #: which branch this snapshot was committed to.
     branch: str = "main"
     #: version this snapshot was derived from (its ancestor pointer).
@@ -1148,12 +1144,23 @@ class Snapshot:
         # it is what lets a mixed-version executor fleet roll forward.
         # An inline file list is the retired pre-manifest format, not a
         # newer one: skipping it would read the table as empty.
+        # So is the retired split ref table (every such file carries a
+        # ``branches`` table beside its tag map): skipping it would read
+        # every tag and branch as gone.
         d = json.loads(s)
         if d.get("files"):
             raise LoadError(
                 "snapshot carries an inline 'files' list (retired "
                 "pre-manifest format); this engine reads file entries "
                 "only from manifest files"
+            )
+        if "branches" in d or any(
+            not isinstance(r, dict) for r in d.get("refs", {}).values()
+        ):
+            raise LoadError(
+                "snapshot carries refs in the retired split format (a "
+                "'branches' table or bare-version tags); this engine "
+                "reads one 'refs' map"
             )
         known = {f.name for f in dataclasses.fields(cls)}
         return cls(**{k: v for k, v in d.items() if k in known})
@@ -1183,10 +1190,7 @@ class Snapshot:
             next_field_id=self.next_field_id,
             epoch=self.epoch,
             epoch_names={e: dict(m) for e, m in self.epoch_names.items()},
-            refs=dict(self.refs),
-            branches={},  # output field: _commit derives it from HEAD
-            branch_epochs={},  # output field: _commit derives from HEAD
-            ref_retention={},  # output field: _commit derives from HEAD
+            refs={},  # output field: _commit derives it from HEAD
             branch=self.branch,
             parent_version=self.version,
             fork_version=self.fork_version,
@@ -1278,7 +1282,7 @@ class LakeTable:
     # -------------------------------------------------------- snapshots --
     def _head_snapshot(self) -> Snapshot:
         """Snapshot at the latest committed metadata version (any
-        branch) — the one whose ``branches`` dict is authoritative."""
+        branch) — the one whose ``refs`` map is authoritative."""
         head = os.path.join(self.meta_dir, "HEAD")
         if not os.path.exists(head):
             raise LoadError(f"no table at {self.path}")
@@ -1389,7 +1393,8 @@ class LakeTable:
     #: claims are presumed to belong to a live competitor mid-commit.
     STALE_CLAIM_S: float = 60.0
 
-    #: branch_edits sentinel: "point the ref at this commit's own slot"
+    #: ref_edits version sentinel: "point the ref at this commit's own
+    #: slot"
     _SLOT: int = -2
     #: wm_history tail entries kept inline per snapshot before rolling
     #: into an immutable segment file
@@ -1552,8 +1557,7 @@ class LakeTable:
         *,
         edits: dict[str, list[dict[str, Any]]] | None = None,
         data_commit: bool = False,
-        ref_retention_edits: dict[str, int | None] | None = None,
-        branch_edits: dict[str, int | None] | None = None,
+        ref_edits: dict[str, dict[str, Any] | None] | None = None,
     ) -> bool:
         """Commit with an ATOMIC slot claim (optimistic concurrency):
         the snapshot takes the next GLOBAL version slot (HEAD+1 — all
@@ -1577,13 +1581,13 @@ class LakeTable:
           for the metadata-level rebase (_try_rebase). Refs/DDL/spec/
           rollback commits never rebase — their intent is not
           group-shaped.
-        - ``ref_retention_edits``: per-ref max-age edits
-          ("branch:<n>"/"tag:<n>" -> ms, None deletes), applied to the
-          HEAD's global ref-retention table.
-        - ``branch_edits``: branch refs added/removed atomically with
-          the commit (value None deletes; ``_SLOT`` = this commit's own
-          slot) — used by create_branch/drop_branch. The committing
-          branch's own tip always becomes this snapshot.
+        - ``ref_edits``: tags and branches created or dropped
+          atomically with the commit, applied to HEAD's ``refs`` map:
+          name -> None drops the ref; name -> {"kind", "version",
+          "max_age_ms"} creates it, with this commit's slot as its
+          incarnation (a ``version`` of ``_SLOT`` = this commit's own
+          slot). The committing branch's own ref always moves to this
+          snapshot.
 
         The CORRECTNESS check is per-branch: ``snap.parent_version``
         must still equal the committing branch's tip. A tip that moved
@@ -1656,34 +1660,26 @@ class LakeTable:
                 own_wm = True
             self._roll_wm_segments(snap)
             snap.version = slot
-            new_tips = dict(tips)
-            new_epochs = dict(hs.branch_epochs) if hv >= 0 else {}
-            new_rr = dict(hs.ref_retention) if hv >= 0 else {}
-            for k, ms in (ref_retention_edits or {}).items():
-                if ms is None:
-                    new_rr.pop(k, None)
-                else:
-                    new_rr[k] = int(ms)
-            for k, v in (branch_edits or {}).items():
-                if v is None:
-                    new_tips.pop(k, None)
-                    new_epochs.pop(k, None)
-                    new_rr.pop(f"branch:{k}", None)
+            refs = dict(hs.refs) if hv >= 0 else {}
+            for k, r in (ref_edits or {}).items():
+                if r is None:
+                    refs.pop(k, None)
                     continue
-                # ref creation: this commit's slot is the incarnation id
-                new_epochs[k] = slot
-                if v == self._SLOT:
-                    # "the slot this very commit takes" — create_branch
-                    # forks at its own creation commit so the fork point
-                    # IS the committing branch's new tip (anything older
-                    # would be instantly behind and never fast-forwardable)
-                    new_tips[k] = slot
-                else:
-                    new_tips[k] = int(v)
-            new_tips[snap.branch] = slot
-            snap.branches = new_tips
-            snap.branch_epochs = new_epochs
-            snap.ref_retention = new_rr
+                # ref creation: this commit's slot is the incarnation id;
+                # ``_SLOT`` lets create_branch fork at its own creation
+                # commit, so the fork point IS the committing branch's
+                # new tip (anything older would be instantly behind and
+                # never fast-forwardable)
+                v = slot if r["version"] == self._SLOT else int(r["version"])
+                refs[k] = {**r, "version": v, "incarnation": slot}
+            refs[snap.branch] = {
+                "kind": "branch",
+                "incarnation": slot,
+                "max_age_ms": None,
+                **refs.get(snap.branch, {}),
+                "version": slot,
+            }
+            snap.refs = refs
             if snap.committed_at_ms < 0 or attempt > 0:
                 snap.committed_at_ms = int(time.time() * 1000)
             vpath = os.path.join(self.meta_dir, f"version-{slot:08d}.json")
@@ -1747,9 +1743,9 @@ class LakeTable:
 
         The rebased snapshot adopts the tip's manifests for every
         untouched group (keeping the winners' effects), the tip's
-        refs/stats/watermark history, max-merged watermark and applied
+        stats/watermark history, max-merged watermark and applied
         log; _commit then records its own watermark advance when it
-        still advances past the tip."""
+        still advances past the tip, and writes the refs from HEAD."""
         try:
             parent = self.snapshot(snap.parent_version)
             tip = self.snapshot(tip_version)
@@ -1794,7 +1790,6 @@ class LakeTable:
             merged[run] = max(merged.get(run, -1), b)
         snap.applied = merged
         self._cap_applied(snap)
-        snap.refs = dict(tip.refs)
         snap.stats = dict(tip.stats)
         snap.wm_segments = list(tip.wm_segments)
         snap.wm_history = [list(x) for x in tip.wm_history]
@@ -2472,14 +2467,15 @@ class LakeTable:
 
     def inspect_refs(self) -> DataFrame:
         """Tags and branches as a DataFrame (Iceberg's ``t.refs``)."""
-        tips = _tips(self._head_snapshot())
-        rows = [("branch", n, int(v)) for n, v in sorted(tips.items())]
-        for tv in sorted(set(tips.values())):
-            for n, v in sorted(self.snapshot(int(tv)).refs.items()):
-                rows.append(("tag", n, int(v)))
+        hs = self._head_snapshot()
+        rows = [("branch", n, int(v)) for n, v in sorted(_tips(hs).items())]
+        rows += [
+            ("tag", n, int(r["version"]))
+            for n, r in sorted(hs.refs.items())
+            if r["kind"] == "tag"
+        ]
         return self.spark.createDataFrame(
-            list(dict.fromkeys(rows)),
-            "type string, name string, version int",
+            rows, "type string, name string, version int"
         )
 
     def inspect_manifests(self, version: int | None = None) -> DataFrame:
@@ -2861,47 +2857,53 @@ class LakeTable:
     ) -> dict[str, Any]:
         """Pin a snapshot under a name (Iceberg ALTER TABLE ... CREATE
         TAG): a metadata-only commit that records ``name -> version``
-        in the table refs. A tagged version — and every data file it
-        references — survives ``expire_snapshots`` until the tag is
-        dropped, so "the exact table state training run X read" stays
+        in the table's ref map. Tags are table-level and share one
+        namespace with branches, so a name already used by either is
+        rejected, and every handle sees the tag. A tagged version — and
+        every data file it references — survives ``expire_snapshots``
+        until the tag is dropped (or, with ``max_age_ms``, Iceberg's
+        max-ref-age-ms, until the pinned snapshot is older than that),
+        so "the exact table state training run X read" stays
         reproducible (``read(version=tags()[name])``) while routine
-        retention keeps trimming untagged history. Tag commits go
-        through the same claim-slot arbitration as data commits, so
-        racing taggers/writers serialize cleanly."""
+        retention keeps trimming untagged history. ``rollback`` and
+        ``fast_forward`` keep every tag. Tag commits go through the
+        same claim-slot arbitration as data commits, so racing
+        taggers/writers serialize cleanly."""
+        self._check_new_ref(name)
         snap = self.current()
-        if name in snap.refs:
-            raise LoadError(f"tag {name!r} already exists")
         v = snap.version if version is None else int(version)
         try:
             self.snapshot(v)  # must name a live, readable version
         except FileNotFoundError:
             raise LoadError(f"tag target version {v} does not exist")
-        new_snap = snap.child(refs={**snap.refs, name: v}, operation="tag")
-        # Iceberg max-ref-age-ms for tags: expire_snapshots drops the
-        # tag once the pinned snapshot is older than this
-        self._commit(
-            new_snap,
-            ref_retention_edits=(
-                {f"tag:{name}": int(max_age_ms)} if max_age_ms is not None else None
-            ),
-        )
+        new_snap = snap.child(operation="tag")
+        self._commit(new_snap, ref_edits={name: _ref("tag", v, max_age_ms)})
         return {"version": new_snap.version, "tag": name, "at": v}
 
     def drop_tag(self, name: str) -> dict[str, Any]:
         """Remove a tag (Iceberg DROP TAG) — the pinned version rejoins
         the normal retention pool at the next ``expire_snapshots``."""
-        snap = self.current()
-        if name not in snap.refs:
+        tags = self.tags()
+        if name not in tags:
             raise LoadError(f"no such tag {name!r}")
-        refs = dict(snap.refs)
-        at = refs.pop(name)
-        new_snap = snap.child(refs=refs, operation="tag")
-        self._commit(new_snap, ref_retention_edits={f"tag:{name}": None})
-        return {"version": new_snap.version, "dropped": name, "was_at": at}
+        new_snap = self.current().child(operation="tag")
+        self._commit(new_snap, ref_edits={name: None})
+        return {"version": new_snap.version, "dropped": name, "was_at": tags[name]}
 
     def tags(self) -> dict[str, int]:
-        """Current tag name -> pinned version."""
-        return dict(self.current().refs)
+        """Current tag name -> pinned version (table-level)."""
+        return {
+            n: r["version"]
+            for n, r in self._head_snapshot().refs.items()
+            if r["kind"] == "tag"
+        }
+
+    def _check_new_ref(self, name: str) -> None:
+        """Reject a ref name already taken by a tag or a branch (one
+        namespace, as Iceberg's refs)."""
+        r = self._head_snapshot().refs.get(name)
+        if r is not None:
+            raise LoadError(f"{r['kind']} {name!r} already exists")
 
     # --------------------------------------------- branches (WAP) --
     def create_branch(
@@ -2918,19 +2920,16 @@ class LakeTable:
         capability, zero main-branch visibility — audit it, then
         ``fast_forward`` to publish atomically or ``drop_branch`` to
         discard. A branch tip and the files it references survive
-        expire_snapshots like any ref. Metadata-only commit; O(1).
+        expire_snapshots like any ref. The name must not be taken by a
+        tag or a branch. Metadata-only commit; O(1).
 
         ``max_age_ms`` (Iceberg's ``RETAIN``/``max-ref-age-ms`` ref
         property): once the branch TIP snapshot is older than this,
         ``expire_snapshots`` drops the ref automatically and its
         snapshots rejoin the retention pool — so a forgotten audit
         branch cannot pin table history forever. Default None = pinned
-        until dropped explicitly (previous behavior)."""
-        if name == "main":
-            raise LoadError("branch 'main' always exists")
-        tips = self.branches()
-        if name in tips:
-            raise LoadError(f"branch {name!r} already exists")
+        until dropped explicitly."""
+        self._check_new_ref(name)
         snap = self.current()
         if version is None:
             # fork at the creation commit itself: the fork point must BE
@@ -2945,16 +2944,8 @@ class LakeTable:
             except FileNotFoundError:
                 raise LoadError(f"branch target version {v} does not exist")
         child = snap.child(operation="branch")
-        self._commit(
-            child,
-            ref_retention_edits=(
-                {f"branch:{name}": int(max_age_ms)}
-                if max_age_ms is not None
-                else None
-            ),
-            branch_edits={name: v},
-        )
-        return {"branch": name, "at": child.branches[name]}
+        self._commit(child, ref_edits={name: _ref("branch", v, max_age_ms)})
+        return {"branch": name, "at": child.refs[name]["version"]}
 
     def drop_branch(self, name: str) -> dict[str, Any]:
         """Remove a branch ref (Iceberg DROP BRANCH) — its unpublished
@@ -2968,8 +2959,7 @@ class LakeTable:
         if name == self._branch:
             raise LoadError("cannot drop the branch this handle is on")
         self._commit(
-            self.current().child(operation="branch"),
-            branch_edits={name: None},
+            self.current().child(operation="branch"), ref_edits={name: None}
         )
         return {"dropped": name, "was_at": tips[name]}
 
@@ -2982,23 +2972,32 @@ class LakeTable:
         the audited state in one swing and CDC replay bookkeeping moves
         with it.
 
-        Fast-forward-only, verified in O(1) metadata reads with no
-        manifest walking (robust to expired intermediates): the target
-        tip must be the branch's fork point (first publish), or itself
-        a previous fast-forward from the same branch (``ff_source``
-        stamp — repeated WAP cycles off one long-lived branch). If the
-        target branch advanced independently since the fork, the
-        publish is rejected — rebase by recreating the branch."""
+        Fast-forward-only, verified from version files alone with no
+        manifest walking: the target tip must be the branch's fork point
+        (first publish), or itself a previous fast-forward from the same
+        life of the branch (``ff_source`` stamp — repeated WAP cycles
+        off one long-lived branch). Ref-only commits (tag, branch,
+        expire-refs) leave the target's content as it was, so the check
+        also accepts any commit reached by walking ``parent_version``
+        down through them from the target tip; a version expired on
+        that walk ends it. If the target branch's content advanced
+        independently since the fork, the publish is rejected — rebase
+        by recreating the branch. Refs are table-level, so the publish
+        keeps every tag and branch."""
         cur = self.current()  # target (this handle's) branch tip
-        tips = self.branches()
+        hs = self._head_snapshot()
+        tips = _tips(hs)
         if branch not in tips:
             raise LoadError(f"no such branch {branch!r}")
         bt = int(tips[branch])
-        if bt == cur.version or (
-            bool(cur.ff_source)
-            and cur.ff_source[0] == branch
-            and int(cur.ff_source[1]) == bt
-        ):  # tip already published (possibly by a previous fast_forward)
+        walk = [cur]
+        while walk[-1].operation in ("tag", "branch", "expire-refs"):
+            try:
+                walk.append(self.snapshot(walk[-1].parent_version))
+            except FileNotFoundError:
+                break
+        if any(c.version == bt or c.ff_source[:2] == [branch, bt] for c in walk):
+            # tip already published (possibly by a previous fast_forward)
             return {"version": cur.version, "noop": True}
         bs = self.snapshot(bt)
         if bs.branch != branch:
@@ -3009,19 +3008,20 @@ class LakeTable:
         # incarnation guard on the repeated-WAP path: the recorded
         # publish must come from the SAME life of the branch name — a
         # ref dropped and recreated (possibly behind this tip, from
-        # another branch handle) gets a fresh epoch and must re-qualify
-        # via the fork-point check instead of riding the stale stamp, as
-        # must a stamp that records no epoch. ``main`` has no epoch
-        # entry (-1), so a stamp published from it never goes stale.
-        epoch_now = self._head_snapshot().branch_epochs.get(branch, -1)
-        ff_same_life = (
-            len(cur.ff_source) == 3
-            and cur.ff_source[0] == branch
-            and int(cur.ff_source[1]) <= bt
-            and (epoch_now < 0 or int(cur.ff_source[2]) == epoch_now)
-        )
-        ancestor = bs.fork_version == cur.version or ff_same_life
-        if not ancestor:
+        # another branch handle) gets a fresh incarnation and must
+        # re-qualify via the fork-point check instead of riding the
+        # stale stamp, as must a stamp that records no incarnation
+        life = hs.refs[branch]["incarnation"]
+        if not any(
+            bs.fork_version == c.version
+            or (
+                len(c.ff_source) == 3
+                and c.ff_source[0] == branch
+                and int(c.ff_source[1]) <= bt
+                and int(c.ff_source[2]) == life
+            )
+            for c in walk
+        ):
             raise LoadError(
                 f"not fast-forwardable: {cur.branch!r} advanced since "
                 f"{branch!r} forked (tip {cur.version}, fork "
@@ -3032,7 +3032,7 @@ class LakeTable:
             branch=cur.branch,
             parent_version=cur.version,
             fork_version=cur.fork_version,
-            ff_source=[branch, bt, epoch_now],
+            ff_source=[branch, bt, life],
             operation="fast-forward",
         )
         self._commit(new_snap)
@@ -3060,7 +3060,8 @@ class LakeTable:
         a fixed pipeline) re-applies them cleanly instead of being
         silently skipped. Undone data files stay on disk referenced by
         their version manifests; ``expire_snapshots`` + ``vacuum``
-        reclaim them on the normal schedule.
+        reclaim them on the normal schedule. Refs are table-level, so
+        every tag and branch outlives the rollback.
 
         The target must be an ANCESTOR of this handle's branch tip
         (Iceberg rollback_to_snapshot rejects non-ancestors). Version
@@ -3795,13 +3796,16 @@ class LakeTable:
         available for the kept window; versions pinned by a REF — a tag
         (``create_tag``) or any branch's tip (``create_branch``) — are
         kept, with their files, regardless of age, exactly like Iceberg
-        refs gate snapshot expiry. Tags are per-branch metadata, so the
-        union of every tip's refs is protected.
+        refs gate snapshot expiry. Every ref lives in HEAD's one
+        table-level ``refs`` map, so no version file is read to find
+        them.
 
         Refs created with ``max_age_ms`` (Iceberg's max-ref-age-ms) are
-        DROPPED here first once the snapshot they point to is older
-        than their limit — aged branches/tags stop pinning history, the
-        un-aged ones keep the full contract above.
+        DROPPED here first, in one commit, once the snapshot they point
+        to is older than their limit — aged branches and tags, wherever
+        they were created, stop pinning history; the un-aged ones keep
+        the full contract above. ``main`` and this handle's branch are
+        never dropped.
 
         The dead-file set is a set difference on the driver: entries of
         the manifests only expired snapshots reference, minus every
@@ -3813,46 +3817,24 @@ class LakeTable:
         Imported (``add_files``) entries are never deleted.
         ``distributed`` is accepted and ignored."""
         now_ms = int(time.time() * 1000)
-        rr = self._head_snapshot().ref_retention
-        if rr:
-            for b, tip in list(self.branches().items()):
-                ms = rr.get(f"branch:{b}")
-                if ms is None or b in ("main", self._branch):
-                    continue
-                try:
-                    committed = self.snapshot(int(tip)).committed_at_ms
-                except FileNotFoundError:
-                    continue
-                if now_ms - committed > ms:
-                    self._commit(
-                        self.current().child(operation="expire-refs"),
-                        branch_edits={b: None},
-                    )
-            snap = self.current()
-            aged_tags = []
-            for tname, pinned in snap.refs.items():
-                ms = rr.get(f"tag:{tname}")
-                if ms is None:
-                    continue
-                try:
-                    committed = self.snapshot(int(pinned)).committed_at_ms
-                except FileNotFoundError:
-                    continue
-                if now_ms - committed > ms:
-                    aged_tags.append(tname)
-            if aged_tags:
-                refs = {
-                    k: v for k, v in snap.refs.items() if k not in aged_tags
-                }
-                self._commit(
-                    snap.child(refs=refs, operation="expire-refs"),
-                    ref_retention_edits={f"tag:{t}": None for t in aged_tags},
-                )
-        tips = _tips(self._head_snapshot())
+        aged: dict[str, None] = {}
+        for name, r in self._head_snapshot().refs.items():
+            if r["max_age_ms"] is None or name in ("main", self._branch):
+                continue
+            try:
+                committed = self.snapshot(int(r["version"])).committed_at_ms
+            except FileNotFoundError:
+                continue
+            if now_ms - committed > r["max_age_ms"]:
+                aged[name] = None
+        if aged:
+            self._commit(
+                self.current().child(operation="expire-refs"), ref_edits=aged
+            )
+        hs = self._head_snapshot()
         versions = self._versions()
-        keep = set(versions[-keep_last:]) | {int(v) for v in tips.values()}
-        for tv in set(tips.values()):
-            keep |= {int(v) for v in self.snapshot(int(tv)).refs.values()}
+        keep = set(versions[-keep_last:])
+        keep |= {int(r["version"]) for r in hs.refs.values()}
         live_meta = self._meta_refs(keep)
         dead_meta = (
             self._meta_refs(v for v in versions if v not in keep) - live_meta

@@ -204,7 +204,7 @@ def main(argv=None) -> int:
             "rows": sum(f.get("rows", 0) for f in snap.files),
             "watermark_lsn": snap.watermark_lsn,
             "props": snap.props,
-            "tags": snap.refs,
+            "tags": t.tags(),
             "branch": snap.branch,
             "branches": t.branches(),
             "stats": snap.stats,

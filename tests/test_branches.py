@@ -449,7 +449,4 @@ def test_aged_branch_and_tag_expire_main_contract_holds(spark, tmp_path):
     assert t.read().count() >= 6
     assert t.tags()["forever"] in survivors
     # retention metadata for dropped refs is purged
-    assert not any(
-        k.endswith(":audit") or k.endswith(":ephemeral")
-        for k in t.current().ref_retention
-    )
+    assert not {"audit", "ephemeral"} & t.current().refs.keys()

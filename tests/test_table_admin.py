@@ -176,6 +176,10 @@ def test_admin_branch_wap_lifecycle(spark, tmp_path, table, capsys):
     assert _run(capsys, p, "describe")["files"] == files_main
     staged = _run(capsys, p, "--branch", "stage", "describe")
     assert staged["branch"] == "stage"
+    # tags are table-level: a tag taken on main shows from the branch
+    _run(capsys, p, "create-tag", "--name", "audit-cut")
+    staged = _run(capsys, p, "--branch", "stage", "describe")
+    assert "audit-cut" in staged["tags"]
     # publish, then drop the branch
     out = _run(capsys, p, "fast-forward", "--from", "stage")
     assert out["published"] == "stage"
@@ -185,7 +189,7 @@ def test_admin_branch_wap_lifecycle(spark, tmp_path, table, capsys):
     assert "stage" not in table.branches()
     # retention flag plumbs through to the ref property (Iceberg RETAIN)
     _run(capsys, p, "create-branch", "--name", "aged", "--max-age-ms", "1")
-    assert table.current().ref_retention.get("branch:aged") == 1
+    assert table.current().refs["aged"]["max_age_ms"] == 1
     _run(capsys, p, "drop-branch", "--name", "aged")
 
 
